@@ -20,6 +20,7 @@ import os
 import sys
 import time
 
+from getdbt_spark.queries import run_query
 from getdbt_spark.session import get_spark
 
 # Headline set: the heaviest / most representative shapes from
@@ -203,6 +204,18 @@ def gate_verdicts(
     return out
 
 
+def time_once(spark, sf_dir: str, qid: str) -> float:
+    """One timed rep: build + execute through the noop sink, then
+    ``clearCache`` (untimed) so no rep reads another's cache — the
+    single measurement step of bench, tools/time_queries.py and the
+    bench-regression tests (methodology notes at the loop in main)."""
+    t0 = time.perf_counter()
+    run_query(spark, sf_dir, qid).write.format("noop").mode("overwrite").save()
+    took = time.perf_counter() - t0
+    spark.catalog.clearCache()
+    return took
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
@@ -219,23 +232,6 @@ def main() -> None:
     _warmup(spark, sf_dir)
     spark_canary = _spark_canary(spark)
 
-    from getdbt_spark.queries.model_queries import _MODEL_QUERIES, _run_model
-
-    def _time_once(name: str) -> float:
-        """One timed build+execute rep through the noop sink (the
-        methodology note on the min-of-two loop below applies)."""
-        t0 = time.perf_counter()
-        if name in MODEL_HEADLINE:
-            df = _run_model(
-                spark, sf_dir, _MODEL_QUERIES[name][0], reuse="checkpoint"
-            )
-        else:
-            df = QUERIES[name](spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        dt = time.perf_counter() - t0
-        spark.catalog.clearCache()
-        return dt
-
     timings: dict[str, float] = {}
     canaries: dict[str, float] = {}
     for name in names:
@@ -251,11 +247,10 @@ def main() -> None:
         # components rounds via eager localCheckpoint) — timing
         # only the final action would under-report them.
         # Model-DAG entries run the PRODUCTION materialization
-        # mode (reuse="checkpoint": per-model lineage cut,
-        # dbt's table-per-model semantics).  The driver-
-        # correctness path keeps lazy persist; benching it
-        # would mostly measure Catalyst re-analyzing the
-        # 22-model inlined plan tree.
+        # mode (run_query: Runner.run's checkpoint default, a
+        # per-model lineage cut — dbt's table-per-model semantics).
+        # The oracle-check pure build (reuse=None) would mostly measure
+        # Catalyst re-analyzing the 22-model inlined plan tree.
         # Queries that persist() multi-consumer intermediates
         # (minhash shingles, model-DAG stages) would otherwise leak
         # cache across timings: a later query whose plan contains
@@ -269,7 +264,7 @@ def main() -> None:
         # so some residual block churn between timings is expected.)
         best = float("inf")
         for _rep in range(2):
-            best = min(best, _time_once(name))
+            best = min(best, time_once(spark, sf_dir, name))
         timings[name] = round(best, 3)
         # ~40 ms host-speed sample adjacent to THIS query's timing:
         # a load spike shows up as a correlated canary bump, a plan
@@ -337,7 +332,9 @@ def main() -> None:
                 if c > 2.5 * best_canary:
                     time.sleep(8)  # mid-collapse: reps would time the host
                     continue
-                timings[name] = round(min(timings[name], _time_once(name)), 3)
+                timings[name] = round(
+                    min(timings[name], time_once(spark, sf_dir, name)), 3
+                )
                 verdicts = gate_verdicts(timings, base_queries, ratio)
                 reps += 1
                 # per-query extra-rep record (r13 ADVICE): lets a reader

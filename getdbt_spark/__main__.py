@@ -121,16 +121,17 @@ def cmd_ls(args, out) -> int:
 
 
 def cmd_docs(args, out) -> int:
-    from . import api, models as M
+    from . import models as M
     from .docs import write_docs
     from .fixtures import sources_map
+    from .io import corpus_run_date
     from .runner import Runner
 
     spark = _spark(args.cpus)
     M.load_all()
     runner = Runner(
         spark, sources_map(spark, args.sf_dir),
-        api._anchor(spark, args.sf_dir),
+        corpus_run_date(spark, args.sf_dir),
     )
     manifest = write_docs(runner, args.target)
     out.write(
@@ -158,16 +159,17 @@ def cmd_run(args, out) -> int:
 
 
 def cmd_test(args, out) -> int:
-    from . import api, models as M
+    from . import models as M
     from .dq import run_dq
     from .fixtures import sources_map
+    from .io import corpus_run_date
     from .runner import Runner
 
     spark = _spark(args.cpus)
     M.load_all()
     runner = Runner(
         spark, sources_map(spark, args.sf_dir),
-        api._anchor(spark, args.sf_dir),
+        corpus_run_date(spark, args.sf_dir),
     )
     rows = run_dq(runner, select=args.select).collect()
     n_bad = 0
@@ -198,13 +200,15 @@ def cmd_snapshot(args, out) -> int:
     import os
 
     from . import api
+    from .io import corpus_run_date
+    from .runner import swap_in
     from .snapshots import snapshot_apply, snapshot_init
 
     spark = _spark(args.cpus)
     result = api.run(spark, args.sf_dir, select=[args.source])
     source = result[args.source]
     as_of = dt.datetime.combine(
-        api._anchor(spark, args.sf_dir), dt.time(0, 0)
+        corpus_run_date(spark, args.sf_dir), dt.time(0, 0)
     )
     path = os.path.join(args.warehouse, f"snap_{args.source}")
     if os.path.exists(path):
@@ -216,16 +220,8 @@ def cmd_snapshot(args, out) -> int:
         snap = snapshot_init(source, as_of)
     staging = path + ".staging"
     snap.write.mode("overwrite").parquet(staging)
-    retired = path + ".retired"
-    import shutil
-
-    shutil.rmtree(retired, ignore_errors=True)
-    if os.path.exists(path):
-        os.rename(path, retired)
-    os.rename(staging, path)
-    shutil.rmtree(retired, ignore_errors=True)
-    out.write(f"snapshot {args.source} -> {path} "
-              f"rows={spark.read.parquet(path).count()}\n")
+    live = swap_in(spark, staging, path, snap)
+    out.write(f"snapshot {args.source} -> {path} rows={live.count()}\n")
     return 0
 
 
@@ -274,12 +270,13 @@ def cmd_freshness(args, out) -> int:
     ``test``)."""
     from pyspark.sql import functions as F
 
-    from .io import load_table
+    from .io import corpus_run_date, load_table
 
     spark = _spark(args.cpus)
     e = load_table(spark, args.sf_dir, "events")
-    anchor = e.agg(F.max(F.to_date("ts"))).collect()[0][0]
-    lag = F.datediff(F.lit(anchor), F.col("max_loaded_date"))
+    lag = F.datediff(
+        F.lit(corpus_run_date(spark, args.sf_dir)), F.col("max_loaded_date")
+    )
     rows = (
         e.groupBy("event_type")
         .agg(F.max(F.to_date("ts")).alias("max_loaded_date"))

@@ -19,23 +19,11 @@ import datetime as dt
 from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from . import models as M
 from .fixtures import sources_map
-from .io import load_table
+from .io import corpus_run_date
 from .runner import Runner
-
-
-def _anchor(spark: SparkSession, sf_dir: str) -> dt.date:
-    """Frozen run_date: max event date, collected once (two-phase
-    literal anchor — never ``current_date()``; SURVEY §7)."""
-    d = (
-        load_table(spark, sf_dir, "events")
-        .agg(F.max(F.to_date("ts")))
-        .collect()[0][0]
-    )
-    return d if d is not None else dt.date(2024, 1, 30)
 
 
 def run(
@@ -51,11 +39,13 @@ def run(
     runner = Runner(
         spark,
         sources_map(spark, sf_dir),
-        run_date or _anchor(spark, sf_dir),
+        run_date or corpus_run_date(spark, sf_dir),
         warehouse=warehouse,
-        register_views=True,
     )
-    return runner.run(select)
+    out = runner.run(select)
+    for name, df in out.items():
+        df.createOrReplaceTempView(name)
+    return out
 
 
 def run_incremental(

@@ -22,8 +22,8 @@ Failure counting follows dbt's built-in generic tests exactly:
 Scale shape: each test is a single aggregation over one model — a
 map-side-combinable count, no windows, no cartesian anything.  The
 per-test one-row aggregates are unioned into one plan so a single
-action evaluates the whole suite; with ``Runner.run(reuse="persist")``
-a model shared by several tests (or by the relationships parent) is
+action evaluates the whole suite; in checkpoint mode (the default) a
+model shared by several tests (or by the relationships parent) is
 computed once.  At 100 TB each test is one scan+agg over the tested
 table — exactly what ``dbt test`` compiles to in a warehouse.
 """
@@ -90,7 +90,7 @@ def declared_tests(
 def run_dq(
     runner: Runner,
     select: list[str] | None = None,
-    reuse: str | None = "persist",
+    reuse: str | None = "checkpoint",
 ) -> DataFrame:
     """Evaluate all declared tests on (the closure of) ``select``.
 
@@ -111,13 +111,13 @@ def run_dq(
         | {t.to for _, t in pairs if t.to is not None}
     )
     out = runner.run(needed, reuse=reuse)
-    if reuse == "persist":
-        # Runner.run only persists closure models NOT selected; every
-        # ``needed`` model IS selected here, yet each is referenced
-        # once per test branch of the union below (plus once per
-        # relationships parent use).  Persist the multi-branch ones so
-        # the single action computes each once; tracked on the runner
-        # so release() frees them.
+    if reuse == "checkpoint":
+        # Runner.run only checkpoints closure models NOT selected;
+        # every ``needed`` model IS selected here, yet each is
+        # referenced once per test branch of the union below (plus
+        # once per relationships parent use).  Cut the multi-branch
+        # ones so the single action reads each from blocks;
+        # ContextCleaner frees the blocks with the frames.
         from collections import Counter
 
         uses = Counter(name for name, _ in pairs)
@@ -126,7 +126,7 @@ def run_dq(
                 uses[t.to] += 1
         for name, n_uses in uses.items():
             if n_uses > 1:
-                out[name] = runner.track_persisted(out[name].persist())
+                out[name] = out[name].localCheckpoint()
     rows = [
         _failures(out[name], t, out).select(
             F.lit(name).alias("model_name"),

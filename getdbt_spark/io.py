@@ -12,6 +12,8 @@ date-partitioned parquet; the API (name → DataFrame) is unchanged.
 
 from __future__ import annotations
 
+import datetime as dt
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -93,6 +95,24 @@ def run_date_anchor(events: DataFrame, default, col: str = "ts"):
     return scalar_anchor(
         events.filter(credible_clock(col)), F.max(F.to_date(col)), default
     )
+
+
+# (applicationId, sf_dir) → run date.  The anchor is a pure function
+# of the corpus, so a 100+-query sweep collects it once, not once per
+# model entry; a new application may see a regenerated corpus.
+_RUN_DATES: dict[tuple[str, str], dt.date] = {}
+
+
+def corpus_run_date(spark: SparkSession, sf_dir: str) -> dt.date:
+    """The corpus's frozen run date — ``run_date_anchor`` over its
+    events, memoized per application.  The one anchor of the CLI,
+    ``api`` and the ``model_*`` registry entries."""
+    key = (spark.sparkContext.applicationId, sf_dir)
+    if key not in _RUN_DATES:
+        _RUN_DATES[key] = run_date_anchor(
+            load_table(spark, sf_dir, "events"), dt.date(2024, 1, 30)
+        )
+    return _RUN_DATES[key]
 
 
 def scalar_anchor(df: DataFrame, expr: F.Column, default):

@@ -41,6 +41,17 @@ def query(qid: str, oracle: str | None = None):
     return deco
 
 
+def run_query(spark: SparkSession, sf_dir: str, qid: str) -> DataFrame:
+    """Build query ``qid`` the way production runs it — the one
+    dispatch point of bench, tools and tests.  A ``model_*`` id
+    materializes its model closure in ``Runner.run``'s checkpoint
+    mode (the registered entry is the pure build, for the oracle and
+    plan audits); every other id is its registered builder."""
+    if qid.startswith("model_"):
+        return QUERIES[qid](spark, sf_dir, reuse="checkpoint")
+    return QUERIES[qid](spark, sf_dir)
+
+
 def load_all() -> None:
     """Import every query module (side-effect: registration)."""
     from . import relational  # noqa: F401

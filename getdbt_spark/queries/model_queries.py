@@ -25,9 +25,8 @@ from pyspark.sql import functions as F
 from .. import fixtures as FX
 from .. import functions as E
 from ..functions import safe_offset
-from ..io import credible_clock, run_date_anchor
+from ..io import corpus_run_date, credible_clock, run_date_anchor
 from ..io import load_table as _lt
-from ..io import scalar_anchor
 from . import query
 
 
@@ -35,51 +34,27 @@ def _t(spark, sf_dir, name):
     return _lt(spark, sf_dir, name)
 
 
-_ANCHOR_CACHE: dict[tuple[str, str], dt.date | None] = {}
-
-
 def _run_model(spark, sf_dir: str, name: str, reuse: str | None = None):
-    """Build one ported model over the fixture sources (pure build mode
-    — no warehouse writes; the driver collects the returned DataFrame).
+    """Build one ported model over the fixture sources, anchored on the
+    corpus run date (``io.corpus_run_date``: a tiny scalar action whose
+    result is injected as a LITERAL so the incremental window predicate
+    reaches the parquet scan as a prunable filter; never
+    current_date()).  No warehouse: incremental models stay unwritten.
 
-    run_date is anchored two-phase to max(event date) — a tiny scalar
-    action whose result is injected as a LITERAL so the incremental
-    window predicate reaches the parquet scan as a prunable filter
-    (same pattern as filter_partition_window; never current_date()).
-
-    Default ``reuse=None`` (raw lazy plans): driver-contract entries
-    run 100+ to a session with no post-action hook, so persisted
-    intermediates would leak for the session lifetime and CacheManager
-    subtree matching could serve later queries from leftover cache.
-    Recomputing shared subtrees within the one driver action is cheap
-    at oracle scale; production materialization goes through
-    ``api.run``/``Runner`` where ``persist``/``checkpoint`` have an
-    owner that can release them (bench uses ``checkpoint``)."""
+    ``reuse`` is ``Runner.run``'s.  The registered entry keeps the
+    pure build (``None``): the oracle check collects the full-lineage plan
+    and the plan guards audit it.  ``queries.run_query`` passes
+    ``"checkpoint"``, the production mode bench and tools time."""
     from .. import models as M
     from ..fixtures import sources_map
-    from ..io import load_table
     from ..runner import Runner
 
     M.load_all()
-    # The anchor is a pure function of the corpus — memoize the collect
-    # so a 100+-query sweep doesn't re-run the same max(ts) action for
-    # every model entry (keyed by applicationId: a new session means a
-    # new JVM and possibly a regenerated corpus).
-    akey = (spark.sparkContext.applicationId, sf_dir)
-    if akey not in _ANCHOR_CACHE:  # a None anchor (empty events) caches too
-        _ANCHOR_CACHE[akey] = (
-            load_table(spark, sf_dir, "events")
-            # credible clocks only: one poisoned 9999 timestamp would
-            # otherwise become the run date and blow the weekly spine
-            # up ~500× (io.run_date_anchor; oracle_ctes mirrors it)
-            .filter(credible_clock("ts"))
-            .agg(F.max(F.to_date("ts")))
-            .collect()[0][0]
-        )
-    anchor = _ANCHOR_CACHE[akey]
-    run_date = anchor if anchor is not None else dt.date(2024, 1, 30)
-    runner = Runner(spark, sources_map(spark, sf_dir), run_date)
+    runner = Runner(
+        spark, sources_map(spark, sf_dir), corpus_run_date(spark, sf_dir)
+    )
     return runner.run([name], reuse=reuse)[name]
+
 
 # ---------------------------------------------------------------------------
 # Fixture parity rows
@@ -222,8 +197,8 @@ _MODEL_QUERIES = {
 
 def _register_model_query(qid: str, model_name: str, cte: str) -> None:
     @query(qid, oracle=oracle_for(cte))
-    def _mq(spark, sf_dir, _name=model_name):
-        return _run_model(spark, sf_dir, _name)
+    def _mq(spark, sf_dir, reuse=None, _name=model_name):
+        return _run_model(spark, sf_dir, _name, reuse)
 
     _mq.__name__ = qid
     _mq.__doc__ = (
@@ -359,13 +334,10 @@ def sink_incremental_insert_overwrite(spark, sf_dir):
 
     from .. import models as M
     from ..fixtures import sources_map
-    from ..io import load_table
     from ..runner import Runner
 
     M.load_all()
-    anchor = run_date_anchor(
-        load_table(spark, sf_dir, "events"), dt.date(2024, 1, 30)
-    )
+    anchor = corpus_run_date(spark, sf_dir)
     # Deterministic scratch path, wiped per invocation: mkdtemp would
     # orphan a full materialized model per driver round.
     wh = os.path.join(
@@ -673,10 +645,10 @@ def dq_schema_tests(spark, sf_dir):
     from ..runner import Runner
 
     _load_models()
-    anchor = run_date_anchor(_lt(spark, sf_dir, "events"), dt.date(2024, 1, 30))
-    runner = Runner(spark, sources_map(spark, sf_dir), anchor)
-    # reuse=None: driver entries have no post-action release hook
-    # (same rule as _run_model) — persisted test inputs would leak.
+    runner = Runner(
+        spark, sources_map(spark, sf_dir), corpus_run_date(spark, sf_dir)
+    )
+    # reuse=None: a registry entry returns one lazy plan, no jobs.
     return run_dq(runner, select=_DQ_TABLES, reuse=None)
 
 
@@ -780,11 +752,8 @@ def sink_incremental_replay(spark, sf_dir):
     import tempfile
 
     from ..api import run_incremental
-    from ..io import load_table
 
-    anchor = run_date_anchor(
-        load_table(spark, sf_dir, "events"), dt.date(2024, 1, 30)
-    )
+    anchor = corpus_run_date(spark, sf_dir)
     wh = os.path.join(
         tempfile.gettempdir(),
         f"getdbt_spark_whr_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",

@@ -30,12 +30,14 @@ from __future__ import annotations
 
 import datetime as dt
 import os
+import shutil
 import urllib.parse
 from collections.abc import Iterable, Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .io import read_parquet_like
 from .registry import MODELS, Model, ModelContext, topo_sort
 
 
@@ -60,15 +62,12 @@ class Runner:
         run_date: dt.date,
         warehouse: str | None = None,
         registry: dict[str, Model] | None = None,
-        register_views: bool = False,
     ):
         self.spark = spark
         self.sources = dict(sources)
         self.run_date = run_date
         self.warehouse = warehouse
         self.registry = MODELS if registry is None else registry
-        self.register_views = register_views
-        self._persisted: list[DataFrame] = []
 
     # -- build ---------------------------------------------------------
 
@@ -87,7 +86,7 @@ class Runner:
     def run(
         self,
         select: Iterable[str] | None = None,
-        reuse: str | None = "persist",
+        reuse: str | None = "checkpoint",
     ) -> dict[str, DataFrame]:
         """Materialize (the ancestor-closure of) ``select`` in DAG order.
 
@@ -102,62 +101,39 @@ class Runner:
         references the vod mart twice and the tv mart three times; the
         vod mart itself reads the streams model three times):
 
-        - ``"persist"`` (default) — mark intermediates MEMORY_AND_DISK;
-          one downstream action computes each shared stage once and
-          every other consumer reads the cache.  Lazy: pure build mode
-          still never triggers a job.  ~1.6× on the full-dashboard
-          build at sf0.1.
-        - ``"checkpoint"`` — eager ``localCheckpoint``: also CUTS
-          LINEAGE, so Catalyst stops re-analyzing the huge inlined
-          upstream plans (analysis time dominates small-data DAG runs).
-          Triggers a job per model — only for interactive/production
-          runs, never pure build mode.  Materialization is
-          DEPENDENCY-DRIVEN (one future per model, blocking only on
-          its own refs — see ``_run_pipelined``): the
-          streams→vod→dashboard critical chain advances the moment
-          each link's upstreams finish instead of waiting for a level
-          barrier's stragglers — measured 8.6 s → 6.3 s on the
-          full-dashboard build at sf0.1.
-        - ``None`` — raw unexecuted DataFrames (plan-inspection mode).
+        - ``"checkpoint"`` (default) — eager ``localCheckpoint`` of
+          every intermediate: computes each shared subtree once AND
+          cuts lineage, so Catalyst stops re-analyzing the huge
+          inlined upstream plans (analysis time dominates small-data
+          DAG runs).  One job per intermediate; ContextCleaner frees
+          the blocks once the returned frames are garbage-collected,
+          so no caller-side cleanup exists.  Materialization is
+          dependency-driven (see ``_run_pipelined``).
+        - ``None`` — pure build: raw unexecuted DataFrames, no job
+          beyond a configured warehouse's incremental writes (plan
+          inspection, backfill chunks, and the registry's ``model_*``
+          entries, whose plans must show the full lineage).  Models are
+          built one at a time in topo order, so the build is sequential
+          and its Py4J call count deterministic.
 
         SOURCE-LEVEL models (no refs — the ``select *`` passthrough
-        views over one parquet table) are never materialized in either
-        mode: caching or checkpointing a bare scan materializes every
-        column of every row while the read-back loses the scan's
-        partition pruning and predicate pushdown — a consumer
-        re-reading pruned parquet is cheaper than reading the full
-        materialized copy at ANY scale (dbt inlines such views for the
-        same reason).  They stay lazy and each consumer's filters
-        reach the parquet scan.
+        views over one parquet table) are never checkpointed:
+        materializing a bare scan copies every column of every row
+        while the read-back loses the scan's partition pruning and
+        predicate pushdown — a consumer re-reading pruned parquet is
+        cheaper than reading the full materialized copy at ANY scale
+        (dbt inlines such views for the same reason).  They stay lazy
+        and each consumer's filters reach the parquet scan.
         """
-        if reuse not in (None, "persist", "checkpoint"):
+        if reuse not in ("checkpoint", None):
             raise ValueError(f"unknown reuse mode {reuse!r}")
         sel = None if select is None else set(select)
-        models = topo_sort(select, self.registry)
-        if reuse == "checkpoint":
-            out = self._run_pipelined(models, sel)
-        else:
-            out = {}
-            for m in models:
-                df = self.build(m.name, out)
-                if m.config.materialized == "incremental" and self.warehouse:
-                    df = self._insert_overwrite(m, df)
-                elif (
-                    sel is not None
-                    and m.name not in sel
-                    and reuse == "persist"
-                    and m.refs  # source passthroughs stay lazy scans
-                ):
-                    df = df.persist()
-                    self._persisted.append(df)
-                out[m.name] = df
-        if self.register_views:
-            for name, df in out.items():
-                df.createOrReplaceTempView(name)
-        return out
+        return self._run_pipelined(
+            topo_sort(select, self.registry), sel, reuse == "checkpoint"
+        )
 
     def _run_pipelined(
-        self, models: list[Model], sel: set[str] | None
+        self, models: list[Model], sel: set[str] | None, cut: bool
     ) -> dict[str, DataFrame]:
         """Dependency-driven materialization: one future per model,
         blocking only on ITS refs — a model checkpoints the moment its
@@ -167,7 +143,9 @@ class Runner:
         starts the chain's next link immediately).  Threads only
         submit Spark jobs — the cluster schedules the actual work —
         and each model's write/checkpoint touches its own path, so
-        concurrency is safe.  Failures propagate on ``result()``."""
+        concurrency is safe.  Failures propagate on ``result()``.
+        Without ``cut`` (the pure build) there is nothing to overlap:
+        one worker takes the models in topo order."""
         from concurrent.futures import Future, ThreadPoolExecutor
 
         futures: dict[str, Future] = {}
@@ -177,33 +155,15 @@ class Runner:
             df = self.build(m.name, resolved)
             if m.config.materialized == "incremental" and self.warehouse:
                 return self._insert_overwrite(m, df)
-            if sel is not None and m.name not in sel and m.refs:
+            if cut and sel is not None and m.name not in sel and m.refs:
                 # Source passthroughs (no refs) stay lazy: see run().
                 return df.localCheckpoint(eager=True)
             return df
 
-        with ThreadPoolExecutor(8) as ex:
+        with ThreadPoolExecutor(8 if cut else 1) as ex:
             for m in models:  # topo order ⇒ ref futures already exist
                 futures[m.name] = ex.submit(_materialize, m)
             return {name: fut.result() for name, fut in futures.items()}
-
-    def track_persisted(self, df: DataFrame) -> DataFrame:
-        """Register an externally persisted DataFrame for ``release()``.
-
-        Public hook for collaborators (dq, ad-hoc callers) that persist
-        extra intermediates around a ``run()`` and want the runner's
-        leak guarantee to cover them — without reaching into
-        ``_persisted`` directly.
-        """
-        self._persisted.append(df)
-        return df
-
-    def release(self) -> None:
-        """Unpersist every intermediate cached by ``run(reuse='persist')``
-        or registered via ``track_persisted``."""
-        for df in self._persisted:
-            df.unpersist()
-        self._persisted.clear()
 
     # -- incremental ---------------------------------------------------
 
@@ -222,8 +182,6 @@ class Runner:
             .partitionBy(m.config.partition_by)
             .parquet(path)
         )
-        from .io import read_parquet_like
-
         # schema-supplied read-back: a zero-row first run (empty
         # partition window / new tenant) writes no data files
         return read_parquet_like(self.spark, path, df)
@@ -244,7 +202,7 @@ def merge_upsert(
 
     Plain parquet has no ACID MERGE, so this is merge-by-rewrite:
     ``existing LEFT ANTI JOIN new-keys`` ∪ ``new_df`` → staging dir →
-    two-rename directory swap.  The anti join is left to AQE's join
+    ``swap_in``.  The anti join is left to AQE's join
     selection: no explicit ``F.broadcast`` hint, because a hint is
     binding — AQE never demotes a hinted broadcast, so an unexpectedly
     large batch-key set would force a driver-side broadcast and OOM
@@ -253,23 +211,12 @@ def merge_upsert(
     in the normal case anyway; the no-hint form just makes the
     degenerate case degrade instead of die.
 
-    Crash safety: the swap is ``rename(path → .retired)`` then
-    ``rename(.staging → path)``; a crash between the two leaves no
-    live directory at ``path``.  Recovery is mechanical and the data
-    is never lost: if ``path`` is missing, rename ``.retired`` back
-    (or ``.staging`` forward — both are complete tables; ``.retired``
-    is pre-merge, ``.staging`` post-merge).  The ``.retired`` copy is
-    deleted only AFTER the new ``path`` has been re-opened and its
-    footer read, so the pre-merge table survives until the post-merge
-    one is verified readable.  On a real lakehouse this function is
-    the seam where Delta/Iceberg ``MERGE INTO`` plugs in, which also
-    makes the rewrite partition-scoped instead of full-table and the
-    swap a metadata commit.
+    Crash safety: see ``swap_in`` (``.retired`` is the pre-merge
+    table, ``.staging`` the post-merge one).  On a real lakehouse this
+    function is the seam where Delta/Iceberg ``MERGE INTO`` plugs in,
+    which also makes the rewrite partition-scoped instead of
+    full-table and the swap a metadata commit.
     """
-    import shutil
-
-    from .io import read_parquet_like
-
     # Schema-supplied reads throughout: a zero-row batch (empty
     # partition / new tenant) writes only _SUCCESS, and a schema-less
     # read-back would die with UNABLE_TO_INFER_SCHEMA; the table's
@@ -282,16 +229,36 @@ def merge_upsert(
     merged = existing.join(new_keys, keys, "left_anti").unionByName(new_df)
     staging = path.rstrip("/") + ".staging"
     merged.write.mode("overwrite").parquet(staging)
+    return swap_in(spark, staging, path, new_df)
+
+
+def swap_in(
+    spark: SparkSession, staging: str, path: str, like: DataFrame
+) -> DataFrame:
+    """Publish the complete table written at ``staging`` as ``path``
+    (created or replaced) and return its read-back.
+
+    The staged table is verified first: ``count()`` opens every data
+    file and reads its footer, so a torn or corrupt file raises here
+    while the live table is still untouched.  (A schema-supplied read
+    alone resolves nothing — ``.schema`` passes over garbage files.)
+    Then the two-rename swap: ``rename(path → .retired)``,
+    ``rename(staging → path)``, drop ``.retired``.  A crash between
+    the renames leaves no live directory at ``path``; recovery is
+    mechanical and loses nothing — rename ``.retired`` back or
+    ``.staging`` forward, both are complete tables.
+
+    ``like`` supplies the schema (io.read_parquet_like), so a
+    zero-row table that wrote no data files round-trips too.
+    """
+    read_parquet_like(spark, staging, like).count()
     retired = path.rstrip("/") + ".retired"
     shutil.rmtree(retired, ignore_errors=True)
-    os.rename(path, retired)
+    if os.path.exists(path):
+        os.rename(path, retired)
     os.rename(staging, path)
-    # Verify the swapped-in table is readable before dropping the
-    # pre-merge copy — the footer read raises if the write was torn.
-    out = read_parquet_like(spark, path, new_df)
-    out.schema  # forces footer resolution
     shutil.rmtree(retired, ignore_errors=True)
-    return out
+    return read_parquet_like(spark, path, like)
 
 
 def compact_partitions(
@@ -439,8 +406,7 @@ def write_audit_publish(
     all-green swap staging into place — consumers never observe a
     table that failed its checks (the lakehouse WAP pattern; on
     Iceberg/Delta the publish is a snapshot commit, on plain parquet
-    it is the same two-rename swap as merge_upsert, with the retired
-    copy kept until the published table proves readable).
+    it is ``swap_in``, the same verified swap as merge_upsert).
 
     ``audits``: ``{name: callable(DataFrame) -> bool}`` over the
     STAGED data — row thresholds, null guards, dq.run_dq wrappers.
@@ -448,10 +414,6 @@ def write_audit_publish(
     staging dir is kept for inspection at ``path + '.staging'`` and
     the live table (if any) is untouched.
     """
-    import shutil
-
-    from .io import read_parquet_like
-
     staging = path.rstrip("/") + ".staging"
     shutil.rmtree(staging, ignore_errors=True)
     df.write.mode("overwrite").parquet(staging)
@@ -459,12 +421,5 @@ def write_audit_publish(
     results = {name: bool(fn(staged)) for name, fn in audits.items()}
     if not all(results.values()):
         return False, results
-    retired = path.rstrip("/") + ".retired"
-    shutil.rmtree(retired, ignore_errors=True)
-    if os.path.exists(path):
-        os.rename(path, retired)
-    os.rename(staging, path)
-    out = read_parquet_like(spark, path, df)
-    out.schema  # footer read: publish verified before dropping retired
-    shutil.rmtree(retired, ignore_errors=True)
+    swap_in(spark, staging, path, df)
     return True, results

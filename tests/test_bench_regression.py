@@ -68,23 +68,11 @@ def test_no_per_query_regression_at_sf001(spark):
     canary_ratio = max(1.0, bench._host_canary(scale=0.25) / (base_canary * 0.25))
 
     bench._warmup(spark, SF_DIR)
-    from getdbt_spark.queries.model_queries import _MODEL_QUERIES, _run_model
-
-    def _run_once(name: str) -> float:
-        t0 = time.perf_counter()
-        if name in bench.MODEL_HEADLINE:
-            df = _run_model(
-                spark, SF_DIR, _MODEL_QUERIES[name][0], reuse="checkpoint"
-            )
-        else:
-            df = QUERIES[name](spark, SF_DIR)
-        df.write.format("noop").mode("overwrite").save()
-        dt = time.perf_counter() - t0
-        spark.catalog.clearCache()
-        return dt
 
     # First pass: single measurement per query (cheap).
-    took: dict[str, float] = {name: _run_once(name) for name in names}
+    took: dict[str, float] = {
+        name: bench.time_once(spark, SF_DIR, name) for name in names
+    }
 
     gated = [n for n in names if n in base]
 
@@ -137,7 +125,7 @@ def test_no_per_query_regression_at_sf001(spark):
             if c > 2.5 * best_canary:
                 time.sleep(8)  # mid-collapse: a rep would time the host
                 continue
-            took[name] = min(took[name], _run_once(name))
+            took[name] = min(took[name], bench.time_once(spark, SF_DIR, name))
             reps += 1
 
     base_total = sum(base[n] for n in gated)
@@ -187,7 +175,6 @@ def test_flagship_models_stay_sublinear_at_sf1(spark):
     import math
 
     import bench
-    from getdbt_spark.queries.model_queries import _MODEL_QUERIES, _run_model
 
     if not os.path.isdir(SF1_DIR):
         pytest.skip("sf1 corpus not generated (python tools/gen_sf1.py)")
@@ -203,15 +190,7 @@ def test_flagship_models_stay_sublinear_at_sf1(spark):
     bench._warmup(spark, SF01_DIR)
 
     def _time(model: str, sf_dir: str) -> float:
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            _run_model(
-                spark, sf_dir, _MODEL_QUERIES[model][0], reuse="checkpoint"
-            ).write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-            spark.catalog.clearCache()
-        return best
+        return min(bench.time_once(spark, sf_dir, model) for _ in range(2))
 
     failures = []
     for model, b in base["models"].items():

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import datetime as dt
 import os
+import sys
 
 import pytest
 from hypothesis import HealthCheck, given, settings
@@ -22,22 +23,24 @@ from pyspark.sql import functions as F
 import getdbt_spark.models as M
 from getdbt_spark.fixtures import sources_map
 from getdbt_spark.functions import timestamp_diff_seconds, union_by_position
-from getdbt_spark.io import load_table
+from getdbt_spark.io import corpus_run_date
+from getdbt_spark.registry import MODELS
 from getdbt_spark.runner import Runner
 
 SF = "/root/testdata/sf0.001"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+DASHBOARD = "integral_reporting_dashboard_channel_weekly"
 
 
 @pytest.fixture(scope="module")
 def dag(spark):
+    """The production run: checkpoint mode, Runner.run's default."""
     M.load_all()
-    anchor = (
-        load_table(spark, SF, "events")
-        .agg(F.max(F.to_date("ts")))
-        .collect()[0][0]
-    )
+    anchor = corpus_run_date(spark, SF)
     runner = Runner(spark, sources_map(spark, SF), anchor)
-    return runner.run(["integral_reporting_dashboard_channel_weekly"]), anchor
+    return runner.run([DASHBOARD]), anchor
 
 
 class TestGrain:
@@ -73,7 +76,7 @@ class TestGrain:
         out, _ = dag
         chans = {
             r[0]
-            for r in out["integral_reporting_dashboard_channel_weekly"]
+            for r in out[DASHBOARD]
             .select("reporting_channel")
             .distinct()
             .collect()
@@ -87,14 +90,34 @@ class TestGrain:
         }
 
 
+class TestMaterializationModes:
+    def test_checkpoint_run_hashes_equal_pure_build(self, spark, dag):
+        """Checkpointing the intermediates changes where each model is
+        computed, never what: every built model of the dashboard
+        closure hashes (tools/verify_local's canon) equal to
+        the pure build of the same closure.  Source passthroughs (no
+        refs) are the same lazy scans in both modes."""
+        sys.path.insert(0, os.path.join(REPO, "tools"))
+        from verify_local import frame_hash
+
+        out, anchor = dag
+        pure = Runner(spark, sources_map(spark, SF), anchor).run(
+            [DASHBOARD], reuse=None
+        )
+        assert list(pure) == list(out)
+        for name in [n for n in out if MODELS[n].refs]:
+            got, want = (frame_hash(d[name].toPandas()) for d in (out, pure))
+            assert got == want, name
+
+    def test_only_two_reuse_modes(self, spark):
+        with pytest.raises(ValueError, match="unknown reuse mode"):
+            Runner(spark, {}, dt.date(2024, 1, 30)).run([], reuse="persist")
+
+
 class TestIncrementalStreamsModel:
     def test_streams_writes_only_window_partitions(self, spark, tmp_path):
         M.load_all()
-        anchor = (
-            load_table(spark, SF, "events")
-            .agg(F.max(F.to_date("ts")))
-            .collect()[0][0]
-        )
+        anchor = corpus_run_date(spark, SF)
         runner = Runner(
             spark, sources_map(spark, SF), anchor, str(tmp_path / "wh")
         )

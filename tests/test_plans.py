@@ -64,19 +64,14 @@ def plans(spark):
     # node counts with test ORDER — clear them so the pins audit the
     # query's own shape regardless of which module ran first.
     spark.catalog.clearCache()
-    # Model queries are built with reuse=None: the production path
-    # persists intermediates (InMemoryTableScan truncates the visible
-    # plan), but the guards must audit the FULL lineage — a nested-loop
-    # join hidden behind a cache boundary is still a bug at scale.
-    from getdbt_spark.queries.model_queries import _MODEL_QUERIES, _run_model
-
+    # Registered model entries are the pure build (reuse=None): the
+    # production path checkpoints intermediates (a block scan hides
+    # their plans), but the guards must audit the FULL lineage — a
+    # nested-loop join hidden behind a materialization boundary is
+    # still a bug at scale.
     out = {}
     for q in GUARDED:
-        if q in _MODEL_QUERIES:
-            df = _run_model(spark, SF, _MODEL_QUERIES[q][0], reuse=None)
-        else:
-            df = QUERIES[q](spark, SF)
-        out[q] = df._jdf.queryExecution().explainString(
+        out[q] = QUERIES[q](spark, SF)._jdf.queryExecution().explainString(
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
                 "formatted"
             )
@@ -194,9 +189,10 @@ class TestApi:
         import datetime as dt
         import os
 
-        from getdbt_spark.api import _anchor, run_incremental
+        from getdbt_spark.api import run_incremental
+        from getdbt_spark.io import corpus_run_date
 
-        anchor = _anchor(spark, SF)
+        anchor = corpus_run_date(spark, SF)
         df = run_incremental(
             spark,
             SF,

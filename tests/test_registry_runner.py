@@ -430,3 +430,37 @@ class TestWriteAuditPublish:
         assert spark.read.parquet(path).count() == 10
         assert os.path.isdir(path + ".staging")
         assert spark.read.parquet(path + ".staging").count() == 3
+
+    def test_corrupt_staged_file_raises_before_the_swap(self, spark, tmp_path):
+        """A staged table whose data file is garbage (torn write, bad
+        disk) must fail the publish while the live table is still in
+        place: the swap reads every staged footer before any rename.
+        The corruption lands after the write, through an audit that
+        reads no data — the window a schema-only check does not see."""
+        import glob
+
+        from py4j.protocol import Py4JJavaError
+
+        from getdbt_spark.runner import write_audit_publish
+
+        path = str(tmp_path / "t")
+        v1 = spark.range(10).withColumnRenamed("id", "k")
+        assert write_audit_publish(spark, v1, path, {})[0]
+        live = sorted(glob.glob(os.path.join(path, "*")))
+        before = {f: open(f, "rb").read() for f in live}
+
+        def corrupt(staged):
+            part = sorted(glob.glob(path + ".staging/part-*.parquet"))[0]
+            with open(part, "wb") as fh:
+                fh.write(b"not a parquet file" * 64)
+            return True
+
+        v2 = spark.range(100, 103).withColumnRenamed("id", "k")
+        with pytest.raises(Py4JJavaError, match="FAILED_READ_FILE"):
+            write_audit_publish(spark, v2, path, {"corrupt": corrupt})
+        assert sorted(glob.glob(os.path.join(path, "*"))) == live
+        assert {f: open(f, "rb").read() for f in live} == before
+        assert not os.path.exists(path + ".retired")
+        assert sorted(r.k for r in spark.read.parquet(path).collect()) == list(
+            range(10)
+        )

@@ -34,21 +34,13 @@ def main() -> None:
     )
     os.makedirs(outdir, exist_ok=True)
 
-    from getdbt_spark.queries import QUERIES, load_all
+    from getdbt_spark.queries import load_all, run_query
     from getdbt_spark.session import get_spark
 
     load_all()
     spark = get_spark(app_name="explain_dump")
-    from getdbt_spark.queries.model_queries import _MODEL_QUERIES, _run_model
-
     for name in names:
-        if name in _MODEL_QUERIES:
-            # Same materialization mode as bench.py times.
-            df = _run_model(
-                spark, SF, _MODEL_QUERIES[name][0], reuse="checkpoint"
-            )
-        else:
-            df = QUERIES[name](spark, SF)
+        df = run_query(spark, SF, name)  # the plan bench.py times
         buf = io.StringIO()
         with redirect_stdout(buf):
             df.explain("formatted")

@@ -24,7 +24,6 @@ from __future__ import annotations
 import math
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -83,27 +82,15 @@ def main() -> None:
     t: dict[str, list[float]] = {q: [] for q in SUBSET if q in QUERIES}
     for sf_dir in sfs:
         for q in t:
-            t0 = time.perf_counter()
-            QUERIES[q](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            t[q].append(time.perf_counter() - t0)
-            spark.catalog.clearCache()
+            t[q].append(bench.time_once(spark, sf_dir, q))
 
     # flagship models: production materialization mode, one decade up
-    from getdbt_spark.queries.model_queries import _MODEL_QUERIES, _run_model
-
     tm: dict[str, list[float]] = {m: [] for m in MODEL_SUBSET}
     for sf_dir in MODEL_SFS:
         if not os.path.isdir(sf_dir):
             continue
         for m in tm:
-            t0 = time.perf_counter()
-            _run_model(
-                spark, sf_dir, _MODEL_QUERIES[m][0], reuse="checkpoint"
-            ).write.format("noop").mode("overwrite").save()
-            tm[m].append(time.perf_counter() - t0)
-            spark.catalog.clearCache()
+            tm[m].append(bench.time_once(spark, sf_dir, m))
 
     rows = []
     flagged = 0

@@ -24,7 +24,6 @@ import json
 import math
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -53,8 +52,7 @@ R10_HEAVY = [
 
 def main() -> None:
     import bench
-    from getdbt_spark.queries import QUERIES, load_all
-    from getdbt_spark.queries.model_queries import _MODEL_QUERIES, _run_model
+    from getdbt_spark.queries import load_all
     from getdbt_spark.session import get_spark
 
     load_all()
@@ -67,20 +65,9 @@ def main() -> None:
     for name in names:
         row: dict[str, float] = {}
         for sf_label, sf_dir in (("sf1", SF1), ("sf10", SF10)):
-            best = float("inf")
-            for _rep in range(2):
-                t0 = time.perf_counter()
-                if name in MODELS:
-                    df = _run_model(
-                        spark, sf_dir, _MODEL_QUERIES[name][0],
-                        reuse="checkpoint",
-                    )
-                else:
-                    df = QUERIES[name](spark, sf_dir)
-                df.write.format("noop").mode("overwrite").save()
-                best = min(best, time.perf_counter() - t0)
-                spark.catalog.clearCache()
-            row[sf_label] = round(best, 3)
+            row[sf_label] = round(
+                min(bench.time_once(spark, sf_dir, name) for _ in range(2)), 3
+            )
             print(f"# {name} {sf_label}: {row[sf_label]} s", file=sys.stderr)
         row["alpha4"] = round(math.log10(row["sf10"] / row["sf1"]), 2)
         out[name] = row

@@ -14,7 +14,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -24,29 +23,18 @@ SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 def main() -> None:
     names = sys.argv[1:]
     reps = int(os.environ.get("REPS", "2"))
-    from bench import _warmup
+    from bench import _warmup, time_once
 
-    from getdbt_spark.queries import QUERIES, load_all
+    from getdbt_spark.queries import load_all
     from getdbt_spark.session import get_spark
 
     load_all()
     spark = get_spark(app_name="time_queries")
     _warmup(spark, SF)
-    from getdbt_spark.queries.model_queries import _MODEL_QUERIES, _run_model
-
-    out: dict[str, float] = {}
-    for name in names:
-        best = float("inf")
-        for _ in range(reps):
-            t0 = time.perf_counter()
-            if name in _MODEL_QUERIES:
-                df = _run_model(spark, SF, _MODEL_QUERIES[name][0], reuse="checkpoint")
-            else:
-                df = QUERIES[name](spark, SF)
-            df.write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-            spark.catalog.clearCache()
-        out[name] = round(best, 3)
+    out = {
+        name: round(min(time_once(spark, SF, name) for _ in range(reps)), 3)
+        for name in names
+    }
     print(json.dumps(out))
 
 
