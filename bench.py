@@ -319,6 +319,11 @@ def main() -> None:
         best_canary = spark_canary
         for name in [n for n, ok in sorted(verdicts.items()) if not ok]:
             reps = 0
+            # recorded on entry: 0 means flagged when the retry pass
+            # began but never re-measured — the 180 s wall bound ran
+            # out first, or an earlier query's re-measure already
+            # cleared it through the share gate
+            retried[name] = 0
             # collapse-waits do NOT consume the rep budget (the wall
             # bound caps them): a slow canary would otherwise eat every
             # retry and leave the flagged in-window reading in place
@@ -374,11 +379,12 @@ def main() -> None:
                 # over more reps only tightens; see the collapse-aware
                 # re-measure block) — r13 measurement-robustness fix.
                 "passes": 2,
-                # Gate-flagged queries that received canary-gated extra
-                # reps this run, with the rep count (empty when every
-                # query passed on min-of-two) — r13 ADVICE: the artifact
-                # must record which timings carry the extra-rep
-                # advantage.
+                # Every gate-flagged query with its count of
+                # canary-gated extra reps (0 == flagged, never
+                # re-measured: wall bound hit, or cleared by another
+                # query's re-measure; empty when every query passed
+                # on min-of-two) — r13 ADVICE: the artifact must
+                # record which timings carry the extra-rep advantage.
                 "retried": retried,
                 # Host-speed canary: identical CPU work every round —
                 # normalize cross-round query deltas by the canary

@@ -16,10 +16,17 @@ large-scale training-data pipeline needs, built Spark-first —
 - **Multimodal columns**: binary payload + typed metadata, decoded
   via an Arrow-batched ``mapInPandas`` stub.
 
-Everything except the multimodal decode stub is pure JVM-side Column
-expressions (``transform``/``zip_with``/``aggregate`` higher-order
-functions) — no Python in the hot path, so whole-stage codegen covers
-each operator end to end.
+Most operators are JVM-side Column expressions (``transform``/
+``zip_with``/``aggregate`` higher-order functions) that whole-stage
+codegen covers end to end.  The dense numeric kernels (the cosine
+block top-k ``topk_cosine_blocked``, the k-means and PQ rounds) and
+the row-expanding operators (frame sampling, chunking, bin packing,
+the multimodal decode stub) run Python in the hot path, as
+Arrow-batched ``mapInPandas`` / ``applyInPandas`` kernels.
+Every cosine pair path goes through one place: ``cosine`` is the only
+scoring expression, ``_threshold_edges`` (behind ``cosine_edges``)
+the only threshold tail, and ``_rank_topk`` the only top-k ranking
+window.
 
 Scale design notes (local[32] tests ≠ the target; a 1000-executor
 cluster reading 100 TB is):
@@ -117,6 +124,9 @@ LSH_BANDS = MINHASH_N // LSH_ROWS
 # effectively exhaustive above the verify threshold, so the exact
 # brute-force oracle and the LSH plan agree.
 JACCARD_THRESHOLD = 0.6
+# Embedding near-duplicate cut: a pair is an edge when its cosine,
+# rounded to 1e-6, is >= this (``cosine_edges``; the oracles read it).
+COSINE_TAU = 0.45
 
 _U32 = (1 << 32) - 1
 
@@ -690,7 +700,7 @@ def assign_nearest_cosine(e: DataFrame, cent: DataFrame) -> DataFrame:
 
 def _block_topk_fn(k: int):
     """Per-block cosine top-``k`` kernel for the cogroup block layouts
-    (``topk_cosine_blocked`` / ``bucketed_topk_cosine``): dense numpy
+    (``topk_cosine_blocked``, whole-corpus or per bucket): dense numpy
     ``Q @ M.T`` over one (query-chunk, index-shard) block, per-query
     top-k candidates by (score DESC, neighbor_id ASC) with NaN scores
     ordered LAST and emitted as NULL.
@@ -767,67 +777,15 @@ def lineage_cut_lazy(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=False)
 
 
-def bucketed_topk_cosine(
-    ea: DataFrame,
-    k: int = 5,
-    index_shards: int = 4,
-    query_chunks: int = 4,
-    bucket: str = "cent_id",
-) -> DataFrame:
-    """Within-bucket exact cosine top-``k`` as per-bucket block matrix
-    products: ``(vec_id, rnk, neighbor_id, cos_sim)`` ranked by
-    (cosine DESC NULLS LAST, neighbor_id), cosine rounded to 1e-6
-    AFTER the global rank — the IVF/ANN in-bucket search shared by
-    ``sim_ann_ivf`` and ``sim_ann_ivf_trained``.
-
-    Round-13 shape (guide §4.2, §8): the old form self-joined the
-    bucket (Σ|cell|² pair ROWS each carrying two 64-float vectors),
-    scored every pair with the interpreted ``zip_with`` cosine fold,
-    and ranked with a window over all pairs.  Here each bucket is
-    sub-blocked exactly like ``topk_cosine_blocked`` — cogroup keys
-    ``(bucket, qc, shard)``, query side replicated ×shards, index side
-    ×chunks — one dense numpy matmul per block, per-query top-k folded
-    through one window over ≤ k×shards rows per query.  Vector bytes
-    cross the exchange once per replication constant, never per pair.
-    Scoring matches the sequential-fold oracle inside the 1e-6
-    rounding grid (the ``topk_cosine_blocked`` precedent, hash-green
-    since round 10), and the NaN→NULL corrupt-vector semantics are the
-    kernel's (see ``_block_topk_fn``)."""
+def _rank_topk(partial: DataFrame, k: int) -> DataFrame:
+    """The one cosine top-``k`` tail: ``(vec_id, neighbor_id, c)``
+    candidates → ``(vec_id, rnk, neighbor_id, cos_sim)`` ranked per
+    query by (c DESC NULLS LAST, neighbor_id) — the oracles' ``ORDER
+    BY c DESC, neighbor_id`` — with the cosine rounded to 1e-6 AFTER
+    the rank, so a tie inside the rounding grid still breaks on the
+    unrounded score exactly as the oracle breaks it."""
     from pyspark.sql import Window
 
-    # Key-type discipline copied verbatim from topk_cosine_blocked:
-    # pmod(bigint,int) is BIGINT, explode(sequence(int,int)) is INT,
-    # and HashPartitioning is type-sensitive — mismatched key types
-    # scatter equal keys to different partitions and blocks silently
-    # never pair (latent at small SF; pinned by test_pipeline).
-    # Each side projects the bucket alias FRESH from ``ea`` (a shared
-    # aliased attribute on both cogroup sides trips the ambiguous-
-    # self-join check).
-    qs = ea.select(
-        F.col(bucket).alias("__b"),
-        F.pmod("vec_id", F.lit(query_chunks)).cast("int").alias("qc"),
-        F.explode(
-            F.sequence(F.lit(0), F.lit(index_shards - 1))
-        ).alias("shard"),
-        "vec_id",
-        "embedding",
-    )
-    ix = ea.select(
-        F.col(bucket).alias("__b"),
-        F.explode(
-            F.sequence(F.lit(0), F.lit(query_chunks - 1))
-        ).alias("qc"),
-        F.pmod("vec_id", F.lit(index_shards)).cast("int").alias("shard"),
-        "vec_id",
-        "embedding",
-    )
-    partial = (
-        qs.groupBy("__b", "qc", "shard")
-        .cogroup(ix.groupBy("__b", "qc", "shard"))
-        .applyInPandas(
-            _block_topk_fn(k), schema="vec_id long, neighbor_id long, c double"
-        )
-    )
     w = Window.partitionBy("vec_id").orderBy(
         F.col("c").desc(), F.col("neighbor_id")
     )
@@ -843,23 +801,111 @@ def bucketed_topk_cosine(
     )
 
 
+def _pair_side(df: DataFrame, on: str | None, id_as: str, v: str, n: str):
+    """Project one side of a cosine pair join: ``(on?, id, vec, norm)``
+    from a ``(vec_id, embedding, norm)`` frame."""
+    return df.select(
+        *([on] if on else []),
+        F.col("vec_id").alias(id_as),
+        F.col("embedding").alias(v),
+        F.col("norm").alias(n),
+    )
+
+
+def _threshold_edges(pairs: DataFrame) -> DataFrame:
+    """The one cosine threshold tail: scored ``(a_id, b_id, va, na,
+    vb, nb)`` pairs → ``(a_id, b_id, cos_sim)`` kept where the cosine
+    rounded to 1e-6 clears ``COSINE_TAU`` (the oracles' ``round(c, 6)
+    >= tau``).  A NULL score (zero-norm or non-finite vector) never
+    passes."""
+    return pairs.select(
+        "a_id",
+        "b_id",
+        E.round_to(
+            cosine(F.col("va"), F.col("vb"), F.col("na"), F.col("nb")), 6
+        ).alias("cos_sim"),
+    ).filter(F.col("cos_sim") >= COSINE_TAU)
+
+
+def cosine_edges(
+    a: DataFrame, b: DataFrame, on: str | None = None
+) -> DataFrame:
+    """Near-duplicate cosine edges ``(a_id, b_id, cos_sim)`` between
+    two ``(vec_id, embedding, norm)`` frames: every ``a_id < b_id``
+    pair sharing the ``on`` bucket key (an equi shuffle join), or ALL
+    such pairs when ``on`` is None (the brute-force non-equi join,
+    planned as a nested loop over the broadcast ``b`` side — its
+    parallelism is ``a``'s partition count), scored with the
+    ``cosine`` fold and kept by ``_threshold_edges``."""
+    a = _pair_side(a, on, "a_id", "va", "na")
+    b = _pair_side(b, on, "b_id", "vb", "nb")
+    lt = F.col("a_id") < F.col("b_id")
+    pairs = a.join(b, lt) if on is None else a.join(b, on).filter(lt)
+    return _threshold_edges(pairs)
+
+
+def cosine_candidate_edges(cand: DataFrame, e: DataFrame) -> DataFrame:
+    """``cosine_edges`` over an explicit ``(a_id, b_id)`` candidate
+    list: each candidate pair picks up both vectors from the
+    ``(vec_id, embedding, norm)`` frame ``e`` (two equi joins on the
+    ids) and is scored once, so a caller that de-duplicates its
+    candidates never re-scores a pair."""
+    return _threshold_edges(
+        cand.join(_pair_side(e, None, "a_id", "va", "na"), "a_id").join(
+            _pair_side(e, None, "b_id", "vb", "nb"), "b_id"
+        )
+    )
+
+
+def cosine_topk(q: DataFrame, ix: DataFrame, on: str) -> DataFrame:
+    """Within-bucket cosine top-5 ``(vec_id, rnk, neighbor_id,
+    cos_sim)`` through the pair fold: every query row of ``q`` meets
+    the ``ix`` rows sharing its ``on`` bucket (one equi shuffle join —
+    a query side that lists several probe buckets just carries one row
+    per probe), self-pairs are dropped, each pair is scored with the
+    ``cosine`` fold, and ``_rank_topk`` ranks.  Both sides are
+    ``(vec_id, embedding, norm, on)`` frames.  k is 5, the depth every
+    approximate-search id and its oracle (``rnk <= 5``) use.  The
+    right shape for small buckets; large ones belong to
+    ``topk_cosine_blocked``."""
+    pairs = (
+        _pair_side(q, on, "vec_id", "va", "na")
+        .join(_pair_side(ix, on, "neighbor_id", "vb", "nb"), on)
+        .filter(F.col("vec_id") != F.col("neighbor_id"))
+        .select(
+            "vec_id",
+            "neighbor_id",
+            cosine(F.col("va"), F.col("vb"), F.col("na"), F.col("nb"))
+            .alias("c"),
+        )
+    )
+    return _rank_topk(pairs, 5)
+
+
 def topk_cosine_blocked(
     embs: DataFrame,
     k: int = 10,
     index_shards: int = 4,
     query_chunks: int = 4,
+    bucket: str | None = None,
 ) -> DataFrame:
-    """Brute-force cosine top-k as a distributed block matrix product.
+    """Exact cosine top-``k`` ``(vec_id, rnk, neighbor_id, cos_sim)``
+    as a distributed block matrix product — over the whole corpus, or
+    within each ``bucket`` (the IVF in-bucket search of ``sim_ann_ivf``
+    and ``sim_ann_ivf_trained``).
 
     The exact-kNN baseline with NO driver materialization anywhere:
     the index side is hash-sharded on ``vec_id % index_shards``, the
     query side on ``vec_id % query_chunks``, each side replicated
     across the other's blocks (query rows ×S, index rows ×Q — the
-    standard block nested-loop layout), and every (chunk, shard) block
-    meets in one ``cogroup().applyInPandas`` task that runs a dense
-    numpy ``Q @ M.T``.  Per-block per-query top-k candidates then fold
-    into the global top-k through one window — correct because a
-    global top-k is always a subset of the union of per-shard top-ks.
+    standard block nested-loop layout), and every (bucket, chunk,
+    shard) block meets in one ``cogroup().applyInPandas`` task that
+    runs a dense numpy ``Q @ M.T``.  Per-block per-query top-k
+    candidates then fold into the global top-k through ``_rank_topk``
+    — correct because a global top-k is always a subset of the union
+    of per-shard top-ks.  Vector bytes cross the exchange once per
+    replication constant, never per pair (the round-13 replacement for
+    the bucket self-join scored by the interpreted fold).
 
     At 100 TB this replaces the old broadcast-index design (driver
     ``collect()`` + ~30 GB executor ceiling): pick ``index_shards`` so
@@ -875,7 +921,8 @@ def topk_cosine_blocked(
     (matmul's blocked summation differs from a sequential fold only at
     ~1e-16, far inside the 1e-6 rounding grid; rank ties break on
     neighbor_id exactly like the oracle's ``ORDER BY c DESC,
-    neighbor_id``).
+    neighbor_id``).  The NaN→NULL corrupt-vector semantics are the
+    kernel's (see ``_block_topk_fn``).
     """
     # The cogroup keys MUST have identical types on both sides:
     # pmod(bigint, int) is BIGINT while explode(sequence(int, int)) is
@@ -888,46 +935,34 @@ def topk_cosine_blocked(
     # driver-green), then detonates as data grows (6/16 blocks at
     # sf0.1, 0/16 at sf1 → zero output).  Found by the round-10
     # decade run; pinned by test_pipeline.
-    base = embs.select("vec_id", "embedding")
-    qs = base.select(
+    # Each side projects the bucket alias FRESH from ``embs`` (a shared
+    # aliased attribute on both cogroup sides trips the ambiguous-
+    # self-join check).
+    def keyed(*cols):
+        b = [F.col(bucket).alias("__b")] if bucket else []
+        return embs.select(*b, *cols, "vec_id", "embedding")
+
+    qs = keyed(
         F.pmod("vec_id", F.lit(query_chunks)).cast("int").alias("qc"),
         F.explode(
             F.sequence(F.lit(0), F.lit(index_shards - 1))
         ).alias("shard"),
-        "vec_id",
-        "embedding",
     )
-    ix = base.select(
+    ix = keyed(
         F.explode(
             F.sequence(F.lit(0), F.lit(query_chunks - 1))
         ).alias("qc"),
         F.pmod("vec_id", F.lit(index_shards)).cast("int").alias("shard"),
-        "vec_id",
-        "embedding",
     )
-
+    keys = (["__b"] if bucket else []) + ["qc", "shard"]
     partial = (
-        qs.groupBy("qc", "shard")
-        .cogroup(ix.groupBy("qc", "shard"))
+        qs.groupBy(*keys)
+        .cogroup(ix.groupBy(*keys))
         .applyInPandas(
             _block_topk_fn(k), schema="vec_id long, neighbor_id long, c double"
         )
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("vec_id").orderBy(
-        F.col("c").desc(), F.col("neighbor_id")
-    )
-    return (
-        partial.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(
-            "vec_id",
-            "rnk",
-            "neighbor_id",
-            E.round_to(F.col("c"), 6).alias("cos_sim"),
-        )
-    )
+    return _rank_topk(partial, k)
 
 
 # ---------------------------------------------------------------------------

@@ -779,9 +779,6 @@ def doc_winnow_fingerprints(spark, sf_dir):
 # 7. SemDeDup — cluster-bucketed semantic dedup
 # ---------------------------------------------------------------------------
 
-SEMDEDUP_TAU = 0.45  # cosine keep-threshold (matches dedup_embedding_cosine)
-
-
 @query(
     "sem_dedup",
     oracle=f"""
@@ -820,7 +817,7 @@ SEMDEDUP_TAU = 0.45  # cosine keep-threshold (matches dedup_embedding_cosine)
         FROM ee a JOIN ee b
           ON a.cent_id = b.cent_id AND b.vec_id < a.vec_id)
     ), dominated AS (
-      SELECT DISTINCT vec_id FROM pr WHERE round(c, 6) >= {SEMDEDUP_TAU}
+      SELECT DISTINCT vec_id FROM pr WHERE round(c, 6) >= {P.COSINE_TAU}
     )
     SELECT ee.vec_id, ee.cent_id,
            (d.vec_id IS NULL) AS is_kept
@@ -851,29 +848,10 @@ def sem_dedup(spark, sf_dir):
         F.col("norm").alias("cnorm"),
     )
     ee = P.assign_nearest_cosine(e, cent).persist()
-    a = ee.select(
-        "cent_id",
-        "vec_id",
-        F.col("embedding").alias("va"),
-        F.col("norm").alias("na"),
-    )
-    b = ee.select(
-        "cent_id",
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("vb"),
-        F.col("norm").alias("nb"),
-    )
+    # dominated: the higher id of a near-dup cluster-mate pair
     dominated = (
-        a.join(b, "cent_id")
-        .filter(F.col("neighbor_id") < F.col("vec_id"))
-        .select(
-            "vec_id",
-            P.cosine(
-                F.col("va"), F.col("vb"), F.col("na"), F.col("nb")
-            ).alias("c"),
-        )
-        .filter(E.round_to(F.col("c"), 6) >= SEMDEDUP_TAU)
-        .select("vec_id")
+        P.cosine_edges(ee, ee, on="cent_id")
+        .select(F.col("b_id").alias("vec_id"))
         .distinct()
         .withColumn("dom", F.lit(1))
     )
@@ -933,7 +911,7 @@ def sem_dedup(spark, sf_dir):
         FROM ee a JOIN ee b
           ON a.cent_id = b.cent_id AND b.vec_id < a.vec_id)
     ), dominated AS (
-      SELECT DISTINCT vec_id FROM pr WHERE round(c, 6) >= {SEMDEDUP_TAU}
+      SELECT DISTINCT vec_id FROM pr WHERE round(c, 6) >= {P.COSINE_TAU}
     )
     SELECT ee.vec_id, ee.cent_id,
            (d.vec_id IS NULL) AS is_kept
@@ -969,29 +947,10 @@ def sem_dedup_trained(spark, sf_dir):
         "vec_id", F.col("cluster").alias("cent_id")
     )
     ee = e.join(assign, "vec_id").persist()
-    a = ee.select(
-        "cent_id",
-        "vec_id",
-        F.col("embedding").alias("va"),
-        F.col("norm").alias("na"),
-    )
-    b = ee.select(
-        "cent_id",
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("vb"),
-        F.col("norm").alias("nb"),
-    )
+    # dominated: the higher id of a near-dup cluster-mate pair
     dominated = (
-        a.join(b, "cent_id")
-        .filter(F.col("neighbor_id") < F.col("vec_id"))
-        .select(
-            "vec_id",
-            P.cosine(
-                F.col("va"), F.col("vb"), F.col("na"), F.col("nb")
-            ).alias("c"),
-        )
-        .filter(E.round_to(F.col("c"), 6) >= SEMDEDUP_TAU)
-        .select("vec_id")
+        P.cosine_edges(ee, ee, on="cent_id")
+        .select(F.col("b_id").alias("vec_id"))
         .distinct()
         .withColumn("dom", F.lit(1))
     )
@@ -1621,7 +1580,7 @@ def bpe_merge_table(spark, sf_dir):
                  / (a.norm * b.norm))
              THEN list_sum([a.embedding[i]::DOUBLE * b.embedding[i]::DOUBLE
                             for i in range(1, len(a.embedding) + 1)])
-                 / (a.norm * b.norm) END, 6) >= 0.45
+                 / (a.norm * b.norm) END, 6) >= {P.COSINE_TAU}
     ), edges AS (
       SELECT a_id AS src, b_id AS dst FROM mpairs
       UNION ALL
@@ -1664,34 +1623,7 @@ def dedup_embedding_cluster_ivf(spark, sf_dir):
         "vec_id", F.col("cluster").alias("cent_id")
     )
     ee = e.join(assign, "vec_id").persist()
-    a = ee.select(
-        "cent_id",
-        F.col("vec_id").alias("a_id"),
-        F.col("embedding").alias("va"),
-        F.col("norm").alias("na"),
-    )
-    b = ee.select(
-        "cent_id",
-        F.col("vec_id").alias("b_id"),
-        F.col("embedding").alias("vb"),
-        F.col("norm").alias("nb"),
-    )
-    pairs = (
-        a.join(b, "cent_id")
-        .filter(F.col("a_id") < F.col("b_id"))
-        .select(
-            "a_id",
-            "b_id",
-            E.round_to(
-                P.cosine(
-                    F.col("va"), F.col("vb"), F.col("na"), F.col("nb")
-                ),
-                6,
-            ).alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim") >= 0.45)
-        .select("a_id", "b_id")
-    )
+    pairs = P.cosine_edges(ee, ee, on="cent_id").select("a_id", "b_id")
     comp = P.connected_components(pairs)
     base = ee.select("vec_id")
     return (
@@ -1838,7 +1770,7 @@ _PROBE_CHAIN_SQL = f"""
 
 # All pairs over the cosine threshold — the exact near-dup graph (the
 # dedup_embedding_cluster oracle's p CTE, verbatim semantics).
-_EXACT_PAIRS_SQL = """
+_EXACT_PAIRS_SQL = f"""
     xp AS (
       SELECT a_id, b_id FROM (
         SELECT a.vec_id AS a_id, b.vec_id AS b_id,
@@ -1846,7 +1778,7 @@ _EXACT_PAIRS_SQL = """
                          for i in range(1, len(a.embedding) + 1)])
                  / (a.norm * b.norm) AS c0
         FROM e a JOIN e b ON a.vec_id < b.vec_id)
-      WHERE isfinite(c0) AND round(c0, 6) >= 0.45
+      WHERE isfinite(c0) AND round(c0, 6) >= {P.COSINE_TAU}
     )"""
 
 
@@ -1867,32 +1799,7 @@ def _probe_cell_pairs(e, assign):
         .select("a_id", "b_id")
         .distinct()
     )
-    ea = e.select(
-        F.col("vec_id").alias("a_id"),
-        F.col("embedding").alias("va"),
-        F.col("norm").alias("na"),
-    )
-    eb = e.select(
-        F.col("vec_id").alias("b_id"),
-        F.col("embedding").alias("vb"),
-        F.col("norm").alias("nb"),
-    )
-    return (
-        cand.join(ea, "a_id")
-        .join(eb, "b_id")
-        .select(
-            "a_id",
-            "b_id",
-            E.round_to(
-                P.cosine(
-                    F.col("va"), F.col("vb"), F.col("na"), F.col("nb")
-                ),
-                6,
-            ).alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim") >= 0.45)
-        .select("a_id", "b_id")
-    )
+    return P.cosine_candidate_edges(cand, e).select("a_id", "b_id")
 
 
 @query(
@@ -1916,7 +1823,7 @@ def _probe_cell_pairs(e, assign):
                  / (a.norm * b.norm))
              THEN list_sum([a.embedding[i]::DOUBLE * b.embedding[i]::DOUBLE
                             for i in range(1, len(a.embedding) + 1)])
-                 / (a.norm * b.norm) END, 6) >= 0.45
+                 / (a.norm * b.norm) END, 6) >= {P.COSINE_TAU}
     ), edges AS (
       SELECT a_id AS src, b_id AS dst FROM mpairs
       UNION ALL

@@ -398,20 +398,20 @@ def sim_ann_ivf(spark, sf_dir):
     # search consume it, and a joined frame feeding both sides of a
     # cogroup needs the cut to pass the ambiguous-self-join check (see
     # pipeline.lineage_cut_lazy).  The in-bucket search is the shared
-    # block-matmul kernel (pipeline.bucketed_topk_cosine): one dense
-    # numpy product per (bucket, chunk, shard) block instead of a
-    # Σ|cell|² pair self-join scored by the interpreted zip_with
+    # block-matmul kernel (pipeline.topk_cosine_blocked per bucket):
+    # one dense numpy product per (bucket, chunk, shard) block instead
+    # of a Σ|cell|² pair self-join scored by the interpreted zip_with
     # cosine fold.
     ea = P.lineage_cut_lazy(P.assign_nearest_cosine(e, cent))
-    return P.bucketed_topk_cosine(ea, k=5)
+    return P.topk_cosine_blocked(ea, k=5, bucket="cent_id")
 
 
 @query(
     "dedup_embedding_cosine",
     oracle=_COSINE_ORACLE_CORE
-    + """
+    + f"""
     SELECT vec_id AS a_id, neighbor_id AS b_id, round(c, 6) AS cos_sim
-    FROM p WHERE vec_id < neighbor_id AND round(c, 6) >= 0.45
+    FROM p WHERE vec_id < neighbor_id AND round(c, 6) >= {P.COSINE_TAU}
     """,
 )
 def dedup_embedding_cosine(spark, sf_dir):
@@ -422,32 +422,10 @@ def dedup_embedding_cosine(spark, sf_dir):
     with an LSH/IVF bucket key (see sim_ann_ivf) so candidate pairs
     are generated per bucket instead of all-pairs.
 
-    Streamed side repartitioned before the nested-loop pair scan —
-    same single-split parallelism fix as ``_emb_exact_pairs``.
+    The pair graph is ``_emb_exact_pairs`` — the same brute-force
+    scan ``dedup_embedding_cluster`` clusters.
     """
-    n_cores = spark.sparkContext.defaultParallelism
-    e = P.with_norm(_embs(spark, sf_dir))
-    a = e.repartition(n_cores).select(
-        F.col("vec_id").alias("a_id"),
-        F.col("embedding").alias("va"),
-        F.col("norm").alias("na"),
-    )
-    b = e.select(
-        F.col("vec_id").alias("b_id"),
-        F.col("embedding").alias("vb"),
-        F.col("norm").alias("nb"),
-    )
-    return (
-        a.join(b, F.col("a_id") < F.col("b_id"))
-        .select(
-            "a_id",
-            "b_id",
-            E.round_to(
-                P.cosine(F.col("va"), F.col("vb"), F.col("na"), F.col("nb")), 6
-            ).alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim") >= 0.45)
-    )
+    return _emb_exact_pairs(spark, sf_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -941,8 +919,8 @@ def sim_ann_lsh(spark, sf_dir):
     buckets — a nearly vacuous 6-row check); production picks nbits by
     target bucket size n/2^nbits.
     """
-    # In-bucket search: pair join + JVM cosine fold, NOT the
-    # bucketed_topk_cosine block kernel that sim_ann_ivf/_trained use.
+    # In-bucket search: the pair fold (pipeline.cosine_topk), NOT the
+    # per-bucket block kernel that sim_ann_ivf/_trained use.
     # Measured both ways in round 13: this fixture dials nbits=8 so
     # buckets hold ~8 vectors (B² ≈ 64 pairs/bucket), and the kernel's
     # per-bucket cogroup groups + two grouping exchanges cost MORE
@@ -950,39 +928,11 @@ def sim_ann_lsh(spark, sf_dir):
     # sf0.1, flagged by the bench share gate).  The crossover is
     # bucket size: production dials nbits for target bucket sizes in
     # the hundreds, where the kernel's dense matmul wins — swap in
-    # P.bucketed_topk_cosine(e, k=5, index_shards=1, query_chunks=1,
+    # P.topk_cosine_blocked(e, k=5, index_shards=1, query_chunks=1,
     # bucket="bucket") at that operating point.
-    from pyspark.sql import Window
-
     e = P.lsh_bucket(P.with_norm(_embs(spark, sf_dir)), nbits=8).persist()
-    a = e.select(
-        "bucket", "vec_id",
-        F.col("embedding").alias("va"), F.col("norm").alias("na"),
-    )
-    b = e.select(
-        "bucket",
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("vb"), F.col("norm").alias("nb"),
-    )
-    pairs = (
-        a.join(b, "bucket")
-        .filter(F.col("vec_id") != F.col("neighbor_id"))
-        .select(
-            "vec_id", "neighbor_id",
-            P.cosine(F.col("va"), F.col("vb"), F.col("na"), F.col("nb"))
-            .alias("c"),
-        )
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.desc("c"), F.asc("neighbor_id"))
-    return (
-        pairs.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 5)
-        .select(
-            "vec_id",
-            F.col("rnk").cast("long").alias("rnk"),
-            "neighbor_id",
-            E.round_to("c", 6).alias("cos_sim"),
-        )
+    return P.cosine_topk(e, e, "bucket").withColumn(
+        "rnk", F.col("rnk").cast("long")
     )
 
 
@@ -1320,8 +1270,6 @@ def sim_ann_lsh_multiprobe(spark, sf_dir):
     (and flipping lowest-|margin| bits first) tunes the recall/cost
     trade per query.
     """
-    from pyspark.sql import Window
-
     e = P.lsh_bucket(P.with_norm(_embs(spark, sf_dir)), nbits=8).persist()
     # query side: own bucket + the 8 one-bit flips
     probes = F.array(
@@ -1329,43 +1277,11 @@ def sim_ann_lsh_multiprobe(spark, sf_dir):
         *[F.col("bucket").bitwiseXOR(F.lit(1 << j)) for j in range(8)],
     )
     q = e.select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("qv"),
-        F.col("norm").alias("qn"),
-        F.explode(probes).alias("bucket"),
-    )
-    ix = e.select(
-        F.col("vec_id").alias("n_id"),
-        F.col("embedding").alias("nv"),
-        F.col("norm").alias("nn"),
-        "bucket",
-    )
-    pairs = (
-        q.join(ix, "bucket")
-        .filter(F.col("q_id") != F.col("n_id"))
-        .select(
-            "q_id",
-            "n_id",
-            P.cosine(
-                F.col("qv"), F.col("nv"), F.col("qn"), F.col("nn")
-            ).alias("c"),
-        )
-    )
-    rnk = F.row_number().over(
-        Window.partitionBy("q_id").orderBy(F.col("c").desc(), "n_id")
+        "vec_id", "embedding", "norm", F.explode(probes).alias("bucket")
     )
     # e stays persisted (two consumers); the sweep/bench harnesses
     # clearCache between queries — same ownership rule as sim_ann_lsh.
-    return (
-        pairs.withColumn("rnk", rnk)
-        .filter(F.col("rnk") <= 5)
-        .select(
-            F.col("q_id").alias("vec_id"),
-            "rnk",
-            F.col("n_id").alias("neighbor_id"),
-            E.round_to(F.col("c"), 6).alias("cos_sim"),
-        )
-    )
+    return P.cosine_topk(q, e, "bucket")
 
 
 @query(
@@ -2273,7 +2189,7 @@ def text_keyword_tfidf(spark, sf_dir):
 @query(
     "dedup_embedding_cluster",
     oracle="WITH RECURSIVE e AS (\n"
-    + """      SELECT vec_id, embedding,
+    + f"""      SELECT vec_id, embedding,
              sqrt(list_sum([x::DOUBLE * x::DOUBLE for x in embedding]))
                AS norm
       FROM embeddings
@@ -2288,7 +2204,7 @@ def text_keyword_tfidf(spark, sf_dir):
                          for i in range(1, len(a.embedding) + 1)])
                  / (a.norm * b.norm) AS c0
         FROM e a JOIN e b ON a.vec_id < b.vec_id)
-      WHERE isfinite(c0) AND round(c0, 6) >= 0.45
+      WHERE isfinite(c0) AND round(c0, 6) >= {P.COSINE_TAU}
     ), edges AS (
       SELECT a_id AS src, b_id AS dst FROM p
       UNION ALL
@@ -2353,30 +2269,7 @@ def _emb_exact_pairs(spark, sf_dir):
     narrow (id, vec, norm) projection."""
     n_cores = spark.sparkContext.defaultParallelism
     e = P.with_norm(_embs(spark, sf_dir))
-    a = e.repartition(n_cores).select(
-        F.col("vec_id").alias("a_id"),
-        F.col("embedding").alias("va"),
-        F.col("norm").alias("na"),
-    )
-    b = e.select(
-        F.col("vec_id").alias("b_id"),
-        F.col("embedding").alias("vb"),
-        F.col("norm").alias("nb"),
-    )
-    return (
-        a.join(b, F.col("a_id") < F.col("b_id"))
-        .select(
-            "a_id",
-            "b_id",
-            E.round_to(
-                P.cosine(
-                    F.col("va"), F.col("vb"), F.col("na"), F.col("nb")
-                ),
-                6,
-            ).alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim") >= 0.45)
-    )
+    return P.cosine_edges(e.repartition(n_cores), e)
 
 
 # ---------------------------------------------------------------------------
@@ -2918,15 +2811,15 @@ def sim_ann_ivf_trained(spark, sf_dir):
     quadratic search cost) balanced at 100 TB.  Every float cosine is
     computed only WITHIN buckets; the assignment itself is integer
     arithmetic end-to-end.  The in-bucket search is the shared
-    per-bucket block-matmul kernel (``pipeline.bucketed_topk_cosine``
-    — see sim_ann_ivf).
+    per-bucket block-matmul kernel (``pipeline.topk_cosine_blocked``
+    with a bucket key — see sim_ann_ivf).
     """
     e = P.with_norm(_embs(spark, sf_dir))
     assign = P.kmeans_quantized(e, k=8, iters=2).select(
         "vec_id", F.col("cluster").alias("cent_id")
     )
     ea = P.lineage_cut_lazy(e.join(assign, "vec_id"))
-    return P.bucketed_topk_cosine(ea, k=5)
+    return P.topk_cosine_blocked(ea, k=5, bucket="cent_id")
 
 
 @query(

@@ -182,43 +182,10 @@ def _ivf_top5(ep, max_probe: int):
     (probe_rank 1).  ``max_probe=2`` is ``sim_ann_ivf_multiprobe``
     byte-for-byte; ``max_probe=1`` is the single-probe search over
     the same shared frame."""
-    from pyspark.sql import Window
-
-    qa = ep.filter(F.col("probe_rank") <= max_probe).select(
+    return P.cosine_topk(
+        ep.filter(F.col("probe_rank") <= max_probe),
+        ep.filter(F.col("probe_rank") == 1),
         "cent_id",
-        "vec_id",
-        F.col("embedding").alias("va"),
-        F.col("norm").alias("na"),
-    )
-    na = ep.filter(F.col("probe_rank") == 1).select(
-        "cent_id",
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("vb"),
-        F.col("norm").alias("nb"),
-    )
-    pairs = (
-        qa.join(na, "cent_id")
-        .filter(F.col("vec_id") != F.col("neighbor_id"))
-        .select(
-            "vec_id",
-            "neighbor_id",
-            P.cosine(
-                F.col("va"), F.col("vb"), F.col("na"), F.col("nb")
-            ).alias("c"),
-        )
-    )
-    w = Window.partitionBy("vec_id").orderBy(
-        F.desc("c"), F.asc("neighbor_id")
-    )
-    return (
-        pairs.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 5)
-        .select(
-            "vec_id",
-            "rnk",
-            "neighbor_id",
-            E.round_to(F.col("c"), 6).alias("cos_sim"),
-        )
     )
 
 

@@ -15,8 +15,24 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Runtime confs applied to ANY session handed to us (including the
-# driver's).  All of these are runtime-settable SQL confs.
+# Package root: Python workers need it on their path to unpickle
+# kernels that live in this package (a tool run from outside the repo
+# only puts it on the driver's ``sys.path``).
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# PySpark 4's per-Column-call error-context capture (call-site lines
+# attached to DataFrame error messages) costs ~3 Py4J round trips + a
+# Python stack walk on EVERY wrapped Column/function call — measured
+# 35-45% of the 22-model dashboard DAG's driver-side build time (13k
+# Py4J round trips per build, profiled r14).  It affects only
+# error-message metadata, never results or plans, and the cost is
+# driver-side at ANY deployment scale (guide §5: the driver should do
+# almost no work).  Re-enable when debugging with GETDBT_SPARK_DF_DEBUG=1.
+DF_DEBUGGING = os.environ.get("GETDBT_SPARK_DF_DEBUG") == "1"
+
+# Confs applied to ANY session handed to us (including the driver's).
+# They are meant to be runtime-settable; one that a deployment pins
+# keeps its value (``configure`` skips it).
 RUNTIME_CONFS: dict[str, str] = {
     # The driver-generated events.parquet stores nanosecond timestamps,
     # which Spark's parquet reader rejects unless told to surface them
@@ -29,19 +45,6 @@ RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
-    # PySpark 4's per-Column-call error-context capture
-    # (call-site lines attached to DataFrame error messages) costs
-    # ~3 Py4J round trips + a Python stack walk on EVERY wrapped
-    # Column/function call — measured 35-45% of the 22-model
-    # dashboard DAG's driver-side build time (13k Py4J round trips
-    # per build, profiled r14).  It affects only error-message
-    # metadata, never results or plans, and the cost is driver-side
-    # at ANY deployment scale (guide §5: the driver should do almost
-    # no work).  Re-enable when debugging with
-    # GETDBT_SPARK_DF_DEBUG=1.
-    "spark.python.sql.dataFrameDebugging.enabled": (
-        "true" if os.environ.get("GETDBT_SPARK_DF_DEBUG") == "1" else "false"
-    ),
     # Let AQE upgrade sort-merge joins to broadcast from MEASURED
     # runtime sizes well past the static 10 MB threshold.  Static
     # estimates lie below Arrow kernels (pipeline._plan_with_real_
@@ -60,6 +63,12 @@ def configure(spark: SparkSession) -> SparkSession:
 
     Used by the query entry points because the verification driver owns
     the SparkSession; we only get to adjust runtime confs.
+
+    ``spark.python.sql.dataFrameDebugging.enabled`` is a STATIC conf in
+    PySpark 4.1 (``get_spark`` sets it at build time), but PySpark
+    reads it once per process into ``pyspark.errors.utils``'s cache —
+    so for a session someone else built, setting that cache is what
+    turns the per-call debugging wrapper off.
     """
     for k, v in RUNTIME_CONFS.items():
         try:
@@ -67,6 +76,10 @@ def configure(spark: SparkSession) -> SparkSession:
         except Exception:
             # Non-settable in this deployment — leave the default.
             pass
+    from pyspark.errors import utils as err_utils
+
+    if hasattr(err_utils, "_enable_debugging_cache"):
+        err_utils._enable_debugging_cache = DF_DEBUGGING
     return spark
 
 
@@ -158,9 +171,21 @@ def get_spark(
         # Keep stdout parseable: the driver greps bench.py's JSON line.
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
+        .config(
+            "spark.python.sql.dataFrameDebugging.enabled",
+            str(DF_DEBUGGING).lower(),
+        )
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    sc = spark.sparkContext
+    sc.setLogLevel("ERROR")
+    # Append (never replace) the package root to the Python workers'
+    # path: ``sc.environment`` holds any ``spark.executorEnv.PYTHONPATH``
+    # the deployment set and ships with every Python UDF.
+    env = sc.environment
+    paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if PACKAGE_ROOT not in paths:
+        env["PYTHONPATH"] = os.pathsep.join(paths + [PACKAGE_ROOT])
     return configure(spark)

@@ -30,12 +30,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 K = 8
-THRESH = 0.45
 
 
 def main() -> None:
-    from pyspark.sql import functions as F
-
     from getdbt_spark import pipeline as P
     from getdbt_spark.io import load_table
     from getdbt_spark.session import get_spark
@@ -82,34 +79,9 @@ def main() -> None:
 
     # (2) exact pairs at the registered threshold (brute force — the
     # oracle baseline, fine at analysis scale)
-    a = e.select(
-        F.col("vec_id").alias("a_id"),
-        F.col("embedding").alias("va"),
-        F.col("norm").alias("na"),
-    )
-    b = e.select(
-        F.col("vec_id").alias("b_id"),
-        F.col("embedding").alias("vb"),
-        F.col("norm").alias("nb"),
-    )
-    from getdbt_spark import functions as E
-
     exact = {
         (r["a_id"], r["b_id"])
-        for r in a.crossJoin(b)
-        .filter(F.col("a_id") < F.col("b_id"))
-        .withColumn(
-            "c",
-            E.round_to(
-                P.cosine(
-                    F.col("va"), F.col("vb"), F.col("na"), F.col("nb")
-                ),
-                6,
-            ),
-        )
-        .filter(F.col("c") >= THRESH)
-        .select("a_id", "b_id")
-        .collect()
+        for r in P.cosine_edges(e, e).select("a_id", "b_id").collect()
     }
 
     def shares_top(aid: int, bid: int, pa: int, pb: int) -> bool:

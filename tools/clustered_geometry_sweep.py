@@ -101,30 +101,7 @@ def main() -> None:
 
     # exact near-dup pairs at the dedup family's threshold
     e = P.with_norm(ce).localCheckpoint()
-    a = e.select(
-        F.col("vec_id").alias("a_id"),
-        F.col("embedding").alias("va"),
-        F.col("norm").alias("na"),
-    )
-    b = e.select(
-        F.col("vec_id").alias("b_id"),
-        F.col("embedding").alias("vb"),
-        F.col("norm").alias("nb"),
-    )
-    xp = (
-        a.crossJoin(b)
-        .filter(F.col("a_id") < F.col("b_id"))
-        .withColumn(
-            "c",
-            E.round_to(
-                P.cosine(F.col("va"), F.col("vb"), F.col("na"), F.col("nb")),
-                6,
-            ),
-        )
-        .filter(F.col("c") >= 0.45)
-        .select("a_id", "b_id")
-        .localCheckpoint()
-    )
+    xp = P.cosine_edges(e, e).select("a_id", "b_id").localCheckpoint()
     n_pairs = xp.count()
 
     # full probe ranking once (nprobe=4 covers every depth measured)
