@@ -1865,23 +1865,30 @@ def lsh_bucket(embs: DataFrame, nbits: int = 16, dim: int = 64) -> DataFrame:
     oracle parity relies on, so buckets are engine-reproducible
     bit-for-bit (a bit could only diverge if some dot were within one
     double ulp of 0).
+
+    The column is one SQL text (one Py4J call) rather than
+    ``nbits × dim`` ``F.lit`` calls.  Its literals are ``D``-suffixed:
+    a bare ``1.0`` in Spark SQL is DECIMAL, and the planes and the
+    fold's zero must stay DOUBLE like ``_dot_double``'s.
     """
     signs = _lsh_signs(nbits, dim)
-    bucket = F.lit(0).cast("long")
+    bits = []
     for j in range(nbits):
-        plane = F.array(*[F.lit(s) for s in signs[j]])
-        d = _dot_double(F.col("embedding"), plane)
-        bucket = bucket + F.when(d > 0, F.lit(1 << j).cast("long")).otherwise(
-            F.lit(0).cast("long")
+        plane = ", ".join(f"{s:.1f}D" for s in signs[j])
+        dot = (
+            f"aggregate(zip_with(embedding, array({plane}), "
+            "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
+            "0.0D, (acc, v) -> acc + v)"
         )
+        bits.append(f"CASE WHEN {dot} > 0 THEN {1 << j}L ELSE 0L END")
     # Dim guard: a vector whose length differs from the plane width
-    # would zip_with NULL pads → NULL dots → every bit's otherwise(0)
+    # would zip_with NULL pads → NULL dots → every bit's ELSE 0
     # branch → ALL mismatched vectors silently colliding in bucket 0,
     # turning the downstream bucket join into one hot all-pairs
     # partition.  NULL bucket instead: mismatched vectors drop out of
     # the equi join (NULL keys never match) rather than degrade it.
-    bucket = F.when(F.size("embedding") == dim, bucket)
-    return embs.withColumn("bucket", bucket)
+    bucket = f"CASE WHEN size(embedding) = {dim} THEN 0L + {' + '.join(bits)} END"
+    return embs.withColumn("bucket", F.expr(bucket))
 
 
 def spread(df) -> "DataFrame":

@@ -30,6 +30,20 @@ PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # almost no work).  Re-enable when debugging with GETDBT_SPARK_DF_DEBUG=1.
 DF_DEBUGGING = os.environ.get("GETDBT_SPARK_DF_DEBUG") == "1"
 
+# Spark's generated-code cache (compiled Janino classes, one entry per
+# distinct generated source).  The default of 100 entries is below one
+# run of the model DAG, so LRU eviction empties it between runs and a
+# warm run recompiles — and HotSpot re-JITs — every class again.
+# Measured in one session on 4 cores at sf0.1, cold: the dashboard DAG
+# run compiles 292 classes, one perfbench operator_suite pass 131 and
+# the 30 bench.py ids 289 — 712 in all; a warm repeat of all three
+# compiles 0 (315 + 162 + 880 at 100 entries).  Guava's size-bounded
+# cache splits the bound over ~4 segments and evicts when one fills,
+# so the size is the next power of two at or above twice that count.
+# Static conf: only a builder (or spark-defaults.conf) can set it, and
+# it travels in SparkConf, so executors' caches get the same size.
+CODEGEN_CACHE_ENTRIES = 2048
+
 # Confs applied to ANY session handed to us (including the driver's).
 # They are meant to be runtime-settable; one that a deployment pins
 # keeps its value (``configure`` skips it).
@@ -55,6 +69,15 @@ RUNTIME_CONFS: dict[str, str] = {
     # runtime-measured size cannot OOM the way a 50×-off estimate
     # can.
     "spark.sql.adaptive.autoBroadcastJoinThreshold": "64m",
+    # Keep the whole-stage-codegen stage id out of generated class
+    # names, so the same stage code is one cache entry (see
+    # CODEGEN_CACHE_ENTRIES).  Under AQE a plan's stage ids follow the
+    # order its query stages finish in, so with the id in the source a
+    # warm rerun of the one-plan dashboard build (``reuse=None``)
+    # missed the cache on 48-114 of its ~300 classes at sf0.001;
+    # without it, 4 and then 0.  Only class names change, never plans
+    # or results.
+    "spark.sql.codegen.useIdInClassName": "false",
 }
 
 
@@ -64,11 +87,21 @@ def configure(spark: SparkSession) -> SparkSession:
     Used by the query entry points because the verification driver owns
     the SparkSession; we only get to adjust runtime confs.
 
-    ``spark.python.sql.dataFrameDebugging.enabled`` is a STATIC conf in
-    PySpark 4.1 (``get_spark`` sets it at build time), but PySpark
-    reads it once per process into ``pyspark.errors.utils``'s cache —
-    so for a session someone else built, setting that cache is what
-    turns the per-call debugging wrapper off.
+    Two confs ``get_spark`` sets are STATIC, so ``conf.set`` raises
+    ``CANNOT_MODIFY_STATIC_CONFIG`` for them and this function cannot
+    apply them (``RUNTIME_CONFS`` must hold runtime confs only; a
+    tier-1 test checks that):
+
+    - ``spark.python.sql.dataFrameDebugging.enabled``: PySpark reads
+      it once per process into ``pyspark.errors.utils``'s cache, so
+      for a session someone else built, setting that cache is what
+      turns the per-call debugging wrapper off.
+    - ``spark.sql.codegen.cache.maxEntries``: there is no such side
+      door.  A session someone else built (the verification driver's
+      ``__spark_entry__`` session) gets the larger generated-code
+      cache only from its own builder or ``spark-defaults.conf``;
+      otherwise it keeps Spark's 100 entries and recompiles on every
+      run.
     """
     for k, v in RUNTIME_CONFS.items():
         try:
@@ -175,6 +208,7 @@ def get_spark(
             "spark.python.sql.dataFrameDebugging.enabled",
             str(DF_DEBUGGING).lower(),
         )
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)

@@ -1,7 +1,10 @@
-"""Session-factory guards that only a fresh interpreter can see: the
+"""Session-factory guards.  Most need a fresh interpreter: the
 Python-worker import path of a tool run from outside the repo (and of
 a deployment that sets its own), and PySpark's per-process
-debugging-wrapper cache on a session built by someone else."""
+debugging-wrapper cache on a session built by someone else.  The
+shared session pins the confs themselves: ``RUNTIME_CONFS`` holds only
+runtime-settable confs, and the generated-code cache is large enough
+that a warm run reuses its compiled classes."""
 
 from __future__ import annotations
 
@@ -9,7 +12,12 @@ import os
 import subprocess
 import sys
 
+from getdbt_spark import models as M
 from getdbt_spark.__main__ import DEFAULT_SF_DIR
+from getdbt_spark.fixtures import sources_map
+from getdbt_spark.io import corpus_run_date
+from getdbt_spark.runner import Runner
+from getdbt_spark.session import RUNTIME_CONFS
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF = DEFAULT_SF_DIR  # the sf0.001 corpus
@@ -115,3 +123,44 @@ def test_configure_turns_debugging_off_on_a_foreign_session(tmp_path):
     )
     assert proc.returncode == 0, proc.stderr[-4000:]
     assert "debugging False" in proc.stdout, proc.stdout + proc.stderr[-2000:]
+
+
+# Static confs ``get_spark`` sets in its builder: ``conf.set`` raises
+# for them, which ``configure()``'s per-key ``except`` would swallow.
+STATIC_CONFS = (
+    "spark.sql.codegen.cache.maxEntries",
+    "spark.python.sql.dataFrameDebugging.enabled",
+)
+
+
+def test_runtime_confs_hold_no_static_conf(spark):
+    """Every key ``configure()`` sets on a foreign session must be
+    runtime-settable; a static one there is a silent no-op."""
+    for k in RUNTIME_CONFS:
+        assert spark.conf.isModifiable(k), k
+    for k in STATIC_CONFS:
+        assert not spark.conf.isModifiable(k), k
+
+
+def test_warm_dashboard_run_reuses_compiled_classes(spark):
+    """A second identical build + action of the dashboard closure in
+    the same session must hit Spark's generated-code cache.  At
+    Spark's default of 100 entries the closure's ~300 classes evict
+    each other and the second run recompiles all of them."""
+    M.load_all()
+    anchor = corpus_run_date(spark, SF)
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    dashboard = "integral_reporting_dashboard_channel_weekly"
+
+    def run_once():
+        out = Runner(spark, sources_map(spark, SF), anchor).run(
+            [dashboard], reuse=None
+        )
+        out[dashboard].write.format("noop").mode("overwrite").save()
+
+    run_once()
+    before = codegen.METRIC_COMPILATION_TIME().getCount()
+    run_once()
+    compiled = codegen.METRIC_COMPILATION_TIME().getCount() - before
+    assert compiled <= 16, compiled
