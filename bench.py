@@ -41,7 +41,7 @@ HEADLINE = [
 PIPELINE_HEADLINE = [
     "dedup_exact",
     "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",      # exact PPJoin (prefix+positional filter)
+    "dedup_ngram_jaccard",      # exact Jaccard join (ℓ-prefix filter)
     "dedup_cluster_canonical",  # iterative connected components
     "dedup_simhash",            # Arrow simhash kernel
     "sim_topk_cosine",          # block-matrix exact kNN

@@ -347,7 +347,7 @@ def minhash_lsh_pairs(docs: DataFrame) -> DataFrame:
         .filter(F.col("ss.shingles").isNotNull())
         .select(
             "doc_id",
-            F.col("ss.shingles").alias("shingles"),
+            F.col("ss.shingles").alias("s"),
             F.col("ss.sig").alias("sig"),
         )
         .persist(StorageLevel.MEMORY_AND_DISK)
@@ -387,31 +387,61 @@ def minhash_lsh_pairs(docs: DataFrame) -> DataFrame:
         )
         .distinct()
     )
-    a = sh.select(F.col("doc_id").alias("a_id"), F.col("shingles").alias("sa"))
-    b = sh.select(F.col("doc_id").alias("b_id"), F.col("shingles").alias("sb"))
-    jac = F.size(F.array_intersect("sa", "sb")) / F.size(F.array_union("sa", "sb"))
+    return _verify_jaccard(candidates, sh, JACCARD_THRESHOLD)
+
+
+def _verify_jaccard(
+    candidates: DataFrame, sets: DataFrame, threshold: float
+) -> DataFrame:
+    """Exact verify tail of both near-dup pair plans: ``(a_id, b_id,
+    jaccard)`` for the candidate pairs whose Jaccard, rounded to 1e-6,
+    reaches ``threshold``.
+
+    ``sets`` is ``(doc_id, s)`` with each ``s`` free of duplicates (the
+    shingle kernel emits per-doc distinct grams), so |A∪B| is
+    |A| + |B| − |A∩B|: one ``array_intersect`` per candidate, no
+    ``array_union``, and the same double as intersect/union.
+    """
+    a = sets.select(F.col("doc_id").alias("a_id"), F.col("s").alias("sa"))
+    b = sets.select(F.col("doc_id").alias("b_id"), F.col("s").alias("sb"))
+    inter = F.size(F.array_intersect("sa", "sb"))
+    jac = inter / (F.size("sa") + F.size("sb") - inter)
     return (
         candidates.join(a, "a_id")
         .join(b, "b_id")
         .select("a_id", "b_id", E.round_to(jac, 6).alias("jaccard"))
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
+        .filter(F.col("jaccard") >= threshold)
     )
+
+
+# Shared prefix grams a candidate pair needs (ℓ of the ℓ-prefix filter,
+# capped per set at ⌈t·|S|⌉).  Distinct candidates measured at sf0.1
+# (5,000 docs, 256 true pairs): ℓ=1 193,273 (68,688 with the PPJoin
+# positional filter), ℓ=2 6,690, ℓ=3 456, ℓ=4 262.  Each step of ℓ
+# lengthens every prefix by one gram; past 3 it prunes few more pairs.
+_PREFIX_ELL = 3
 
 
 def ngram_jaccard_pairs(
     docs: DataFrame, k: int = 3, threshold: float = 0.6
 ) -> DataFrame:
-    """EXACT word-n-gram Jaccard near-dup pairs via prefix filtering.
+    """EXACT word-n-gram Jaccard near-dup pairs via ℓ-prefix filtering.
 
     Complements ``minhash_lsh_pairs``: no signatures, no probabilistic
-    miss — the classic PPJoin prefix-filter guarantees completeness.
-    Under one global gram order (numeric hash order here), two sets
-    with J(A,B) >= t must share an element within each set's first
-    ``|S| - ceil(t*|S|) + 1`` sorted grams (if they didn't, the
-    >= ceil(t*|S|) common grams would all sit in a suffix of size
-    ceil(t*|S|) - 1).  So candidate generation explodes ONLY that
-    prefix — at t=0.6 that is ~40% of each gram set — and joins on the
-    gram hash; everything else is pruned before any pairing.
+    miss — the prefix filter guarantees completeness.  J(A,B) >= t
+    implies |A∩B| >= c_A = ⌈t·|A|⌉.  Under one global gram order, a
+    set's ℓ-prefix is its first ``|A| - c_A + ℓ_A`` sorted grams, with
+    ``ℓ_A = min(3, c_A)`` (Wang, Li, Feng, "Can We Beat the Prefix
+    Filtering?", SIGMOD 2012; ℓ=1 is the classic PPJoin prefix).  Two
+    sets with J >= t share at least ``min(ℓ_A, ℓ_B)`` grams inside both
+    prefixes: their shared grams appear in the same order in both, A's
+    suffix holds only c_A - ℓ_A grams, so A's prefix holds the first
+    ℓ_A shared grams — and likewise for B.  The cap at c_A is what
+    keeps this true for sets that need fewer than 3 shared grams (a
+    1-gram exact duplicate shares one gram, never three).  So
+    candidate generation explodes ONLY the ℓ-prefix, joins on the gram
+    hash and keeps a pair only when it meets at ``min(ℓ_A, ℓ_B)`` or
+    more prefix grams; everything else is pruned before any verify.
 
     The prefix is taken under the PPJoin gram order — ascending
     document frequency, gram hash as tie-break — NOT hash order.  This
@@ -420,18 +450,23 @@ def ngram_jaccard_pairs(
     index join explodes quadratically in their document frequency
     (measured: 7.3M candidates for 256 real pairs over 5k docs).
     Frequency order pushes common grams into the pruned suffixes, so a
-    gram joins only the documents where it ranks among the rarest ~40%
-    — candidate count tracks true-duplicate density, not vocabulary
+    gram joins only the documents where it ranks among the rarest —
+    candidate count tracks true-duplicate density, not vocabulary
     skew.  Completeness is order-independent: ANY single global total
     order satisfies the prefix lemma.  A size filter
     (``t·|A| ≤ |B| ≤ |A|/t``) prunes candidates that could never reach
-    the threshold before the verify join.
+    the threshold before the verify join.  There is no per-row PPJoin
+    positional filter: its bound holds only at a pair's FIRST shared
+    gram, and applied to every row before the count it would drop the
+    later shared grams the ℓ count needs.
 
     Plan shape at scale: gram document-frequency aggregation
     (map-combinable) → frequency-ordered prefix explode → shuffle on
-    gram hash (the inverted index) → size-filtered distinct candidate
-    pairs → exact verify on the full sorted-gram arrays.  No stage is
-    all-pairs; the O(n²) form exists only in the DuckDB oracle.
+    gram hash (the inverted index) → size-filtered per-pair count of
+    shared prefix grams (one exchange, as the old ``distinct``) →
+    exact verify on the full sorted-gram arrays (``_verify_jaccard``).
+    No stage is all-pairs; the O(n²) form exists only in the DuckDB
+    oracle.
 
     Gram sets come from the same Arrow/numpy shingle kernel MinHash
     uses (``_shingles_and_sig``): Jaccard is invariant under ANY
@@ -467,34 +502,18 @@ def ngram_jaccard_pairs(
     # Rank each doc's grams under the PPJoin order with ONE window pass
     # (row_number over (df, g) per doc) instead of re-collecting and
     # array-sorting per-doc gram arrays — same shuffle key, no array
-    # churn, and the rank doubles as the gram POSITION the positional
-    # filter below needs.
+    # churn.
     wd = Window.partitionBy("doc_id").orderBy("df", "g")
+    need = F.ceil(F.lit(threshold) * F.col("n")).cast("int")
     pre = (
         grams.join(dfreq, "g")
         .withColumn("pos", F.row_number().over(wd))
-        .filter(
-            F.col("pos")
-            <= F.col("n")
-            - F.ceil(F.lit(threshold) * F.col("n")).cast("int")
-            + 1
-        )
-        .select("doc_id", "n", "pos", "g")
+        .withColumn("l", F.least(F.lit(_PREFIX_ELL), need))
+        .filter(F.col("pos") <= F.col("n") - need + F.col("l"))
+        .select("doc_id", "n", "l", "g")
         .persist(StorageLevel.MEMORY_AND_DISK)  # both sides of the self-join
     )
     pre = _plan_with_real_stats(pre)
-    # Required overlap for J >= t: O(A,B) >= ceil(t/(1+t) * (|A|+|B|)).
-    # Positional filter (PPJoin): at a shared prefix gram sitting at
-    # sorted positions (pa, pb), the remaining overlap is bounded by
-    # 1 + min(|A|-pa, |B|-pb); the FIRST common gram of a true pair
-    # lies in both prefixes, and every common gram sits at or after
-    # it, so a qualifying pair always survives through that row —
-    # while position-skewed collisions (common gram late in one doc,
-    # early in the other) are pruned before the distinct/verify.
-    alpha = F.ceil(
-        F.lit(threshold / (1.0 + threshold))
-        * (F.col("a.n") + F.col("b.n"))
-    )
     candidates = (
         pre.alias("a")
         .join(pre.alias("b"), "g")
@@ -502,31 +521,18 @@ def ngram_jaccard_pairs(
             (F.col("a.doc_id") < F.col("b.doc_id"))
             & (F.col("b.n") * threshold <= F.col("a.n"))
             & (F.col("a.n") * threshold <= F.col("b.n"))
-            & (
-                1
-                + F.least(
-                    F.col("a.n") - F.col("a.pos"),
-                    F.col("b.n") - F.col("b.pos"),
-                )
-                >= alpha
-            )
         )
-        .select(
+        .groupBy(
             F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id")
         )
-        .distinct()
+        .agg(
+            F.count("*").alias("shared"),
+            F.min(F.least("a.l", "b.l")).alias("l"),
+        )
+        .filter(F.col("shared") >= F.col("l"))
+        .select("a_id", "b_id")
     )
-    a = sh.select(F.col("doc_id").alias("a_id"), F.col("s").alias("sa"))
-    b = sh.select(F.col("doc_id").alias("b_id"), F.col("s").alias("sb"))
-    jac = F.size(F.array_intersect("sa", "sb")) / F.size(
-        F.array_union("sa", "sb")
-    )
-    return (
-        candidates.join(a, "a_id")
-        .join(b, "b_id")
-        .select("a_id", "b_id", E.round_to(jac, 6).alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
-    )
+    return _verify_jaccard(candidates, sh, threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -1157,9 +1163,11 @@ def connected_components(pairs: DataFrame) -> DataFrame:
     ``localCheckpoint`` instead of paying a file round-trip per cut.
     The convergence probe fuses into the per-round dedup aggregation:
     one groupBy answers "did the edge set change" AND materializes the
-    next round's input — one action per round total.
+    next round's input, and the answer is read from an ``Observation``
+    filled by that materializing action — one action per round total.
     """
     from pyspark import StorageLevel
+    from pyspark.sql import Observation
 
     from .session import durable_checkpoints  # lazy: avoids import cycle
 
@@ -1211,8 +1219,8 @@ def connected_components(pairs: DataFrame) -> DataFrame:
     # jobs per round of fixed overhead on an edge set that is tiny
     # next to the corpus.  Now the small-star emit is one per-row
     # explode (single subtree), and dedup + convergence fuse into one
-    # groupBy whose single aggregate action also materializes the
-    # persisted next-round edge set.  Lineage cuts: durable
+    # groupBy whose materializing action also fills the convergence
+    # Observation.  Lineage cuts: durable
     # deployments keep the reliable checkpoint every SECOND round
     # (executor loss recomputes at most two star rounds); locally the
     # per-round persist is the lineage anchor (blocks live in the one
@@ -1254,9 +1262,7 @@ def connected_components(pairs: DataFrame) -> DataFrame:
         # Dedup AND convergence in one aggregation: a (u,v) key sits in
         # the new multiset iff some row carries is_new=1 and in the old
         # set iff some row carries 0, so the symmetric difference is
-        # nonempty iff any group is single-sided (min == max).  The
-        # single aggregate action below doubles as the materialization
-        # of the persisted frame the next round (and the caller) reads.
+        # nonempty iff any group is single-sided (min == max).
         grouped = emit.withColumn("is_new", F.lit(1)).unionAll(
             edges.select("u", "v").withColumn("is_new", F.lit(0))
         ).groupBy("u", "v").agg(
@@ -1272,14 +1278,19 @@ def connected_components(pairs: DataFrame) -> DataFrame:
         # compile).  Locally that cut is ``localCheckpoint``; durable
         # deployments persist + reliable-checkpoint every SECOND round
         # (the executor-loss recompute window stays two star rounds).
+        # The convergence count rides on that same action through an
+        # Observation: no separate aggregate job per round.
+        seen = Observation()
+        grouped = grouped.observe(
+            seen, F.sum((F.col("mn") == F.col("mx")).cast("int")).alias("d")
+        )
         if durable:
             grouped = grouped.persist(StorageLevel.MEMORY_AND_DISK)
+            grouped.count()
             to_release.append(grouped)
         else:
             grouped = grouped.localCheckpoint(eager=True)
-        changed = grouped.agg(
-            F.sum((F.col("mn") == F.col("mx")).cast("int")).alias("d")
-        ).first()[0]
+        changed = seen.get["d"]
         small = grouped.filter(F.col("mx") == 1).select("u", "v")
         round_no += 1
         if durable and round_no % 2 == 0:

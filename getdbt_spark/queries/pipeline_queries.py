@@ -161,13 +161,15 @@ def dedup_minhash_lsh(spark, sf_dir):
     """,
 )
 def dedup_ngram_jaccard(spark, sf_dir):
-    """EXACT word-trigram Jaccard near-dup pairs via PPJoin-style prefix
+    """EXACT word-trigram Jaccard near-dup pairs via ℓ-prefix
     filtering — the deterministic complement to the MinHash plan.
 
     The oracle is brute-force all-pairs; the Spark plan explodes only
-    each doc's sorted-gram prefix (|S| - ceil(0.6|S|) + 1 elements),
-    joins on the gram hash, and exact-verifies candidates — provably
-    complete, never all-pairs (see pipeline.ngram_jaccard_pairs).
+    each doc's sorted-gram ℓ-prefix (|S| - ceil(0.6|S|) + ℓ elements,
+    ℓ = min(3, ceil(0.6|S|))), joins on the gram hash, keeps pairs that
+    share at least min(ℓ_A, ℓ_B) prefix grams, and exact-verifies those
+    candidates — provably complete, never all-pairs (see
+    pipeline.ngram_jaccard_pairs).
     """
     return P.ngram_jaccard_pairs(_docs(spark, sf_dir))
 
@@ -211,10 +213,13 @@ def dedup_cluster_canonical(spark, sf_dir):
     ``keep`` = the per-document training-set verdict (exactly one
     survivor per cluster).
 
-    Spark: alternating large-star/small-star rounds — one window pass
-    per half-round over the edge set, reliable checkpoint() between
-    iterations, O(log n) convergence on any graph shape (pipeline.
-    connected_components).  The oracle is a recursive-CTE transitive
+    Spark: the ℓ-prefix-filtered pair graph (pipeline.
+    ngram_jaccard_pairs), then alternating large-star/small-star rounds
+    — one window pass per half-round over the edge set, O(log n)
+    convergence on any graph shape (pipeline.connected_components).
+    Each round is one action: an eager localCheckpoint locally, and on
+    a durable deployment a persisted count with a reliable
+    checkpoint() every second round.  The oracle is a recursive-CTE transitive
     closure — exact, and exponential-ish in DuckDB, which is fine at
     oracle scale and exactly the plan shape Spark must NOT use.
     """

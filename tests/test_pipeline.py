@@ -61,6 +61,68 @@ def test_ngram_prefix_filter_is_complete(spark, docs):
     assert brute  # the corpus seeds near-dup pairs: the test must bite
 
 
+def test_ngram_prefix_filter_is_complete_on_tiny_sets(spark):
+    """The ℓ-prefix filter needs min(ℓ_A, ℓ_B) shared prefix grams, with
+    ℓ capped at ⌈t·|S|⌉: a 1-trigram exact duplicate shares ONE gram
+    and a 2-trigram set needs two, so an uncapped ℓ=3 loses every pair
+    below.  Documents of 3-6 tokens (1-4 trigrams), exact and near
+    duplicates, one pair exactly at J = 0.6, one doc whose repeated
+    trigram collapses to a single gram and one doc too short to have a
+    trigram; the result must equal brute-force all-pairs Jaccard."""
+    texts = {
+        1: "a b c",
+        2: "a b c",
+        3: "a b c d",
+        4: "a b c d",
+        5: "a b c d e",
+        6: "a b c d e f",
+        7: "x b c d e f",
+        8: "q r s",
+        9: "q r s t",
+        10: "z z z",
+        11: "z z z z",
+        12: "a b",
+    }
+    grams = {}
+    for i, t in texts.items():
+        w = t.lower().split(" ")
+        if len(w) >= 3:
+            grams[i] = {tuple(w[j : j + 3]) for j in range(len(w) - 2)}
+    brute = {}
+    for a in grams:
+        for b in grams:
+            if a < b:
+                inter = len(grams[a] & grams[b])
+                j = round(inter / len(grams[a] | grams[b]), 6)
+                if j >= P.JACCARD_THRESHOLD:
+                    brute[(a, b)] = j
+    docs = spark.createDataFrame(
+        list(texts.items()), "doc_id long, text string"
+    )
+    fast = {
+        (r.a_id, r.b_id): r.jaccard
+        for r in P.ngram_jaccard_pairs(docs).collect()
+    }
+    assert fast == brute
+    # the boundary cases are in the expected set, so the test bites
+    assert {(1, 2), (3, 4), (3, 5), (6, 7), (10, 11)} <= set(brute)
+    assert brute[(6, 7)] == 0.6
+
+
+def test_cluster_canonical_job_count(spark, docs):
+    """One dedup_cluster_canonical build plus collect at sf0.001 starts
+    at most 28 Spark jobs: the connected-components convergence count
+    rides on each round's materializing action (an Observation), not a
+    job of its own.  A separate aggregate per round made it 32."""
+    load_all()
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    lo = dag.nextJobId()  # documents already loaded: no schema job
+    QUERIES["dedup_cluster_canonical"](spark, SF).toPandas()
+    jobs = dag.nextJobId() - lo
+    spark.catalog.clearCache()
+    assert jobs <= 28, jobs
+
+
 def test_minhash_kernel_deterministic_across_invocations(spark, docs):
     """The FNV byte-matrix hash has no per-process salt: two separate
     kernel invocations (separate Python worker calls) must produce
