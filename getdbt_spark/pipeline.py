@@ -314,26 +314,27 @@ def _plan_with_real_stats(df: DataFrame) -> DataFrame:
     return df
 
 
-def minhash_lsh_pairs(docs: DataFrame) -> DataFrame:
-    """Near-duplicate pairs (a_id < b_id, jaccard >= threshold).
+def _shingle_frame(
+    docs: DataFrame, k: int = 3, with_sig: bool = True
+) -> DataFrame:
+    """Persisted ``(doc_id, s[, sig])`` frame of the near-dup plans:
+    each doc's distinct k-shingles ``s`` and (``with_sig``) its MinHash
+    signature, from one ``_shingles_and_sig`` pass.  Docs with < k
+    tokens come back NULL and are dropped, matching the oracles'
+    ``len(w) >= k`` filter.
 
-    Plan shape at scale: narrow shingle+signature projection → explode
-    to 64 (band, hash-pair) rows per doc → shuffle on the band key
-    (candidate generation; skew-safe because identical bands mean
-    near-identical docs) → distinct candidate pairs → join back the
-    two shingle sets → exact Jaccard filter. No stage is all-pairs.
-
-    The shingle+signature projection is a three-consumer intermediate
-    (band explode + both sides of the verify join); cache it rather
-    than recompute the tokenize+hash+kernel scan per consumer
+    The frame has several consumers in every caller (band explode or
+    gram explode plus both sides of the verify join), so it is cached
+    rather than recomputing the tokenize+hash+kernel scan per consumer
     (MEMORY_AND_DISK so a 100 TB run spills instead of evicting
-    mid-plan).  All per-doc math runs in one Arrow/numpy kernel
-    (``_shingles_and_sig``); docs with < 3 tokens come back NULL and
-    are dropped, matching the oracle's ``len(w) >= 3`` filter.
+    mid-plan), and counted once so joins plan against its true size.
     """
     from pyspark import StorageLevel
 
     n_cores = docs.sparkSession.sparkContext.defaultParallelism
+    cols = [F.col("ss.shingles").alias("s")]
+    if with_sig:
+        cols.append(F.col("ss.sig").alias("sig"))
     sh = (
         # Spread the kernel across cores even when the source arrives
         # as few input splits (a local parquet file is ONE split → one
@@ -343,23 +344,32 @@ def minhash_lsh_pairs(docs: DataFrame) -> DataFrame:
         # exchange, never a bottleneck.
         docs.select("doc_id", "text")
         .repartition(n_cores)
-        .select("doc_id", _shingles_and_sig(3)("text").alias("ss"))
-        .filter(F.col("ss.shingles").isNotNull())
         .select(
             "doc_id",
-            F.col("ss.shingles").alias("s"),
-            F.col("ss.sig").alias("sig"),
+            _shingles_and_sig(k, with_sig=with_sig)("text").alias("ss"),
         )
+        .filter(F.col("ss.shingles").isNotNull())
+        .select("doc_id", *cols)
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    sh = _plan_with_real_stats(sh)
-    sig = sh.select("doc_id", "sig")
-    # Band explode as ONE small HOF expression instead of an unrolled
-    # 64-struct array literal: same rows, but a plan node of constant
-    # size — the unrolled form made Catalyst/codegen chew a 192-field
-    # expression tree on every compile.  64 interpreted elements per
-    # row is noise next to the shuffle that follows.
-    bands = sig.select(
+    return _plan_with_real_stats(sh)
+
+
+# Join keys of the LSH band table: band index plus its LSH_ROWS slots.
+_BAND_KEYS = ["band"] + [f"h{r}" for r in range(LSH_ROWS)]
+
+
+def _lsh_bands(sh: DataFrame) -> DataFrame:
+    """Band explode of a ``_shingle_frame``: ``(doc_id, band, h0..)``,
+    LSH_BANDS rows per doc.
+
+    ONE small HOF expression instead of an unrolled 64-struct array
+    literal: same rows, but a plan node of constant size — the
+    unrolled form made Catalyst/codegen chew a 192-field expression
+    tree on every compile.  64 interpreted elements per row is noise
+    next to the shuffle that follows.
+    """
+    return sh.select(
         "doc_id",
         F.explode(
             F.transform(
@@ -376,34 +386,51 @@ def minhash_lsh_pairs(docs: DataFrame) -> DataFrame:
             )
         ).alias("bk"),
     ).select("doc_id", "bk.*")
-    band_keys = ["band"] + [f"h{r}" for r in range(LSH_ROWS)]
-    left = bands.alias("l")
-    right = bands.alias("r")
+
+
+def minhash_lsh_pairs(docs: DataFrame) -> DataFrame:
+    """Near-duplicate pairs (a_id < b_id, jaccard >= threshold).
+
+    Plan shape at scale: narrow shingle+signature projection
+    (``_shingle_frame``) → explode to 64 (band, hash-pair) rows per doc
+    → shuffle on the band key (candidate generation; skew-safe because
+    identical bands mean near-identical docs) → distinct candidate
+    pairs → join back the two shingle sets → exact Jaccard filter. No
+    stage is all-pairs.  All per-doc math runs in one Arrow/numpy
+    kernel (``_shingles_and_sig``).
+    """
+    sh = _shingle_frame(docs)
+    bands = _lsh_bands(sh)
     candidates = (
-        left.join(right, on=band_keys)
+        bands.alias("l")
+        .join(bands.alias("r"), on=_BAND_KEYS)
         .filter(F.col("l.doc_id") < F.col("r.doc_id"))
         .select(
             F.col("l.doc_id").alias("a_id"), F.col("r.doc_id").alias("b_id")
         )
         .distinct()
     )
-    return _verify_jaccard(candidates, sh, JACCARD_THRESHOLD)
+    return _verify_jaccard(candidates, sh, sh, JACCARD_THRESHOLD)
 
 
 def _verify_jaccard(
-    candidates: DataFrame, sets: DataFrame, threshold: float
+    candidates: DataFrame,
+    a_sets: DataFrame,
+    b_sets: DataFrame,
+    threshold: float,
 ) -> DataFrame:
-    """Exact verify tail of both near-dup pair plans: ``(a_id, b_id,
+    """Exact verify tail of the near-dup pair plans: ``(a_id, b_id,
     jaccard)`` for the candidate pairs whose Jaccard, rounded to 1e-6,
-    reaches ``threshold``.
+    reaches ``threshold``.  ``a_id`` looks up ``a_sets``, ``b_id``
+    ``b_sets`` (the same frame for a self-join).
 
-    ``sets`` is ``(doc_id, s)`` with each ``s`` free of duplicates (the
+    The sets are ``(doc_id, s)`` with each ``s`` free of duplicates (the
     shingle kernel emits per-doc distinct grams), so |A∪B| is
     |A| + |B| − |A∩B|: one ``array_intersect`` per candidate, no
     ``array_union``, and the same double as intersect/union.
     """
-    a = sets.select(F.col("doc_id").alias("a_id"), F.col("s").alias("sa"))
-    b = sets.select(F.col("doc_id").alias("b_id"), F.col("s").alias("sb"))
+    a = a_sets.select(F.col("doc_id").alias("a_id"), F.col("s").alias("sa"))
+    b = b_sets.select(F.col("doc_id").alias("b_id"), F.col("s").alias("sb"))
     inter = F.size(F.array_intersect("sa", "sb"))
     jac = inter / (F.size("sa") + F.size("sb") - inter)
     return (
@@ -480,19 +507,7 @@ def ngram_jaccard_pairs(
     from pyspark import StorageLevel
     from pyspark.sql import Window
 
-    n_cores = docs.sparkSession.sparkContext.defaultParallelism
-    sh = (
-        docs.select("doc_id", "text")
-        .repartition(n_cores)
-        .select(
-            "doc_id",
-            _shingles_and_sig(k, with_sig=False)("text").alias("ss"),
-        )
-        .filter(F.col("ss.shingles").isNotNull())
-        .select("doc_id", F.col("ss.shingles").alias("s"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    sh = _plan_with_real_stats(sh)
+    sh = _shingle_frame(docs, k, with_sig=False)
     # Gram set size rides along from the array (free — no count
     # aggregation or window needed for |A|).
     grams = sh.select(
@@ -532,7 +547,7 @@ def ngram_jaccard_pairs(
         .filter(F.col("shared") >= F.col("l"))
         .select("a_id", "b_id")
     )
-    return _verify_jaccard(candidates, sh, threshold)
+    return _verify_jaccard(candidates, sh, sh, threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -2042,70 +2057,11 @@ def minhash_lsh_pairs_incremental(
     the same ownership rule as sim_ann_lsh / dedup_containment; the
     bench/sweep/verify harnesses all do this.
     """
-    from pyspark import StorageLevel
-
-    n_cores = new_docs.sparkSession.sparkContext.defaultParallelism
-
-    def _sh(docs):
-        return _plan_with_real_stats(_sh_raw(docs))
-
-    def _sh_raw(docs):
-        return (
-            docs.select("doc_id", "text")
-            .repartition(n_cores)
-            .select("doc_id", _shingles_and_sig(3)("text").alias("ss"))
-            .filter(F.col("ss.shingles").isNotNull())
-            .select(
-                "doc_id",
-                F.col("ss.shingles").alias("shingles"),
-                F.col("ss.sig").alias("sig"),
-            )
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-
-    def _bands(sh):
-        return sh.select(
-            "doc_id",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(LSH_BANDS - 1)),
-                    lambda b: F.struct(
-                        b.alias("band"),
-                        *[
-                            F.element_at(
-                                "sig", b * LSH_ROWS + r + 1
-                            ).alias(f"h{r}")
-                            for r in range(LSH_ROWS)
-                        ],
-                    ),
-                )
-            ).alias("bk"),
-        ).select("doc_id", "bk.*")
-
-    sh_new, sh_idx = _sh(new_docs), _sh(index_docs)
-    band_keys = ["band"] + [f"h{r}" for r in range(LSH_ROWS)]
-    candidates = (
-        _bands(sh_new)
-        .withColumnRenamed("doc_id", "new_id")
-        .join(
-            _bands(sh_idx).withColumnRenamed("doc_id", "match_id"),
-            band_keys,
-        )
-        .select("new_id", "match_id")
-        .distinct()
-    )
-    a = sh_new.select(
-        F.col("doc_id").alias("new_id"), F.col("shingles").alias("sa")
-    )
-    b = sh_idx.select(
-        F.col("doc_id").alias("match_id"), F.col("shingles").alias("sb")
-    )
-    jac = F.size(F.array_intersect("sa", "sb")) / F.size(
-        F.array_union("sa", "sb")
-    )
-    return (
-        candidates.join(a, "new_id")
-        .join(b, "match_id")
-        .select("new_id", "match_id", E.round_to(jac, 6).alias("jaccard"))
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
+    sh_new, sh_idx = _shingle_frame(new_docs), _shingle_frame(index_docs)
+    a = _lsh_bands(sh_new).withColumnRenamed("doc_id", "a_id")
+    b = _lsh_bands(sh_idx).withColumnRenamed("doc_id", "b_id")
+    candidates = a.join(b, _BAND_KEYS).select("a_id", "b_id").distinct()
+    pairs = _verify_jaccard(candidates, sh_new, sh_idx, JACCARD_THRESHOLD)
+    return pairs.select(
+        F.col("a_id").alias("new_id"), F.col("b_id").alias("match_id"), "jaccard"
     )

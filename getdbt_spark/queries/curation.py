@@ -2006,7 +2006,7 @@ def dedup_cluster_recall(spark, sf_dir):
     single-probe, nprobe=2 and (r11) nprobe=3 variants against the
     exact brute-force baseline (``dedup_embedding_cluster``) — one row
     per variant.  The nprobe=3 row decides VERDICT r10 #8: margin
-    analysis (``tools/cluster_recall_margin.py``) showed the residual
+    analysis (SCALE.md, Round-11 changes) showed the residual
     nprobe=2 misses are not selectable boundary vectors on this
     corpus, so uniform depth 3 — not a residual rerank — is the dial
     that clears the ≥0.9 pair-recall gate.
@@ -2058,7 +2058,7 @@ def dedup_cluster_recall(spark, sf_dir):
         # corpus (catching them via (d3-d1)/d1 margins flags ~95% of
         # vectors), so the honest dial is uniform depth 3 — measured
         # 14/14 pair recall at 1.5× nprobe=2's candidate mass
-        # (tools/cluster_recall_margin.py; SCALE.md round-11).
+        # (SCALE.md, Round-11 changes: "Cluster-dedup residual misses").
         # nprobe 2/3 reuse THIS loop's persisted assign (same trainer,
         # same params as the registered variants — one kmeans run per
         # variant instead of two, and no leaked verdict-side cache)

@@ -760,8 +760,9 @@ def _ivfpq_top5(e, subspaces: int = PQ_SUBSPACES, subdims: int = PQ_SUBDIMS,
     EXACT integer distance on the quantized raw vectors — the
     standard production answer when true-neighbor distance gaps sit
     below ADC resolution, at the bounded cost of touching R raw
-    vectors per query.  ``tools/ivfpq_dial.py`` sweeps the dials;
-    ``sim_ann_ivfpq_normalized`` registers the deployment setting.
+    vectors per query.  SCALE.md (Round-11 changes) records the dial
+    sweep; ``sim_ann_ivfpq_normalized`` registers the deployment
+    setting.
     ``coarse_k`` is the IVF cell-count dial: fixed k makes candidate
     mass Σ|cell|² ≈ N²·nprobe/k quadratic in the corpus —
     ``sim_ann_ivfpq_scaled_k`` feeds it k ∝ N for the linear
@@ -1114,7 +1115,7 @@ def sim_ann_ivfpq_normalized(spark, sf_dir):
     """IVFPQ at the DEPLOYMENT dial — the registered answer to the
     demo configuration's honest weakness (``sim_ann_ivfpq``: M=4,
     K=4 = 8 bits/vec, recall@5 0.126 on the clustered fixture).  The
-    round-11 dial sweep (``tools/ivfpq_dial.py``, SCALE.md) decomposed
+    round-11 dial sweep (SCALE.md, Round-11 changes) decomposed
     that miss into three independent factors and this variant turns
     every named fix on:
 
@@ -2800,9 +2801,9 @@ def sim_recall_clustered_skewed(spark, sf_dir):
     degrades to 0.756 (boundary-straddling neighbors are the common
     case), nprobe=2 still clears the 0.8 gate at 0.908, and the
     IVFADC+R deployment stack holds at 0.992 — the nprobe=2/3
-    decision does not flip (SCALE.md round-12;
-    ``tools/clustered_geometry_sweep.py`` carries the depth-3/4 rows
-    and the dedup pair-recall dial on the same geometry).
+    decision does not flip (SCALE.md round-12, which also carries the
+    depth-3/4 rows and the dedup pair-recall dial on the same
+    geometry).
 
     Scale: identical shapes to the geometry-#1 report — one map-side
     corpus derivation, the verified builders unchanged, bounded hit

@@ -185,15 +185,17 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults.
 
-    ``local[N]`` for tests; on a real cluster the caller's
-    spark-submit conf wins for master/memory and we only layer SQL
-    confs on top.
+    ``local[N]`` for tests, N = ``$SPARK_GRAFT_CPUS`` or else the
+    cores this process may run on (its affinity mask); shuffle
+    partitions follow N.  On a real cluster the caller's spark-submit
+    conf wins for master/memory and we only layer SQL confs on top.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    usable = len(os.sched_getaffinity(0))
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(usable))
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
-        shuffle_partitions = int(cpus) if cpus.isdigit() else 32
+        shuffle_partitions = int(cpus) if cpus.isdigit() else usable
 
     builder = (
         SparkSession.builder.appName(app_name)

@@ -4,7 +4,8 @@ The driver's bench records one number per round but has no memory of
 per-query history; this test is the local regression gate the verdict
 asked for. Absolute wall-times are not comparable across boots (the
 same commit measured 26 s one boot and 43 s the next with zero code
-change — host contention), so the gate is two-part:
+change — host contention), so the gate (``bench.gate_verdicts``, the
+one copy bench.py adjudicates with too) is two-part:
 
 1. **Share gate (strict, machine-independent):** each query's share
    of the total suite time must stay within 2× of its baseline share
@@ -26,7 +27,6 @@ from __future__ import annotations
 
 import json
 import os
-import time
 
 import pytest
 
@@ -37,7 +37,6 @@ SF_DIR = "/root/testdata/sf0.01"
 @pytest.mark.slow
 def test_no_per_query_regression_at_sf001(spark):
     import bench
-    from getdbt_spark.queries import QUERIES, load_all
 
     # Timing assertions are meaningless when another workload owns the
     # cores (a concurrent verify sweep skews shares non-uniformly —
@@ -50,104 +49,42 @@ def test_no_per_query_regression_at_sf001(spark):
             "per-query timing gate would flake"
         )
 
-    load_all()
     with open(os.path.join(ROOT, "BASELINE_LOCAL.json")) as fh:
-        base = json.load(fh)["sf0.01"]["queries"]
-
-    names = [q for q in bench.HEADLINE if q in QUERIES]
-    names += [q for q in bench.PIPELINE_HEADLINE if q in QUERIES]
-    names += [q for q in bench.MODEL_HEADLINE if q in QUERIES]
+        recorded = json.load(fh)["sf0.01"]
+    base = recorded["queries"]
+    names = bench.headline_ids()
 
     # Cross-boot host-speed normalizer: the committed baseline recorded
     # the same fixed-CPU canary, so the ratio converts "this host right
     # now" into baseline-host seconds.  Shared-host noise inflates the
     # canary too, widening the absolute budgets instead of failing them
     # (VERDICT r6 #3 — the gate flaked under a concurrent survey sweep).
-    with open(os.path.join(ROOT, "BASELINE_LOCAL.json")) as fh2:
-        base_canary = json.load(fh2)["sf0.01"]["canary_cpu_sec"]
-    canary_ratio = max(1.0, bench._host_canary(scale=0.25) / (base_canary * 0.25))
+    canary_ratio = max(
+        1.0,
+        bench._host_canary(scale=0.25) / (recorded["canary_cpu_sec"] * 0.25),
+    )
 
     bench._warmup(spark, SF_DIR)
 
-    # First pass: single measurement per query (cheap).
+    # First pass: single measurement per query (cheap); bench's
+    # canary-gated re-measure then retries only the flagged queries.
     took: dict[str, float] = {
         name: bench.time_once(spark, SF_DIR, name) for name in names
     }
+    verdicts, _ = bench.remeasure_flagged(
+        spark, SF_DIR, took, base, canary_ratio, bench._spark_canary(spark),
+        wall_s=120,
+    )
 
-    gated = [n for n in names if n in base]
-
-    def _violations() -> list[str]:
-        base_total = sum(base[n] for n in gated)
-        now_total = sum(took[n] for n in gated)
-        slow: list[str] = []
-        for name in gated:
-            base_share = base[name] / base_total
-            now_share = took[name] / now_total
-            share_budget = max(2.0 * base_share, base_share + 0.02)
-            abs_budget = canary_ratio * max(4.0 * base[name], base[name] + 2.0)
-            if now_share > share_budget and took[name] > base[name] + 0.5:
-                slow.append(name)
-            elif took[name] > abs_budget:
-                slow.append(name)
-        return slow
-
-    # Canary-gated min-of-N ONLY for first-pass violators: a transient
-    # scheduler hiccup on one query can't fail the gate, and the
-    # quiet-host fast path stays a single sweep (the r4 lesson —
-    # iterative queries show 2-3x cold-start variance that a
-    # re-measure erases).  The retry reps are additionally admitted
-    # only while the parallel spark canary reads healthy: this VM
-    # class shows multi-minute collapse windows where EVERY Spark job
-    # runs 10-100× slow with idle CPU (r13 measurement: dedup_exact
-    # 29.16 s vs 0.11 s steady state, full recovery minutes later) —
-    # a single immediate retry lands inside the same window and the
-    # gate flags untouched queries (observed twice at r13 HEAD:
-    # join_date_spine 2.95 s min-of-two vs 0.46 s healthy).  A true
-    # plan regression reproduces on a healthy host; a collapse does
-    # not.  Bounded: ≤3 reps per violator, ≤120 s total extra.
-    retry_t0 = time.perf_counter()
-    best_canary = bench._spark_canary(spark)
-    for name in _violations():
-        reps = 0
-        # collapse-waits do NOT consume the rep budget (the wall bound
-        # caps them): a slow canary otherwise eats every retry and the
-        # violator keeps its in-window reading (observed: untouched
-        # model_streams_daily_v4 flagged at 2.43 s min-of-4 while its
-        # post-warm steady state is ~1.2 s — the DAG path needs ~2 warm
-        # reps before codegen settles, so the budget must buy real reps)
-        while reps < 3:
-            if time.perf_counter() - retry_t0 > 120:
-                break
-            if name not in _violations():
-                break
-            c = bench._spark_canary(spark)
-            best_canary = min(best_canary, c)
-            if c > 2.5 * best_canary:
-                time.sleep(8)  # mid-collapse: a rep would time the host
-                continue
-            took[name] = min(took[name], bench.time_once(spark, SF_DIR, name))
-            reps += 1
-
-    base_total = sum(base[n] for n in gated)
-    now_total = sum(took[n] for n in gated)
-
-    slow: list[str] = []
-    for name in gated:
-        base_share = base[name] / base_total
-        now_share = took[name] / now_total
-        share_budget = max(2.0 * base_share, base_share + 0.02)
-        abs_budget = canary_ratio * max(4.0 * base[name], base[name] + 2.0)
-        if now_share > share_budget and took[name] > base[name] + 0.5:
-            slow.append(
-                f"{name}: share {now_share:.1%} > budget {share_budget:.1%} "
-                f"(baseline share {base_share:.1%}; "
-                f"{took[name]:.2f}s vs baseline {base[name]:.2f}s)"
-            )
-        elif took[name] > abs_budget:
-            slow.append(
-                f"{name}: {took[name]:.2f}s > absolute budget {abs_budget:.2f}s "
-                f"(baseline {base[name]:.2f}s)"
-            )
+    base_total = sum(base[n] for n in verdicts)
+    now_total = sum(took[n] for n in verdicts)
+    slow = [
+        f"{name}: {took[name]:.2f}s vs baseline {base[name]:.2f}s "
+        f"(share {took[name] / now_total:.1%} vs baseline "
+        f"{base[name] / base_total:.1%}; canary ratio {canary_ratio:.2f})"
+        for name, ok in verdicts.items()
+        if not ok
+    ]
     assert not slow, "per-query bench regression:\n" + "\n".join(slow)
 
 

@@ -529,7 +529,7 @@ def test_cluster_recall_invariants_and_multiprobe_recovery(spark):
 
 def test_cluster_recall_nprobe3_clears_gate_on_driver_corpus(spark):
     """VERDICT r10 #8's decision gate: on the sf0.01 driver corpus the
-    margin analysis (tools/cluster_recall_margin.py) ruled OUT a
+    margin analysis (SCALE.md, Round-11 changes) ruled OUT a
     selective residual rerank — the nprobe=2 misses' (d3−d1)/d1
     margins sit inside the bulk of an isotropic margin distribution,
     so flagging them flags ~95% of vectors.  Uniform nprobe=3 is the

@@ -125,6 +125,40 @@ def test_configure_turns_debugging_off_on_a_foreign_session(tmp_path):
     assert "debugging False" in proc.stdout, proc.stdout + proc.stderr[-2000:]
 
 
+def test_default_cores_follow_the_affinity_mask(tmp_path):
+    """With ``SPARK_GRAFT_CPUS`` unset, ``get_spark`` sizes ``local[N]``
+    and the shuffle partitions to the cores the process may run on, not
+    to a fixed count: ``local[32]`` on a 4-core host ran warm
+    ``dedup_cluster_canonical`` in 7.35 s against 4.13 s at ``local[4]``."""
+    code = (
+        "import os\n"
+        "from getdbt_spark.session import get_spark\n"
+        "spark = get_spark()\n"
+        "print('cores', len(os.sched_getaffinity(0)),"
+        " spark.sparkContext.defaultParallelism,"
+        " spark.conf.get('spark.sql.shuffle.partitions'))\n"
+        "spark.stop()\n"
+    )
+    env = _env_without_repo()
+    env.pop("SPARK_GRAFT_CPUS", None)
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in (REPO, env.get("PYTHONPATH")) if p
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=tmp_path,
+        capture_output=True,
+        text=True,
+        timeout=300,
+        env=env,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    line = next(ln for ln in proc.stdout.splitlines() if ln.startswith("cores"))
+    usable, parallelism, partitions = line.split()[1:]
+    assert parallelism == usable, line
+    assert partitions == usable, line
+
+
 # Static confs ``get_spark`` sets in its builder: ``conf.set`` raises
 # for them, which ``configure()``'s per-key ``except`` would swallow.
 STATIC_CONFS = (
