@@ -19,9 +19,6 @@ so model builders never hand-roll the translation:
                          deterministic ordered concat agg (``:219``).
 - ``date_spine`` / ``timestamp_spine``  BQ GENERATE_DATE_ARRAY /
                          GENERATE_TIMESTAMP_ARRAY (inclusive bounds).
-- ``union_by_position``  UNION ALL branches with untyped NULL pad
-                         columns — BigQuery infers the supertype across
-                         branches, Spark errors on NullType; align here.
 
 All helpers stay JVM-side (pure Column expressions — no Python UDFs),
 so they inline into whole-stage codegen.
@@ -232,46 +229,6 @@ def date_spine(start: str, end: Column | str, step_days: int = 7) -> Column:
 def timestamp_spine(begin: Column | str, end: Column | str, minutes: int = 1) -> Column:
     """GENERATE_TIMESTAMP_ARRAY(b, e, INTERVAL n MINUTE), inclusive bounds."""
     return F.sequence(_col(begin), _col(end), F.expr(f"interval {minutes} minutes"))
-
-
-def union_by_position(*dfs: DataFrame) -> DataFrame:
-    """UNION ALL by position with NullType-pad alignment.
-
-    BigQuery infers a common supertype across branches; Spark refuses
-    untyped NullType columns in some paths.  For each column position,
-    pick the first non-NullType dtype among branches and cast every
-    branch to it, then fold unionAll.
-    """
-    if not dfs:
-        raise ValueError("union_by_position needs at least one DataFrame")
-    width = len(dfs[0].columns)
-    for df in dfs:
-        if len(df.columns) != width:
-            raise ValueError(
-                f"branch width mismatch: {len(df.columns)} vs {width}"
-            )
-    # Resolve per-position target type: first branch whose dtype isn't void.
-    target_types: list[str] = []
-    for i in range(width):
-        dtype = "string"
-        for df in dfs:
-            dt = df.dtypes[i][1]
-            if dt != "void":
-                dtype = dt
-                break
-        target_types.append(dtype)
-    out_names = dfs[0].columns
-    aligned = []
-    for df in dfs:
-        cols = [
-            F.col(df.columns[i]).cast(target_types[i]).alias(out_names[i])
-            for i in range(width)
-        ]
-        aligned.append(df.select(*cols))
-    result = aligned[0]
-    for df in aligned[1:]:
-        result = result.unionAll(df)
-    return result
 
 
 def null_lit(dtype: str) -> Column:

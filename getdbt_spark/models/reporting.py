@@ -22,15 +22,19 @@ Engine notes:
   missing-comma alias ``poms_info.season_id channel`` (season_id is
   aliased to ``channel``, shadowing the real channel column) and the
   partially-shadowed CASE in the dashboard bucketizer.
-- UNION branches carry typed NULL pads via ``union_by_position``
-  (BigQuery infers supertypes; Spark must be told — SURVEY §2.6).
+- Each UNION ALL stack declares its row once (``STREAMING_INFO_ROW``,
+  ``DASHBOARD_ROW``): BigQuery infers the supertypes, Spark must be
+  told (SURVEY §2.6).  ``_select_row`` casts every branch to the
+  declared types and pads what a branch does not fill with typed
+  NULLs, so Spark's own ``unionAll`` aligns the branches by position.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+import functools
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import (
@@ -40,7 +44,6 @@ from ..functions import (
     null_lit,
     round_to,
     safe_divide,
-    union_by_position,
 )
 from ..registry import model
 
@@ -48,6 +51,70 @@ VERTAAL = "360_graden_rapportage_vertaaltabel_upload_20_21"
 SPINE_START = "1995-01-02"  # Monday of the fixture epoch (ref: '2018-12-31')
 REPORTING_YEAR_MIN = 2019  # extract(isoyear from date) >= 2019 filters —
 # the fixture's advantedge dates (2024) all pass, as the reference's do.
+
+# The long-format rows of the two UNION ALL stacks, as ordered
+# (name, type) pairs (`_vodstreaming.sql:68-135`,
+# `_dashboard_channel_weekly.sql:40-258`).
+STREAMING_INFO_ROW = (
+    ("evt_mid", "string"),
+    ("series_ref", "string"),
+    ("series_title", "string"),
+    ("evt_programme", "string"),
+    ("evt_weeknr", "int"),
+    ("evt_year", "int"),
+    ("streaming_duration_sec", "double"),
+    ("streaming_playcount_over_30s", "bigint"),
+    ("streaming_playcount_over_30s_broadcastsonly", "bigint"),
+    ("streaming_time_spent_sec", "bigint"),
+    ("streaming_kdh_for_new_released_episode", "double"),
+    ("mid_counts_for_new_release", "string"),
+    ("streaming_kdh_per_episode", "double"),
+    ("has_had_linear_release", "int"),
+    ("has_scheduled_lineair_release", "int"),
+    ("vod_only_release", "int"),
+)
+DASHBOARD_ROW = (
+    ("Naam", "string"),
+    ("Net", "string"),
+    ("Omroep", "string"),
+    ("CCC", "string"),
+    ("weekdate", "date"),
+    ("weeknr", "int"),
+    ("year", "int"),
+    ("has_intekening", "int"),
+    ("is_tv_week", "int"),
+    ("new_releases", "bigint"),
+    ("reporting_channel", "string"),
+    ("n_items_per_week", "bigint"),
+    ("media_item_type", "string"),
+    ("weekly_reach_per_week", "bigint"),
+    ("daily_reach_per_week", "bigint"),
+    ("visits_per_week", "bigint"),
+    ("engagement_per_week", "double"),
+    ("views_per_week", "bigint"),
+    ("hours_watched", "double"),
+    ("video_kdh_per_week", "double"),
+    ("video_kdh_per_release", "double"),
+)
+
+
+def _select_row(df: DataFrame, row, **exprs: Column) -> DataFrame:
+    """``df`` as one branch of a declared row: every declared column in
+    order, cast to its declared type — from ``exprs``, else ``df``'s
+    own column of that name, else a typed NULL.  Branches selected this
+    way stack by position with ``unionAll``."""
+    unknown = exprs.keys() - dict(row).keys()
+    if unknown:
+        raise ValueError(f"columns not in the declared row: {sorted(unknown)}")
+    own = set(df.columns)
+    return df.select(*[
+        (
+            exprs[name].cast(dtype) if name in exprs
+            else F.col(name).cast(dtype) if name in own
+            else null_lit(dtype)
+        ).alias(name)
+        for name, dtype in row
+    ])
 
 
 def _spine_seq(ctx):
@@ -89,10 +156,30 @@ def _with_spine(ctx, df: DataFrame) -> DataFrame:
     return df.withColumn("weekdate", F.explode(_spine_seq(ctx)))
 
 
-def _week_cols(df: DataFrame, col: str = "weekdate") -> DataFrame:
-    return df.withColumn("weeknr", iso_week(col)).withColumn(
-        "year", iso_year(col)
+def _week_cols(df: DataFrame) -> DataFrame:
+    return df.withColumn("weeknr", iso_week("weekdate")).withColumn(
+        "year", iso_year("weekdate")
     )
+
+
+def _spine_join(
+    ctx, facts: DataFrame, year: str, week: str, series: str
+) -> DataFrame:
+    """The tv and vod marts' shape (`integral_reporting_tvbroadcasts
+    .sql`, `_vodstreaming.sql:138-158`): weekly spine LEFT JOIN facts on
+    ISO (year, week), LEFT JOIN the vertaaltabel on the series id.
+    Both right sides are catalog-bounded (per-(series, week) aggregates
+    and the title table), so both joins broadcast."""
+    vt = ctx.ref(VERTAAL)
+    spine = _week_cols(_spine(ctx)).withColumnsRenamed(
+        {"weeknr": "sp_weeknr", "year": "sp_year"}
+    )
+    return spine.join(
+        F.broadcast(facts),
+        (facts[year] == spine["sp_year"])
+        & (facts[week] == spine["sp_weeknr"]),
+        "left",
+    ).join(F.broadcast(vt), vt["Serie_mid"] == facts[series], "left")
 
 
 def _quintly_mart(ctx, quintly_name: str, id_col: str, out_cols):
@@ -283,7 +370,6 @@ def _tv_filtered(adv: DataFrame) -> DataFrame:
 def integral_reporting_tvbroadcasts(ctx):
     adv = ctx.ref("advantedge_tv_viewer_density_per_show_daily_v1")
     dim = ctx.ref("dim_poms_episodes")
-    vt = ctx.ref(VERTAAL)
 
     tv_ep = (
         _tv_filtered(adv)
@@ -329,22 +415,8 @@ def integral_reporting_tvbroadcasts(ctx):
         )
     )
 
-    spine = _week_cols(_spine(ctx)).withColumnsRenamed(
-        {"weeknr": "sp_weeknr", "year": "sp_year"}
-    )
     return (
-        spine.join(
-            # per-(series, week) aggregates — catalog-bounded.
-            F.broadcast(tv_title),
-            (spine["sp_weeknr"] == tv_title["weeknr"])
-            & (tv_title["year"] == spine["sp_year"]),
-            "left",
-        )
-        .join(
-            F.broadcast(vt),
-            vt["Serie_mid"] == tv_title["poms_series_id"],
-            "left",
-        )
+        _spine_join(ctx, tv_title, "year", "weeknr", "poms_series_id")
         .select(
             "Naam",
             "Net",
@@ -382,7 +454,6 @@ def integral_reporting_vodstreaming(ctx):
     pf = ctx.ref("poms_flattened")
     streams = ctx.ref("atinternet_smarttag_streams_daily_v4")
     dim = ctx.ref("dim_poms_episodes")
-    vt = ctx.ref(VERTAAL)
 
     # new_tv_eps (:1-17).  `poms_info.season_id channel` replicated as
     # written: season_id is ALIASED to channel (missing-comma quirk).
@@ -467,7 +538,7 @@ def integral_reporting_vodstreaming(ctx):
     )
 
     # streaming_info (:68-135): release-week branch UNION streamed-week
-    # branch, typed NULL pads aligned by union_by_position.
+    # branch, each selected as STREAMING_INFO_ROW.
     # Only the release flags/dates are consumed from new_releases here
     # (the reference reads poms.* from its own dim join); projecting
     # them away also removes the dim↔new_releases self-join ambiguity.
@@ -496,11 +567,6 @@ def integral_reporting_vodstreaming(ctx):
         iso_year("first_broadcast_date_res").alias("evt_year"),
     ).agg(
         F.avg("mtd_duration_in_sec").alias("streaming_duration_sec"),
-        F.first(null_lit("bigint")).alias("streaming_playcount_over_30s"),
-        F.first(null_lit("bigint")).alias(
-            "streaming_playcount_over_30s_broadcastsonly"
-        ),
-        F.first(null_lit("bigint")).alias("streaming_time_spent_sec"),
         safe_divide(
             F.sum(
                 F.when(in_28, F.col("evt_playback_time_total_in_sec"))
@@ -513,7 +579,6 @@ def integral_reporting_vodstreaming(ctx):
         F.max(F.when(in_28, F.col("evt_mid"))).alias(
             "mid_counts_for_new_release"
         ),
-        F.first(null_lit("double")).alias("streaming_kdh_per_episode"),
         F.max(
             F.when(F.col("has_had_linear_release") == 1, 1).otherwise(0)
         ).alias("has_had_linear_release"),
@@ -556,36 +621,19 @@ def integral_reporting_vodstreaming(ctx):
         F.sum("evt_playback_time_total_in_sec").alias(
             "streaming_time_spent_sec"
         ),
-        F.first(null_lit("double")).alias(
-            "streaming_kdh_for_new_released_episode"
-        ),
-        F.first(null_lit("string")).alias("mid_counts_for_new_release"),
         safe_divide(
             F.sum("evt_playback_time_total_in_sec"),
             F.avg("mtd_duration_in_sec"),
         ).alias("streaming_kdh_per_episode"),
-        F.first(null_lit("int")).alias("has_had_linear_release"),
-        F.first(null_lit("int")).alias("has_scheduled_lineair_release"),
-        F.first(null_lit("int")).alias("vod_only_release"),
     )
-    streaming_info = union_by_position(branch1, branch2)
+    streaming_info = _select_row(branch1, STREAMING_INFO_ROW).unionAll(
+        _select_row(branch2, STREAMING_INFO_ROW)
+    )
 
     # final (:138-158)
-    spine = _week_cols(_spine(ctx)).withColumnsRenamed(
-        {"weeknr": "sp_weeknr", "year": "sp_year"}
+    joined = _spine_join(
+        ctx, streaming_info, "evt_year", "evt_weeknr", "series_ref"
     )
-    joined = spine.join(
-        # per-(series, week) aggregates — catalog-bounded.
-        F.broadcast(streaming_info),
-        (streaming_info["evt_year"] == spine["sp_year"])
-        & (streaming_info["evt_weeknr"] == spine["sp_weeknr"]),
-        "left",
-    ).join(
-        F.broadcast(vt),
-        vt["Serie_mid"] == streaming_info["series_ref"],
-        "left",
-    )
-
     return (
         joined.groupBy(
             F.coalesce("Stream_Titel", "series_title").alias(
@@ -670,8 +718,10 @@ def integral_reporting_vodstreaming(ctx):
 def integral_reporting_dashboard_channel_weekly(ctx):
     """`integral_reporting_dashboard_channel_weekly.sql` (282 lines):
     7-branch long-format channel stacking + threshold cleaning +
-    per-title window analytics.  UNION column names/types follow the
-    FIRST branch (BigQuery positional semantics via union_by_position).
+    per-title window analytics.  Every branch is selected as
+    ``DASHBOARD_ROW``, whose declared types stand in for BigQuery's
+    inferred supertypes, and Spark's ``unionAll`` aligns the branches
+    by position.
 
     Every mart shares lineage with ``basis`` (all derive from the
     vertaaltabel), so each branch projects its right side to uniquely
@@ -724,9 +774,7 @@ def integral_reporting_dashboard_channel_weekly(ctx):
         )
     )
 
-    has_intek = F.when(F.col("Naam").isNotNull(), 1).otherwise(0)
-
-    def _social(mart, key, metric_cols, out_exprs):
+    def _social(mart, key, metric_cols, **exprs):
         """fb/ig/yt/sites/apps branch (:40-185): basis LEFT JOIN mart on
         (id, weekdate); mart projected to j_* names first."""
         right = mart.select(
@@ -743,18 +791,11 @@ def integral_reporting_dashboard_channel_weekly(ctx):
             & (basis["weekdate"] == F.col("j_weekdate")),
             "left",
         )
-        return j.select(
-            "Naam",
-            "Net",
-            "Omroep",
-            "CCC",
-            basis["weekdate"],
-            "weeknr",
-            "year",
-            has_intek.alias("has_intekening"),
-            null_lit("int").alias("is_tv_week"),
-            null_lit("bigint").alias("new_releases"),
-            *out_exprs,
+        return _select_row(
+            j,
+            DASHBOARD_ROW,
+            has_intekening=F.when(F.col("Naam").isNotNull(), 1).otherwise(0),
+            **exprs,
         )
 
     def _j(c):
@@ -763,36 +804,20 @@ def integral_reporting_dashboard_channel_weekly(ctx):
     b_fb = _social(
         fb, "QL_FB_ID",
         ["fb_number_of_posts", "fb_reach_per_week", "fb_engagement_per_week"],
-        [
-            F.lit("facebook").alias("reporting_channel"),
-            _j("fb_number_of_posts").alias("n_items_per_week"),
-            F.lit("posts").alias("media_item_type"),
-            _j("fb_reach_per_week").alias("weekly_reach_per_week"),
-            null_lit("bigint").alias("daily_reach_per_week"),
-            null_lit("bigint").alias("visits_per_week"),
-            _j("fb_engagement_per_week").alias("engagement_per_week"),
-            null_lit("bigint").alias("views_per_week"),
-            null_lit("double").alias("hours_watched"),
-            null_lit("double").alias("video_kdh_per_week"),
-            null_lit("double").alias("video_kdh_per_release"),
-        ],
+        reporting_channel=F.lit("facebook"),
+        n_items_per_week=_j("fb_number_of_posts"),
+        media_item_type=F.lit("posts"),
+        weekly_reach_per_week=_j("fb_reach_per_week"),
+        engagement_per_week=_j("fb_engagement_per_week"),
     )
     b_ig = _social(
         ig, "QL_IG_ID",
         ["ig_number_of_posts", "ig_reach_per_week", "ig_engagement_per_week"],
-        [
-            F.lit("instagram").alias("reporting_channel"),
-            _j("ig_number_of_posts").alias("n_items_per_week"),
-            F.lit("posts").alias("media_item_type"),
-            _j("ig_reach_per_week").alias("weekly_reach_per_week"),
-            null_lit("bigint").alias("daily_reach_per_week"),
-            null_lit("bigint").alias("visits_per_week"),
-            _j("ig_engagement_per_week").alias("engagement_per_week"),
-            null_lit("bigint").alias("views_per_week"),
-            null_lit("double").alias("hours_watched"),
-            null_lit("double").alias("video_kdh_per_week"),
-            null_lit("double").alias("video_kdh_per_release"),
-        ],
+        reporting_channel=F.lit("instagram"),
+        n_items_per_week=_j("ig_number_of_posts"),
+        media_item_type=F.lit("posts"),
+        weekly_reach_per_week=_j("ig_reach_per_week"),
+        engagement_per_week=_j("ig_engagement_per_week"),
     )
 
     def _online_branch(channel, prefix):
@@ -800,19 +825,10 @@ def integral_reporting_dashboard_channel_weekly(ctx):
             online, "ATI_Titel",
             [f"{prefix}_weekly_visitors", f"{prefix}_daily_visitors",
              f"{prefix}_visits"],
-            [
-                F.lit(channel).alias("reporting_channel"),
-                null_lit("bigint").alias("n_items_per_week"),
-                null_lit("string").alias("media_item_type"),
-                _j(f"{prefix}_weekly_visitors").alias("weekly_reach_per_week"),
-                _j(f"{prefix}_daily_visitors").alias("daily_reach_per_week"),
-                _j(f"{prefix}_visits").alias("visits_per_week"),
-                null_lit("double").alias("engagement_per_week"),
-                null_lit("bigint").alias("views_per_week"),
-                null_lit("double").alias("hours_watched"),
-                null_lit("double").alias("video_kdh_per_week"),
-                null_lit("double").alias("video_kdh_per_release"),
-            ],
+            reporting_channel=F.lit(channel),
+            weekly_reach_per_week=_j(f"{prefix}_weekly_visitors"),
+            daily_reach_per_week=_j(f"{prefix}_daily_visitors"),
+            visits_per_week=_j(f"{prefix}_visits"),
         )
 
     b_sites = _online_branch("sites", "site")
@@ -823,21 +839,13 @@ def integral_reporting_dashboard_channel_weekly(ctx):
         ["yt_number_of_videos", "yt_engagement_per_week",
          "yt_views_per_week", "yt_time_spent_per_week_min",
          "yt_kdh_per_week"],
-        [
-            F.lit("youtube").alias("reporting_channel"),
-            _j("yt_number_of_videos").alias("n_items_per_week"),
-            F.lit("videos").alias("media_item_type"),
-            null_lit("bigint").alias("weekly_reach_per_week"),
-            null_lit("bigint").alias("daily_reach_per_week"),
-            null_lit("bigint").alias("visits_per_week"),
-            _j("yt_engagement_per_week").alias("engagement_per_week"),
-            _j("yt_views_per_week").alias("views_per_week"),
-            round_to(_j("yt_time_spent_per_week_min") / 60, 2).alias(
-                "hours_watched"
-            ),
-            round_to(_j("yt_kdh_per_week"), 0).alias("video_kdh_per_week"),
-            null_lit("double").alias("video_kdh_per_release"),
-        ],
+        reporting_channel=F.lit("youtube"),
+        n_items_per_week=_j("yt_number_of_videos"),
+        media_item_type=F.lit("videos"),
+        engagement_per_week=_j("yt_engagement_per_week"),
+        views_per_week=_j("yt_views_per_week"),
+        hours_watched=round_to(_j("yt_time_spent_per_week_min") / 60, 2),
+        video_kdh_per_week=round_to(_j("yt_kdh_per_week"), 0),
     )
 
     # lineair branch (:188-216): tv is the LEFT side; tv projected to
@@ -866,32 +874,27 @@ def integral_reporting_dashboard_channel_weekly(ctx):
         & (F.col("b_weekdate") == F.col("tvj_weekdate")),
         "left",
     )
-    b_tv = j_tv.select(
-        F.coalesce(F.col("b_Naam"), F.col("tvj_series_title")).alias("Naam"),
-        F.col("b_Net").alias("Net"),
-        F.col("b_Omroep").alias("Omroep"),
-        F.col("b_CCC").alias("CCC"),
-        F.coalesce(F.col("b_weekdate"), F.col("tvj_weekdate")).alias("weekdate"),
-        F.coalesce(F.col("b_weeknr"), F.col("tvj_weeknr")).alias("weeknr"),
-        F.coalesce(F.col("b_year"), F.col("tvj_year")).alias("year"),
-        F.when(F.col("b_Naam").isNotNull(), 1).otherwise(0).alias(
-            "has_intekening"
-        ),
-        F.col("tvj_broadcast_week").alias("is_tv_week"),
-        F.col("tvj_n_broadcasts").alias("new_releases"),
-        F.lit("lineair").alias("reporting_channel"),
-        F.col("tvj_n_broadcasts").alias("n_items_per_week"),
-        F.lit("videos").alias("media_item_type"),
-        null_lit("bigint").alias("weekly_reach_per_week"),
-        null_lit("bigint").alias("daily_reach_per_week"),
-        null_lit("bigint").alias("visits_per_week"),
-        null_lit("double").alias("engagement_per_week"),
-        null_lit("bigint").alias("views_per_week"),
-        round_to(F.col("tvj_time_spent_min") / 60, 2).alias("hours_watched"),
-        round_to(F.col("tvj_sum_kdh"), 0).alias("video_kdh_per_week"),
-        round_to(
+    b_tv = _select_row(
+        j_tv,
+        DASHBOARD_ROW,
+        Naam=F.coalesce(F.col("b_Naam"), F.col("tvj_series_title")),
+        Net=F.col("b_Net"),
+        Omroep=F.col("b_Omroep"),
+        CCC=F.col("b_CCC"),
+        weekdate=F.coalesce(F.col("b_weekdate"), F.col("tvj_weekdate")),
+        weeknr=F.coalesce(F.col("b_weeknr"), F.col("tvj_weeknr")),
+        year=F.coalesce(F.col("b_year"), F.col("tvj_year")),
+        has_intekening=F.when(F.col("b_Naam").isNotNull(), 1).otherwise(0),
+        is_tv_week=F.col("tvj_broadcast_week"),
+        new_releases=F.col("tvj_n_broadcasts"),
+        reporting_channel=F.lit("lineair"),
+        n_items_per_week=F.col("tvj_n_broadcasts"),
+        media_item_type=F.lit("videos"),
+        hours_watched=round_to(F.col("tvj_time_spent_min") / 60, 2),
+        video_kdh_per_week=round_to(F.col("tvj_sum_kdh"), 0),
+        video_kdh_per_release=round_to(
             safe_divide(F.col("tvj_sum_kdh"), F.col("tvj_n_broadcasts")), 0
-        ).alias("video_kdh_per_release"),
+        ),
     )
 
     # VOD branch (:218-258): inner join the cleaning filter, grouped.
@@ -920,44 +923,40 @@ def integral_reporting_dashboard_channel_weekly(ctx):
         & (F.col("b_weekdate") == F.col("vj_weekdate")),
         "left",
     )
-    b_vod = (
-        j_vod.groupBy(
-            F.coalesce(F.col("b_Naam"), F.col("vj_series_title")).alias("Naam"),
-            F.col("b_Net").alias("Net"),
-            F.col("b_Omroep").alias("Omroep"),
-            F.col("b_CCC").alias("CCC"),
-            F.coalesce(F.col("b_weekdate"), F.col("vj_weekdate")).alias(
-                "weekdate"
-            ),
-            F.coalesce(F.col("b_weeknr"), F.col("vj_weeknr")).alias("weeknr"),
-            F.coalesce(F.col("b_year"), F.col("vj_year")).alias("year"),
-        )
-        .agg(
-            F.max(F.when(F.col("b_Naam").isNotNull(), 1).otherwise(0)).alias(
-                "has_intekening"
-            ),
-            F.first(null_lit("int")).alias("is_tv_week"),
-            F.first(null_lit("bigint")).alias("new_releases"),
-            F.first(F.lit("VOD")).alias("reporting_channel"),
-            F.sum("vj_n_eps").alias("n_items_per_week"),
-            F.first(F.lit("videos")).alias("media_item_type"),
-            F.first(null_lit("bigint")).alias("weekly_reach_per_week"),
-            F.first(null_lit("bigint")).alias("daily_reach_per_week"),
-            F.first(null_lit("bigint")).alias("visits_per_week"),
-            F.first(null_lit("double")).alias("engagement_per_week"),
-            F.sum("vj_playcount").alias("views_per_week"),
-            round_to(F.sum(F.col("vj_time_spent_sec") / 60 / 60), 2).alias(
-                "hours_watched"
-            ),
-            round_to(F.sum("vj_sum_kdh"), 0).alias("video_kdh_per_week"),
-            round_to(
-                safe_divide(F.sum("vj_kdh_new"), F.sum("vj_n_new_eps")), 0
-            ).alias("video_kdh_per_release"),
-        )
-        .select(*b_fb.columns)
+    vod_week = j_vod.groupBy(
+        F.coalesce(F.col("b_Naam"), F.col("vj_series_title")).alias("Naam"),
+        F.col("b_Net").alias("Net"),
+        F.col("b_Omroep").alias("Omroep"),
+        F.col("b_CCC").alias("CCC"),
+        F.coalesce(F.col("b_weekdate"), F.col("vj_weekdate")).alias(
+            "weekdate"
+        ),
+        F.coalesce(F.col("b_weeknr"), F.col("vj_weeknr")).alias("weeknr"),
+        F.coalesce(F.col("b_year"), F.col("vj_year")).alias("year"),
+    ).agg(
+        F.max(F.when(F.col("b_Naam").isNotNull(), 1).otherwise(0)).alias(
+            "has_intekening"
+        ),
+        F.sum("vj_n_eps").alias("n_items_per_week"),
+        F.sum("vj_playcount").alias("views_per_week"),
+        round_to(F.sum(F.col("vj_time_spent_sec") / 60 / 60), 2).alias(
+            "hours_watched"
+        ),
+        round_to(F.sum("vj_sum_kdh"), 0).alias("video_kdh_per_week"),
+        round_to(
+            safe_divide(F.sum("vj_kdh_new"), F.sum("vj_n_new_eps")), 0
+        ).alias("video_kdh_per_release"),
+    )
+    b_vod = _select_row(
+        vod_week,
+        DASHBOARD_ROW,
+        reporting_channel=F.lit("VOD"),
+        media_item_type=F.lit("videos"),
     )
 
-    stacked = union_by_position(b_fb, b_ig, b_sites, b_apps, b_yt, b_tv, b_vod)
+    stacked = functools.reduce(
+        DataFrame.unionAll, [b_fb, b_ig, b_sites, b_apps, b_yt, b_tv, b_vod]
+    )
 
     # final window analytics (:262-281)
     w_title_week = Window.partitionBy("weekdate", "Naam")
@@ -975,7 +974,7 @@ def integral_reporting_dashboard_channel_weekly(ctx):
 
     keep = [
         c
-        for c in stacked.columns
+        for c, _ in DASHBOARD_ROW
         if c not in ("is_tv_week", "new_releases", "has_intekening")
     ]
     # Two-stage window evaluation: every Naam-partitioned window runs
@@ -986,7 +985,7 @@ def integral_reporting_dashboard_channel_weekly(ctx):
     # exchange.  One select would let the (weekdate, Naam) group
     # evaluate first and shuffle the stacked table twice.
     staged = stacked.select(
-        *stacked.columns,
+        "*",
         F.sum(F.when(lineair, F.col("new_releases")).otherwise(0))
         .over(w_title)
         .alias("n_total_tv_broadcasts"),

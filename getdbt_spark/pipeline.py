@@ -127,8 +127,9 @@ JACCARD_THRESHOLD = 0.6
 # Embedding near-duplicate cut: a pair is an edge when its cosine,
 # rounded to 1e-6, is >= this (``cosine_edges``; the oracles read it).
 COSINE_TAU = 0.45
-
-_U32 = (1 << 32) - 1
+# Width of the zero-padded byte matrix the shingle kernel hashes each
+# token over; longer tokens share their prefix's hash bucket.
+TOKEN_BYTES = 24
 
 
 def _mix64(v: "np.ndarray") -> "np.ndarray":
@@ -147,7 +148,7 @@ def _mix64(v: "np.ndarray") -> "np.ndarray":
     return v
 
 
-def _shingles_and_sig(k: int = 3, max_token_bytes: int = 24, with_sig: bool = True):
+def _shingles_and_sig(k: int = 3, with_sig: bool = True):
     """Arrow-batched kernel: raw text → (shingles, minhash sig) per doc.
 
     One vectorized pass does ALL the per-doc work — tokenize, hash
@@ -161,7 +162,7 @@ def _shingles_and_sig(k: int = 3, max_token_bytes: int = 24, with_sig: bool = Tr
     ~3 s for a JVM ``transform(w, xxhash64)`` token-hash pass; this
     Arrow batch runs the same math in well under a second.
 
-    Token hashing is FNV-style over a zero-padded ``max_token_bytes``-
+    Token hashing is FNV-style over a zero-padded ``TOKEN_BYTES``-
     wide byte matrix — fully vectorized (one multiply-XOR per byte
     position over the whole batch), deterministic across executors
     (no Python string-hash salt), tokens longer than the width share a
@@ -201,10 +202,10 @@ def _shingles_and_sig(k: int = 3, max_token_bytes: int = 24, with_sig: bool = Tr
         flat = [tok for lst in tok_lists for tok in lst]
         if flat:
             m = np.frombuffer(
-                np.array(flat, dtype=f"S{max_token_bytes}"), dtype=np.uint8
-            ).reshape(len(flat), max_token_bytes)
+                np.array(flat, dtype=f"S{TOKEN_BYTES}"), dtype=np.uint8
+            ).reshape(len(flat), TOKEN_BYTES)
             h = np.zeros(len(flat), dtype=np.uint64)
-            for pos in range(max_token_bytes):
+            for pos in range(TOKEN_BYTES):
                 h = h * fnv ^ m[:, pos].astype(np.uint64)
         else:
             h = np.zeros(0, dtype=np.uint64)

@@ -55,7 +55,6 @@ from . import query
 SPAN_K = 8  # anchor gram width (tokens) for substring-span dedup
 DSIR_BUCKETS = 1024
 FEATURE_BUCKETS = 64
-MIX_ALPHA_SQRT = True  # temperature alpha = 0.5 == sqrt
 MIX_TOKEN_BUDGET = 1_000_000  # tokens drawn per epoch of the mixture
 
 

@@ -1215,8 +1215,10 @@ def setop_union_all(spark, sf_dir):
     dashboard's 7-branch long-format stacking trick.
 
     Reference: dashboard_channel_weekly.sql:40-258 (null as is_tv_week
-    etc.); BigQuery infers the supertype, Spark needs explicit casts —
-    handled by functions.union_by_position.
+    etc.); BigQuery infers the supertype, Spark needs the pads typed.
+    Every branch here already carries the same column types (each pad
+    is a ``null_lit`` of its column's type), so Spark's ``unionAll``
+    stacks them by position.
     """
     o = _t(spark, sf_dir, "orders")
     li = _t(spark, sf_dir, "lineitem")
@@ -1232,7 +1234,7 @@ def setop_union_all(spark, sf_dir):
         E.null_lit("double").alias("amount"),
         E.round_to("l_quantity", 2).alias("qty"),
     )
-    return E.union_by_position(branch1, branch2)
+    return branch1.unionAll(branch2)
 
 
 @query(

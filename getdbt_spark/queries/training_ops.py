@@ -556,6 +556,7 @@ def text_ccnet_buckets(spark, sf_dir):
 PQ_SUBSPACES = 4   # M: subvectors per embedding
 PQ_SUBDIMS = 16    # dims per subspace (M * SUBDIMS == 64, the corpus dim)
 PQ_K = 4           # codebook size per subspace
+PQ_ITERS = 2       # Lloyd rounds of each subspace codebook trainer
 
 
 def _pq_oracle() -> str:
@@ -745,13 +746,13 @@ def sim_ann_ivfpq(spark, sf_dir):
 
 
 def _ivfpq_top5(e, subspaces: int = PQ_SUBSPACES, subdims: int = PQ_SUBDIMS,
-                pq_k: int = PQ_K, iters: int = 2, nprobe: int = 1,
+                pq_k: int = PQ_K, nprobe: int = 1,
                 rerank: int | None = None, coarse_k: int = 8):
     """The full IVFPQ ADC top-5 over an arbitrary valid-vector frame —
     ``sim_ann_ivfpq``'s body, frame-parameterized so the clustered
     recall fixture (``sim_recall_clustered``) runs the identical stack
-    on a derived corpus.  ``subspaces``/``subdims``/``pq_k``/``iters``
-    are the M/K/training-depth dial (defaults keep the registered
+    on a derived corpus.  ``subspaces``/``subdims``/``pq_k`` are the
+    M/K dial, trained ``PQ_ITERS`` rounds (defaults keep the registered
     query byte-identical); ``nprobe`` is the IVF coarse-level recall
     dial (candidates = vectors sharing ANY of the query's ``nprobe``
     nearest cells, deduplicated); ``rerank=R`` appends the IVFADC+R
@@ -796,7 +797,7 @@ def _ivfpq_top5(e, subspaces: int = PQ_SUBSPACES, subdims: int = PQ_SUBDIMS,
     # implies every slice's, so the corpus is the same frame).
     qfull = P._kmeans_quantize_valid(e)
     spec_train = [(0, None, coarse_k, 2)] + [
-        (m * subdims, (m + 1) * subdims, pq_k, iters)
+        (m * subdims, (m + 1) * subdims, pq_k, PQ_ITERS)
         for m in range(subspaces)
     ]
     cbs = P._pq_train(qfull, spec_train)

@@ -112,6 +112,7 @@ def test_flagship_models_stay_sublinear_at_sf1(spark):
     import math
 
     import bench
+    from getdbt_spark.queries import load_all
 
     if not os.path.isdir(SF1_DIR):
         pytest.skip("sf1 corpus not generated (python tools/gen_sf1.py)")
@@ -124,6 +125,7 @@ def test_flagship_models_stay_sublinear_at_sf1(spark):
         base = json.load(fh)["sf1_models"]
     canary_ratio = bench._host_canary(scale=0.25) / base["canary_cpu_sec_q"]
 
+    load_all()
     bench._warmup(spark, SF01_DIR)
 
     def _time(model: str, sf_dir: str) -> float:

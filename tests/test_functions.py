@@ -2,8 +2,8 @@
 
 One test per gotcha from the survey's "genuinely hard parts" list:
 regex-vs-literal SPLIT, 0- vs 1-based offsets, ISO year boundary
-dates, inclusive sequence bounds, NullType union alignment, rounding
-ties, and LONG-exact integer division.
+dates, inclusive sequence bounds, rounding ties, and LONG-exact
+integer division.
 """
 
 from __future__ import annotations
@@ -11,7 +11,6 @@ from __future__ import annotations
 import datetime
 
 import pytest
-from pyspark.sql import Row
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -188,37 +187,6 @@ def test_string_agg_ordered_deterministic_and_null_free(spark):
     )
     out = df.groupBy("k").agg(E.string_agg_ordered("v", ",").alias("s")).first()["s"]
     assert out == "a,b,c"
-
-
-# -- union_by_position: NullType pad alignment ------------------------------
-
-
-def test_union_by_position_aligns_void_columns(spark):
-    a = spark.createDataFrame([Row(x=1, y="p")])
-    b = spark.range(1).select(
-        F.lit(2).alias("x"), F.lit(None).alias("y")  # untyped NullType pad
-    )
-    out = E.union_by_position(a, b)
-    assert dict(out.dtypes) == {"x": "bigint", "y": "string"}
-    rows = {(r.x, r.y) for r in out.collect()}
-    assert rows == {(1, "p"), (2, None)}
-
-
-def test_union_by_position_positional_not_by_name(spark):
-    a = spark.createDataFrame([Row(x=1, y=2)])
-    b = spark.createDataFrame([Row(y=3, x=4)])  # names differ by position
-    out = E.union_by_position(a, b)
-    assert [r.asDict() for r in out.orderBy("x").collect()] == [
-        {"x": 1, "y": 2},
-        {"x": 3, "y": 4},
-    ]
-
-
-def test_union_by_position_width_mismatch_raises(spark):
-    a = spark.createDataFrame([Row(x=1)])
-    b = spark.createDataFrame([Row(x=1, y=2)])
-    with pytest.raises(ValueError, match="width"):
-        E.union_by_position(a, b)
 
 
 # -- null_lit / concat ------------------------------------------------------

@@ -4,8 +4,8 @@ Grain assertions come from the reference's own comments: stream stats
 unique on its group keys (``streams_daily_v4.sql:62-63,104``), one row
 per mid in poms_flattened (``poms_flattened.sql:93-94``).  The
 incremental test runs the REAL streams model through the warehouse
-write path.  Property-based tests cover union alignment and the as-of
-nearest-show dedup under random event orderings (hypothesis).
+write path.  A property-based test covers the as-of nearest-show
+dedup under random event orderings (hypothesis).
 """
 
 from __future__ import annotations
@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 import getdbt_spark.models as M
 from getdbt_spark.fixtures import sources_map
-from getdbt_spark.functions import timestamp_diff_seconds, union_by_position
+from getdbt_spark.functions import timestamp_diff_seconds
 from getdbt_spark.io import corpus_run_date
 from getdbt_spark.registry import MODELS
 from getdbt_spark.runner import Runner
@@ -139,49 +139,6 @@ class TestIncrementalStreamsModel:
 # ---------------------------------------------------------------------------
 # Property-based (hypothesis)
 # ---------------------------------------------------------------------------
-
-_dtypes = st.sampled_from(["bigint", "double", "string"])
-
-
-@settings(
-    max_examples=8,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(
-    branch_types=st.lists(
-        st.lists(st.one_of(st.none(), _dtypes), min_size=3, max_size=3),
-        min_size=2,
-        max_size=4,
-    )
-)
-def test_union_alignment_property(spark, branch_types):
-    """For any combination of typed/NULL-typed columns across branches,
-    union_by_position yields sum-of-rows and per-position types equal
-    to the first non-void branch dtype (BigQuery positional UNION)."""
-    dfs = []
-    for types in branch_types:
-        cols = []
-        for i, t in enumerate(types):
-            if t is None:
-                cols.append(F.lit(None).alias(f"c{i}"))
-            elif t == "string":
-                cols.append(F.lit("x").alias(f"c{i}"))
-            else:
-                cols.append(F.lit(1).cast(t).alias(f"c{i}"))
-        dfs.append(spark.range(2).select(*cols))
-    out = union_by_position(*dfs)
-    assert out.count() == 2 * len(branch_types)
-    for i in range(3):
-        expected = next(
-            (b[i] for b in branch_types if b[i] is not None), None
-        )
-        actual = dict(out.dtypes)[f"c{i}"]
-        if expected is not None:
-            assert actual == expected
-        else:
-            assert actual in ("string", "void")
-
 
 @settings(
     max_examples=8,
