@@ -321,19 +321,19 @@ def concat_bq(*cols: Column | str) -> Column:
 
 
 def _lazy_cut(df: DataFrame) -> DataFrame:
-    """LAZY local checkpoint — the slice-offset helpers' lineage cut.
+    """LAZY local checkpoint — ``with_running_total``'s lineage cut.
 
-    The helpers need two consumers (the per-slice counts/totals pass
-    and the final offset join) to read ONE materialization of the
-    kernel output.  An EAGER ``localCheckpoint()`` achieves that but
-    pays a dedicated materialization job per invocation — the fixed
-    overhead that made ``pack_token_budget`` read 2× its pre-rewrite
-    baseline at sf0.1 (VERDICT r10 #2).  ``eager=False`` materializes
-    on the FIRST consuming action instead (the counts collect, or the
-    grouped variants' broadcast-offsets build inside the single final
-    action), saving one job launch per invocation while keeping the
-    identical guarantee: both consumers share the checkpointed RDD's
-    blocks, so they read the same ranking.
+    The helper needs two consumers (the per-slice totals that build
+    the offsets and the final offset join) to read ONE materialization
+    of the kernel output.  An EAGER ``localCheckpoint()`` achieves that
+    but pays a dedicated materialization job per invocation — the
+    fixed overhead that made ``pack_token_budget`` read 2× its
+    pre-rewrite baseline at sf0.1 (VERDICT r10 #2).  ``eager=False``
+    materializes on the FIRST consuming action instead (the broadcast
+    offsets build inside the single final action), saving one job
+    launch per invocation while keeping the identical guarantee: both
+    consumers share the checkpointed RDD's blocks, so they read the
+    same running totals.
 
     Deliberately NOT ``persist()``: cached plans are matched by
     LOGICAL PLAN, so a second invocation over a source whose files
@@ -343,235 +343,18 @@ def _lazy_cut(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=False)
 
 
-_INT64_MAX = (1 << 63) - 1
-
-
-def _int64_guard(acc: int, what: str) -> int:
-    """Raise on int64 overflow in the driver-side offset accumulation.
-
-    The Arrow kernels' prefix sums are overflow-checked
-    (``cumulative_sum_checked`` / ``add_checked``); the matching
-    driver-side loop that folds per-slice totals into broadcast
-    offsets must give the same guarantee — Python ints never wrap, but
-    ``createDataFrame`` against a LONG schema would, silently."""
-    if not -(_INT64_MAX + 1) <= acc <= _INT64_MAX:
-        raise OverflowError(
-            f"{what} exceeds BIGINT range: {acc}"
-        )
-    return acc
-
-
-def with_global_rank(
-    df: DataFrame,
-    order: Sequence[Column | str],
-    rank_col: str = "rnk",
-    num_slices: int | None = None,
-) -> DataFrame:
-    """Exact global ``row_number`` over a total order WITHOUT a
-    single-partition window — the scale-safe shape for global-rank
-    statistics (Gini, Zipf fits) whose input is data-sized.
-
-    ``Window.orderBy(...)`` with no partition spec funnels the entire
-    input through ONE task: fine on a 50-row top-k, a scale-killer on
-    an entity-grain table (billions of rows at the 100 TB target).
-    This helper is the zipWithIndex shape, kept in DataFrames:
-
-    1. ``repartitionByRange`` on the order expressions — each slice
-       holds a contiguous run of the total order, slice *i*'s keys all
-       sort before slice *i+1*'s (range partitions are assigned in
-       ascending partition-id order);
-    2. ``sortWithinPartitions`` + a ``mapInArrow`` kernel that
-       assigns 1-based LOCAL ranks by counting batches — no extra
-       shuffle (a ``Window.partitionBy(pid)`` would re-exchange on
-       pid because Catalyst cannot see that range slices already
-       cluster it).  Arrow RecordBatches, NOT pandas: a pandas
-       roundtrip coerces float NaN payload values to NULL (pandas has
-       no null mask for float64 — found by the round-11 property
-       test), while Arrow passes every payload column through
-       byte-exact;
-    3. one LAZY local checkpoint (``_lazy_cut``) so the per-slice
-       counts and the final projection read the SAME materialized
-       ranking (the lineage is traversed once, and no dedicated
-       materialization job is paid — the counts pass triggers it);
-    4. per-slice counts collapse to ≤ ``num_slices`` rows, cumulative
-       offsets are computed driver-side (the repo's bounded
-       scalar-anchor collect class — this is partition metadata, not
-       data), and a broadcast join adds ``offset + local_rank``.
-
-    ``order`` must be a TOTAL order (include a unique tie-break
-    column) for the rank to be deterministic — the same contract as
-    ``row_number`` itself.  Ties that straddle a slice boundary would
-    otherwise rank arbitrarily, exactly as an unpartitioned
-    ``row_number`` would order them arbitrarily.
-    """
-    spark = df.sparkSession
-    if num_slices:
-        n = num_slices
-    else:
-        # shuffle.partitions may be non-numeric ("auto") on managed
-        # Spark distributions — fall back to the cluster's parallelism.
-        try:
-            n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        except (ValueError, TypeError):
-            n = spark.sparkContext.defaultParallelism
-    cols = [_col(c) for c in order]
-    ranged = (
-        df.repartitionByRange(n, *cols)
-        .sortWithinPartitions(*cols)
-        .withColumn("__gr_pid", F.spark_partition_id())
-    )
-    # fresh StructType — .add() would MUTATE the frame's cached schema
-    out_schema = T.StructType(
-        list(ranged.schema.fields)
-        + [T.StructField("__gr_lrnk", T.LongType())]
-    )
-
-    def _local_rank(batches):
-        import pyarrow as pa
-
-        off = 0
-        for b in batches:
-            idx = pa.array(
-                range(off + 1, off + 1 + b.num_rows), type=pa.int64()
-            )
-            off += b.num_rows
-            yield pa.RecordBatch.from_arrays(
-                list(b.columns) + [idx],
-                names=list(b.schema.names) + ["__gr_lrnk"],
-            )
-
-    ranked = _lazy_cut(ranged.mapInArrow(_local_rank, out_schema))
-    counts = {
-        r["__gr_pid"]: r["n"]
-        for r in ranked.groupBy("__gr_pid").agg(
-            F.count("*").alias("n")
-        ).collect()
-    }
-    offsets, acc = [], 0
-    for pid in sorted(counts):
-        offsets.append((pid, acc))
-        acc = _int64_guard(acc + counts[pid], "global rank")
-    off_df = spark.createDataFrame(
-        offsets, schema="__gr_pid int, __gr_off long"
-    )
-    return (
-        ranked.join(F.broadcast(off_df), "__gr_pid")
-        .withColumn(
-            rank_col,
-            (F.col("__gr_off") + F.col("__gr_lrnk")).cast("long"),
-        )
-        .drop("__gr_pid", "__gr_lrnk", "__gr_off")
-    )
-
-
-def with_global_cumsum(
-    df: DataFrame,
-    order: Sequence[Column | str],
-    weight: Column | str,
-    cumsum_col: str = "cumsum",
-    num_slices: int | None = None,
-) -> DataFrame:
-    """Exact INCLUSIVE global prefix sum of ``weight`` over a total
-    order WITHOUT a single-partition window — ``with_global_rank``'s
-    shape applied to running totals (the primitive behind sequential
-    shard packing, quota cut-offs, and cumulative-share curves, all
-    data-sized at the 100 TB target).
-
-    Same four steps as the rank helper: range-repartition on the
-    order (slice *i* wholly precedes slice *i+1*), a ``mapInArrow``
-    kernel accumulates each slice's LOCAL prefix sum
-    with no extra shuffle (Arrow, not pandas: int64 weights stay
-    int64 with a real null mask — no float64/NaN dance — and float
-    payload columns keep NaN ≠ NULL byte-exact), one lazy checkpoint
-    so the per-slice totals and the final projection read the same
-    materialization, and ≤ ``num_slices`` per-slice totals collapse
-    driver-side (bounded scalar-anchor class — partition metadata,
-    not data) into broadcast offsets.
-
-    ``weight`` must already be an integral column (BIGINT-safe sums
-    are the caller's contract, exactly as with any groupBy sum);
-    NULL weight ≡ 0 (window SUM's skip-NULLs contract); ``order``
-    must be a TOTAL order for determinism — same contract as
-    ``with_global_rank``.
-    """
-    spark = df.sparkSession
-    if num_slices:
-        n = num_slices
-    else:
-        try:
-            n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        except (ValueError, TypeError):
-            n = spark.sparkContext.defaultParallelism
-    cols = [_col(c) for c in order]
-    w = _col(weight)
-    ranged = (
-        df.withColumn("__gc_w", w.cast("long"))
-        .repartitionByRange(n, *cols)
-        .sortWithinPartitions(*cols)
-        .withColumn("__gc_pid", F.spark_partition_id())
-    )
-    out_schema = T.StructType(
-        list(ranged.schema.fields)
-        + [T.StructField("__gc_lsum", T.LongType())]
-    )
-    def _local_cumsum(batches):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        off = 0
-        for b in batches:
-            wi = b.schema.get_field_index("__gc_w")
-            # NULL weight ≡ 0, then an exact int64 prefix sum.  The
-            # cross-batch offset add is _checked too: a plain pc.add
-            # wraps silently on int64 overflow, which would break the
-            # helper's BIGINT-safe contract exactly when a slice's
-            # running total crosses 2^63 at a batch boundary.
-            wcol = pc.fill_null(b.column(wi).cast(pa.int64()), 0)
-            cs = pc.add_checked(pc.cumulative_sum_checked(wcol), off)
-            off = cs[-1].as_py() if len(cs) else off
-            yield pa.RecordBatch.from_arrays(
-                list(b.columns) + [cs],
-                names=list(b.schema.names) + ["__gc_lsum"],
-            )
-
-    summed = _lazy_cut(ranged.mapInArrow(_local_cumsum, out_schema))
-    totals = {
-        r["__gc_pid"]: r["s"]
-        for r in summed.groupBy("__gc_pid")
-        .agg(F.coalesce(F.sum("__gc_w"), F.lit(0)).alias("s"))
-        .collect()
-    }
-    offsets, acc = [], 0
-    for pid in sorted(totals):
-        offsets.append((pid, acc))
-        acc = _int64_guard(acc + totals[pid], "global cumsum")
-    off_df = spark.createDataFrame(
-        offsets, schema="__gc_pid int, __gc_off long"
-    )
-    return (
-        summed.join(F.broadcast(off_df), "__gc_pid")
-        .withColumn(
-            cumsum_col,
-            (F.col("__gc_off") + F.col("__gc_lsum")).cast("long"),
-        )
-        .drop("__gc_pid", "__gc_lsum", "__gc_off", "__gc_w")
-    )
-
-
 def _nan_group_to_null(df: DataFrame, name: str) -> DataFrame:
-    """Normalize NaN group values to NULL in the materialized group
-    column of the grouped rank/cumsum helpers.
+    """Normalize NaN group values to NULL in ``with_running_total``'s
+    materialized group column.
 
-    The Arrow kernels cannot distinguish NULL from NaN after pandas
-    conversion (both arrive as NaN in a float64 column), so the kernel
-    folds them into one group — but ``groupBy`` and the ``eqNullSafe``
-    offsets join treat NaN as an ordinary value distinct from NULL.
-    For a float group column holding both, the three layers would
-    disagree and ranks would diverge from any consistent contract.
-    Normalizing NaN → NULL up front makes all three agree on ONE
-    group.  Documented contract: these helpers treat NaN ≡ NULL for
-    floating-point group keys (SQL windows would keep them distinct —
-    don't group on floats if that distinction matters)."""
+    The kernel finds group runs with Arrow's ``not_equal``, where
+    NaN ≠ NaN would open a new run on every NaN row, while ``groupBy``
+    and the ``eqNullSafe`` offsets join treat NaN as one ordinary value
+    distinct from NULL.  Normalizing NaN → NULL up front makes all
+    three layers agree on ONE group.  Documented contract: the helper
+    treats NaN ≡ NULL for floating-point group keys (SQL windows would
+    keep them distinct — don't group on floats if that distinction
+    matters)."""
     dt = df.schema[name].dataType
     if isinstance(dt, (T.FloatType, T.DoubleType)):
         return df.withColumn(
@@ -583,240 +366,152 @@ def _nan_group_to_null(df: DataFrame, name: str) -> DataFrame:
     return df
 
 
-def with_grouped_global_rank(
+def with_running_total(
     df: DataFrame,
-    group: Column | str,
     order: Sequence[Column | str],
-    rank_col: str = "rnk",
+    out_col: str,
+    *,
+    weight: Column | str | None = None,
+    group: Column | str | None = None,
     num_slices: int | None = None,
 ) -> DataFrame:
-    """Exact per-GROUP global ``row_number`` without a group-partitioned
-    window — the scale-safe shape when the grouping key is
-    catalog-sized but each group's row count is DATA-sized (documents
-    per language, rows per tenant).  ``Window.partitionBy(group)``
-    funnels each group through ONE task, so a monolingual 100 TB
-    corpus sorts 80% of its documents in a single thread; this helper
-    extends the ``with_global_rank`` slice-offset shape with the group
-    leading the range partitioning:
+    """Exact INCLUSIVE running total of ``weight`` over a total
+    ``order``, restarted per ``group``, WITHOUT a single-task window.
 
-    1. range-repartition + sort on (group, *order) — each slice holds
-       a contiguous run of the (group, order) total order;
-    2. an Arrow kernel assigns local ranks RESETTING at group
-       boundaries within the slice (no extra shuffle);
-    3. per-(slice, group) counts reduce to ≤ slices × groups rows —
-       slices are the shuffle width and groups are catalog-bounded,
-       so the offsets frame is partition metadata, not data; the
-       exclusive running offset per group is one window PARTITIONED
-       BY the group over ≤ ``num_slices`` rows (bounded by
-       construction — category (b));
-    4. broadcast-join offsets back and add.
+    ``weight=None`` counts rows, which is ``row_number``;
+    ``group=None`` is one group, which is the unpartitioned window.
+    So the four shapes — global rank (Gini, Zipf fits, curriculum
+    order), global running total (curriculum shard packing),
+    per-group rank (CCNet terciles) and per-group running total
+    (per-language packing) — are one algorithm.  An unpartitioned
+    window funnels a data-sized input through ONE task, and a
+    group-partitioned one funnels each group through one task (a
+    monolingual corpus sorts ~all documents in a single thread);
+    this is the zipWithIndex shape kept in DataFrames:
 
-    (group, *order) must be a total order within each group —
-    ``row_number``'s own determinism contract.
+    1. range-repartition + sort on (group, *order) — slice *i*'s keys
+       all sort before slice *i+1*'s (range partitions are assigned in
+       ascending partition-id order);
+    2. one ``mapInArrow`` kernel accumulates each slice's LOCAL prefix
+       sums, resetting at group-run boundaries and carrying the
+       running value across batches — no extra shuffle (a
+       ``Window.partitionBy(pid)`` would re-exchange on pid).  Arrow,
+       not pandas: int64 weights stay int64 and float payload columns
+       pass through byte-exact (a pandas roundtrip turns NaN into
+       NULL — found by the round-11 property test);
+    3. one lazy checkpoint (``_lazy_cut``) so the per-slice totals and
+       the final projection read the SAME materialization;
+    4. per-(slice, group) totals reduce to ≤ slices × groups rows —
+       partition metadata, not data — and the exclusive offset per
+       group is one window PARTITIONED BY the group over that bounded
+       frame (a constant key in global mode keeps it partitioned);
+    5. a broadcast join adds ``offset + local``.  ``eqNullSafe`` on
+       the group: a NULL group is one group (SQL window semantics) and
+       must not vanish through the equi-join.
 
-    Float group keys: NaN ≡ NULL — both land in ONE group (see
-    ``_nan_group_to_null``).  SQL windows would keep NaN a distinct
-    group; don't group on a float column if that distinction matters.
+    Contracts: ``weight`` is integral; NULL weight ≡ 0 (window SUM's
+    skip-NULLs contract); (group, *order) must be a TOTAL order within
+    each group for determinism — ``row_number``'s own contract.  The
+    result is BIGINT-safe: the kernel's prefix sums are
+    overflow-checked (``cumulative_sum_checked``) and the offsets sum
+    and the final add are ANSI-checked, so an overflow raises instead
+    of wrapping.  Float group keys: NaN ≡ NULL (see
+    ``_nan_group_to_null``).
     """
     from pyspark.sql import Window
 
     spark = df.sparkSession
-    if num_slices:
-        n = num_slices
-    else:
+    n = num_slices
+    if not n:
+        # shuffle.partitions may be non-numeric ("auto") on managed
+        # Spark distributions — fall back to the cluster's parallelism.
         try:
             n = int(spark.conf.get("spark.sql.shuffle.partitions"))
         except (ValueError, TypeError):
             n = spark.sparkContext.defaultParallelism
-    g = _col(group)
-    cols = [_col(c) for c in order]
+    g = F.lit(0) if group is None else _col(group)
+    w = F.lit(1) if weight is None else _col(weight)
+    keys = [F.col("__rt_grp")] + [_col(c) for c in order]
     ranged = (
-        _nan_group_to_null(df.withColumn("__gg_grp", g), "__gg_grp")
-        .repartitionByRange(n, F.col("__gg_grp"), *cols)
-        .sortWithinPartitions(F.col("__gg_grp"), *cols)
-        .withColumn("__gg_pid", F.spark_partition_id())
+        _nan_group_to_null(df.withColumn("__rt_grp", g), "__rt_grp")
+        .withColumn("__rt_w", F.coalesce(w.cast("long"), F.lit(0)))
+        .repartitionByRange(n, *keys)
+        .sortWithinPartitions(*keys)
+        .withColumn("__rt_pid", F.spark_partition_id())
     )
+    names = ranged.schema.names
+    gi, wi = names.index("__rt_grp"), names.index("__rt_w")
+    # fresh StructType — .add() would MUTATE the frame's cached schema
     out_schema = T.StructType(
         list(ranged.schema.fields)
-        + [T.StructField("__gg_lrnk", T.LongType())]
+        + [T.StructField("__rt_local", T.LongType())]
     )
 
-    _nullg = object()  # NULL/NaN group sentinel: one group, like SQL
-
-    def _local_rank(batches):
+    def _local_prefix(batches):
+        import numpy as np
         import pyarrow as pa
+        import pyarrow.compute as pc
 
-        last = object()
-        off = 0
+        tail, run = None, 0
         for b in batches:
-            gi = b.schema.get_field_index("__gg_grp")
-            ranks = []
-            # to_pylist preserves None vs NaN (unlike a pandas
-            # roundtrip); _nan_group_to_null upstream already folded
-            # NaN → NULL, the sentinel keeps the kernel total anyway
-            for v in b.column(gi).to_pylist():
-                if v is None or v != v:
-                    v = _nullg
-                if v != last:
-                    last, off = v, 0
-                off += 1
-                ranks.append(off)
+            rows, grp = b.num_rows, b.column(gi)
+            # rows that open a new group run; prepending the previous
+            # batch's last key lets a run continue across batches
+            ext = grp if tail is None else pa.concat_arrays([tail, grp])
+            cur, prev = ext[1:], ext[:-1]
+            brk = pc.and_not(
+                pc.fill_null(pc.not_equal(cur, prev), True),
+                pc.and_(pc.is_null(cur), pc.is_null(prev)),
+            )
+            starts = np.flatnonzero(brk.to_numpy(zero_copy_only=False))
+            starts += int(tail is None)  # brk[i] is about row i+1 then
+            bounds = np.unique(np.concatenate([[0, rows], starts]))
+            pieces, opened = [], set(starts.tolist())
+            # one checked prefix sum per run (≤ groups per batch), never
+            # a Python loop over rows
+            for lo, hi in zip(bounds[:-1].tolist(), bounds[1:].tolist()):
+                if lo in opened:
+                    run = 0
+                cs = pc.cumulative_sum_checked(
+                    b.column(wi).slice(lo, hi - lo), start=run
+                )
+                run = cs[-1].as_py()
+                pieces.append(cs)
+            if rows:
+                tail = grp.slice(rows - 1)
             yield pa.RecordBatch.from_arrays(
-                list(b.columns) + [pa.array(ranks, type=pa.int64())],
-                names=list(b.schema.names) + ["__gg_lrnk"],
+                list(b.columns)
+                + [pa.chunked_array(pieces, pa.int64()).combine_chunks()],
+                names=list(b.schema.names) + ["__rt_local"],
             )
 
-    ranked = _lazy_cut(ranged.mapInArrow(_local_rank, out_schema))
-    counts = ranked.groupBy("__gg_pid", "__gg_grp").agg(
-        F.count("*").alias("__gg_n")
+    local = _lazy_cut(ranged.mapInArrow(_local_prefix, out_schema))
+    totals = local.groupBy("__rt_pid", "__rt_grp").agg(
+        F.sum("__rt_w").alias("__rt_n")
     )
-    w = (
-        Window.partitionBy("__gg_grp")
-        .orderBy("__gg_pid")
+    before = (
+        Window.partitionBy("__rt_grp")
+        .orderBy("__rt_pid")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    offsets = counts.select(
-        "__gg_pid",
-        "__gg_grp",
-        F.coalesce(F.sum("__gg_n").over(w), F.lit(0)).alias("__gg_off"),
-    )
     offsets = F.broadcast(
-        offsets.withColumnsRenamed(
-            {"__gg_pid": "__gg_pid2", "__gg_grp": "__gg_grp2"}
+        totals.select(
+            F.col("__rt_pid").alias("__rt_pid2"),
+            F.col("__rt_grp").alias("__rt_grp2"),
+            F.coalesce(F.sum("__rt_n").over(before), F.lit(0)).alias(
+                "__rt_off"
+            ),
         )
     )
     return (
-        # eqNullSafe on the group: a NULL group is one group (SQL
-        # window semantics) and must not vanish through the equi-join
-        ranked.join(
+        local.join(
             offsets,
-            (F.col("__gg_pid") == F.col("__gg_pid2"))
-            & F.col("__gg_grp").eqNullSafe(F.col("__gg_grp2")),
+            (F.col("__rt_pid") == F.col("__rt_pid2"))
+            & F.col("__rt_grp").eqNullSafe(F.col("__rt_grp2")),
         )
-        .withColumn(
-            rank_col,
-            (F.col("__gg_off") + F.col("__gg_lrnk")).cast("long"),
-        )
+        .withColumn(out_col, F.col("__rt_off") + F.col("__rt_local"))
         .drop(
-            "__gg_pid", "__gg_grp", "__gg_pid2", "__gg_grp2",
-            "__gg_lrnk", "__gg_off",
-        )
-    )
-
-
-def with_grouped_global_cumsum(
-    df: DataFrame,
-    group: Column | str,
-    order: Sequence[Column | str],
-    weight: Column | str,
-    cumsum_col: str = "cumsum",
-    num_slices: int | None = None,
-) -> DataFrame:
-    """Exact per-GROUP inclusive prefix sum of ``weight`` without a
-    group-partitioned window — ``with_grouped_global_rank``'s shape
-    applied to running totals.  The packing operators partition
-    running token totals by language/source: catalog-sized keys whose
-    per-group row counts are DATA-sized, so a dominant group would
-    fold its whole token stream through one window task.  Here the
-    kernel accumulates per-slice per-group sums (resetting at group
-    boundaries of the (group, order) range sort), the per-(slice,
-    group) totals reduce to slices × groups metadata rows, exclusive
-    per-group offsets come from one window over that bounded frame,
-    and a broadcast join adds them back.
-
-    Same contracts as the siblings: integral ``weight``, (group,
-    *order) total within each group.
-
-    Float group keys: NaN ≡ NULL — both land in ONE group (see
-    ``_nan_group_to_null``).  SQL windows would keep NaN a distinct
-    group; don't group on a float column if that distinction matters.
-    """
-    from pyspark.sql import Window
-
-    spark = df.sparkSession
-    if num_slices:
-        n = num_slices
-    else:
-        try:
-            n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        except (ValueError, TypeError):
-            n = spark.sparkContext.defaultParallelism
-    g = _col(group)
-    cols = [_col(c) for c in order]
-    w_col = _col(weight)
-    ranged = (
-        _nan_group_to_null(df.withColumn("__gc_grp", g), "__gc_grp")
-        .withColumn("__gc_w", w_col.cast("long"))
-        .repartitionByRange(n, F.col("__gc_grp"), *cols)
-        .sortWithinPartitions(F.col("__gc_grp"), *cols)
-        .withColumn("__gc_pid", F.spark_partition_id())
-    )
-    out_schema = T.StructType(
-        list(ranged.schema.fields)
-        + [T.StructField("__gc_lsum", T.LongType())]
-    )
-
-    _nullg = object()  # NULL/NaN group sentinel: one group, like SQL
-
-    def _local_cumsum(batches):
-        import pyarrow as pa
-
-        last = object()
-        acc = 0
-        for b in batches:
-            gi = b.schema.get_field_index("__gc_grp")
-            wi = b.schema.get_field_index("__gc_w")
-            sums = []
-            # to_pylist keeps None vs NaN and int64 weights integral —
-            # no pandas float64 coercion anywhere in the kernel
-            for grp, wv in zip(
-                b.column(gi).to_pylist(), b.column(wi).to_pylist()
-            ):
-                if grp is None or grp != grp:
-                    grp = _nullg
-                if grp != last:
-                    last, acc = grp, 0
-                # NULL weight ≡ 0 (the kernel contract; a window SUM
-                # also skips NULLs)
-                acc += 0 if wv is None else int(wv)
-                sums.append(acc)
-            yield pa.RecordBatch.from_arrays(
-                list(b.columns) + [pa.array(sums, type=pa.int64())],
-                names=list(b.schema.names) + ["__gc_lsum"],
-            )
-
-    summed = _lazy_cut(ranged.mapInArrow(_local_cumsum, out_schema))
-    totals = summed.groupBy("__gc_pid", "__gc_grp").agg(
-        F.coalesce(F.sum("__gc_w"), F.lit(0)).alias("__gc_n")
-    )
-    w = (
-        Window.partitionBy("__gc_grp")
-        .orderBy("__gc_pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = totals.select(
-        "__gc_pid",
-        "__gc_grp",
-        F.coalesce(F.sum("__gc_n").over(w), F.lit(0)).alias("__gc_off"),
-    )
-    offsets = F.broadcast(
-        offsets.withColumnsRenamed(
-            {"__gc_pid": "__gc_pid2", "__gc_grp": "__gc_grp2"}
-        )
-    )
-    return (
-        # eqNullSafe on the group — see with_grouped_global_rank
-        summed.join(
-            offsets,
-            (F.col("__gc_pid") == F.col("__gc_pid2"))
-            & F.col("__gc_grp").eqNullSafe(F.col("__gc_grp2")),
-        )
-        .withColumn(
-            cumsum_col,
-            (F.col("__gc_off") + F.col("__gc_lsum")).cast("long"),
-        )
-        .drop(
-            "__gc_pid", "__gc_grp", "__gc_pid2", "__gc_grp2",
-            "__gc_lsum", "__gc_off", "__gc_w",
+            "__rt_pid", "__rt_grp", "__rt_w", "__rt_local",
+            "__rt_pid2", "__rt_grp2", "__rt_off",
         )
     )

@@ -95,7 +95,7 @@ BOUNDED_NLJ_ALLOW: dict[str, int] = {
 #     magnitude below task capacity at any fact volume.
 #
 # Data-sized global ranks (customer/user/document grain) use
-# ``functions.with_global_rank`` (range repartition + per-slice
+# ``functions.with_running_total`` (range repartition + per-slice
 # offsets) instead — see agg_gini_concentration / agg_power_law_fit.
 # Everything not listed must plan ZERO unpartitioned windows —
 # enforced registry-wide by ``tests/test_plans.py``.
@@ -158,7 +158,7 @@ def unpartitioned_windows(plan: str) -> int:
     An unpartitioned window executes as ONE task sorting its whole
     input — only acceptable above a limit-bounded input
     (GLOBAL_WINDOW_ALLOW); data-sized global ranks use
-    ``functions.with_global_rank`` instead.
+    ``functions.with_running_total`` instead.
     """
     lines = plan.splitlines()
     count = 0

@@ -1399,7 +1399,7 @@ def pack_bpe_budget(spark, sf_dir):
     shard slot — oracle mirrors via the inner join.  Plan: the encode
     chain, one map-combinable per-doc count, one equi join back to
     the catalog columns, then the packing prefix sum via
-    ``functions.with_grouped_global_cumsum`` — languages are
+    ``functions.with_running_total`` — languages are
     catalog-sized keys with DATA-sized token streams, so a
     lang-partitioned window would fold a dominant language through
     one task (the ``pack_token_budget`` rewrite, applied here).
@@ -1409,12 +1409,12 @@ def pack_bpe_budget(spark, sf_dir):
         F.count("*").cast("long").alias("n_bpe_tokens")
     )
     d = _docs(spark, sf_dir).select("doc_id", "lang")
-    c = E.with_grouped_global_cumsum(
+    c = E.with_running_total(
         d.join(cnt, "doc_id"),
-        group="lang",
         order=[F.asc("doc_id")],
+        out_col="cum",
         weight="n_bpe_tokens",
-        cumsum_col="cum",
+        group="lang",
     )
     start = (F.col("cum") - F.col("n_bpe_tokens")).cast("long")
     return c.select(

@@ -42,9 +42,43 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
 
 
-def _cents(col) -> F.Column:
-    """Exact integer-cents projection, poison-proof — see E.cents."""
-    return E.cents(col)
+_SESSION_GAP_US = 1800 * 1000 * 1000  # the 30-minute inactivity gap
+
+
+def _with_session_id(
+    ev: DataFrame, order: list[str], *, inclusive: bool
+) -> DataFrame:
+    """Gap sessionization, the lag → flag → running-sum idiom: each
+    user's events in ``order``, numbered into ``sess_id`` sessions.
+
+    The first event opens a session, and so does a gap from the
+    previous event of MORE than 30 minutes (``inclusive=False``) or of
+    AT LEAST 30 minutes (``inclusive=True``) — each caller's own
+    contract, matched by its oracle.  The gap is exact wall-clock
+    microseconds over the epoch column (``timestampdiff`` on NTZ
+    session-coerces and corrupts the DST skipped hour — round-6
+    random-corpus class).  Whole-second truncation toward zero
+    (``timestamp_diff_seconds``) agrees with it on the non-negative
+    gaps an ordered lag yields: ``floor(gap_us / 1e6) >= 1800`` iff
+    ``gap_us >= 1800·10^6``.
+
+    ``order`` is the tie order.  ``ts`` alone is tie-safe: lag and the
+    running sum share one window sort, a tied event's gap is 0 and so
+    never opens a session, and every event of a tie lands in the
+    session of the first one whichever order the engine picks.  Both
+    windows share the ``user_id`` partitioning — one exchange.
+    """
+    w = Window.partitionBy("user_id").orderBy(*order)
+    us = E.ntz_epoch_us("ts")
+    prev = F.lag(us).over(w)
+    gap = us - prev
+    split = gap >= _SESSION_GAP_US if inclusive else gap > _SESSION_GAP_US
+    return ev.withColumn(
+        "sess_id",
+        F.sum(F.when(prev.isNull() | split, 1).otherwise(0)).over(
+            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        ),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -159,7 +193,7 @@ def agg_rollup(spark, sf_dir):
     """
     return (
         _t(spark, sf_dir, "orders")
-        .withColumn("_cents", _cents("o_totalprice"))
+        .withColumn("_cents", E.cents("o_totalprice"))
         .rollup("o_orderstatus", "o_orderpriority")
         .agg(
             F.count("*").alias("n_orders"),
@@ -183,7 +217,7 @@ def agg_cube(spark, sf_dir):
     """All 2^2 grouping combinations over (segment, nation) in one pass."""
     return (
         _t(spark, sf_dir, "customer")
-        .withColumn("_cents", _cents("c_acctbal"))
+        .withColumn("_cents", E.cents("c_acctbal"))
         .cube("c_mktsegment", "c_nationkey")
         .agg(
             F.count("*").alias("n_customers"),
@@ -699,24 +733,9 @@ def win_session_longest(spark, sf_dir):
     """
     from pyspark.sql import Window
 
-    e = _t(spark, sf_dir, "events")
-    wo = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    prev = F.lag("ts").over(wo)
-    # wall-pure microsecond gap: lag over the epoch column
-    # (timestampdiff on NTZ session-coerces and corrupts the DST
-    # skipped hour — round-6 random-corpus class)
-    us = E.ntz_epoch_us("ts")
-    gap_us = us - F.lag(us).over(wo)
-    flagged = e.select(
-        "user_id",
-        "ts",
-        "event_id",
-        F.when(prev.isNull() | (gap_us > 1800 * 1000 * 1000), 1)
-        .otherwise(0)
-        .alias("new_sess"),
-    )
-    s = flagged.withColumn("sess_seq", F.sum("new_sess").over(wo))
-    g = s.groupBy("user_id", "sess_seq").agg(
+    e = _t(spark, sf_dir, "events").select("user_id", "ts", "event_id")
+    s = _with_session_id(e, ["ts", "event_id"], inclusive=False)
+    g = s.groupBy("user_id", "sess_id").agg(
         F.min("ts").alias("session_start"),
         F.max("ts").alias("session_end"),
         F.count("*").alias("n_events"),
@@ -1771,7 +1790,7 @@ def agg_histogram(spark, sf_dir):
         o.select(
             bucket.alias("bucket_id"),
             (bucket * 50000).alias("bucket_lo"),
-            _cents("o_totalprice").alias("cents"),
+            E.cents("o_totalprice").alias("cents"),
         )
         .groupBy("bucket_id", "bucket_lo")
         .agg(
@@ -1923,7 +1942,7 @@ def win_dense_rank_ties(spark, sf_dir):
         c.select(
             "c_mktsegment",
             "c_custkey",
-            _cents("c_acctbal").alias("bal_cents"),
+            E.cents("c_acctbal").alias("bal_cents"),
         )
         .withColumn("rnk", F.dense_rank().over(w).cast("long"))
         .filter(F.col("rnk") <= 3)
@@ -1971,7 +1990,7 @@ def sink_incremental_merge(spark, sf_dir):
     ev = load_table(spark, sf_dir, "events").select(
         "user_id",
         F.col("ts").cast("date").alias("d"),
-        _cents("value").alias("cents"),
+        E.cents("value").alias("cents"),
     )
     # run-date anchor on credible clocks (the merged==full-history
     # invariant survives the clamp: a user whose only post-run-1
@@ -2076,7 +2095,7 @@ def win_running_total(spark, sf_dir):
         "o_custkey",
         "o_orderkey",
         F.col("o_orderdate").cast("date").alias("o_orderdate"),
-        _cents("o_totalprice").alias("cents"),
+        E.cents("o_totalprice").alias("cents"),
     ).withColumn("running_cents", F.sum("cents").over(w))
 
 
@@ -2169,7 +2188,7 @@ def setop_union_by_name(spark, sf_dir):
         .select(
             F.col("o_orderkey").alias("k"),
             F.col("o_orderstatus").alias("status"),
-            _cents("o_totalprice").alias("cents"),
+            E.cents("o_totalprice").alias("cents"),
         )
     )
     c = (
@@ -2667,7 +2686,7 @@ def sample_weighted(spark, sf_dir):
         .groupBy("o_orderstatus")
         .agg(
             F.count("*").alias("n_kept"),
-            F.sum(_cents("o_totalprice")).alias("cents_kept"),
+            F.sum(E.cents("o_totalprice")).alias("cents_kept"),
         )
     )
 
@@ -2737,7 +2756,7 @@ def join_star_multihop(spark, sf_dir):
         .groupBy("r_name")
         .agg(
             F.count("*").alias("n_orders"),
-            F.sum(_cents("o_totalprice")).alias("cents"),
+            F.sum(E.cents("o_totalprice")).alias("cents"),
         )
     )
 
@@ -2781,7 +2800,7 @@ def sink_sorted_clustered(spark, sf_dir):
             .select(
                 "o_orderkey",
                 F.col("o_orderdate").cast("date").alias("o_orderdate"),
-                _cents("o_totalprice").alias("cents"),
+                E.cents("o_totalprice").alias("cents"),
             )
             .repartitionByRange(8, "o_orderdate")
             .sortWithinPartitions("o_orderdate")
@@ -3072,7 +3091,7 @@ def scan_csv_roundtrip(spark, sf_dir):
                 "c_custkey",
                 "c_name",
                 "c_mktsegment",
-                _cents("c_acctbal").alias("bal_cents"),
+                E.cents("c_acctbal").alias("bal_cents"),
             )
             .write.option("header", True)
             .mode("overwrite")
@@ -3123,7 +3142,7 @@ def win_time_range_frame(spark, sf_dir):
         "o_custkey",
         "o_orderkey",
         F.col("o_orderdate").cast("date").alias("o_orderdate"),
-        F.sum(_cents("o_totalprice")).over(w).alias("trailing_7d_cents"),
+        F.sum(E.cents("o_totalprice")).over(w).alias("trailing_7d_cents"),
     )
 
 
@@ -3171,25 +3190,12 @@ def agg_funnel_in_session(spark, sf_dir):
     `streaming_session_stats`' oracle) with the conditional-min
     funnel: both windows cluster on user_id, so the whole pipeline —
     session assignment, per-session step minima, the ordering check —
-    shares ONE hash exchange before the constant-size rollup.
+    shares ONE hash exchange before the constant-size rollup.  The
+    event order is ``ts`` alone, like the oracle's: tie-safe, because
+    a tied event's gap is 0 (see ``_with_session_id``).
     """
-    from pyspark.sql import Window
-
     ev = _t(spark, sf_dir, "events").select("user_id", "ts", "event_type")
-    wo = Window.partitionBy("user_id").orderBy("ts")
-    # microsecond gap (same idiom as win_session_longest: NTZ doesn't
-    # cast to a number; timestampdiff keeps the exact resolution)
-    us = E.ntz_epoch_us("ts")
-    gap_us = us - F.lag(us).over(wo)
-    sess = ev.withColumn(
-        "new_sess",
-        F.when(gap_us < 1800 * 1000 * 1000, 0).otherwise(1),
-    ).withColumn(
-        "sess_id",
-        F.sum("new_sess").over(
-            wo.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
-    )
+    sess = _with_session_id(ev, ["ts"], inclusive=True)
     per_sess = sess.groupBy("user_id", "sess_id").agg(
         F.min(F.when(F.col("event_type") == "view", F.col("ts"))).alias(
             "t_view"
@@ -3253,7 +3259,7 @@ def win_rank_change(spark, sf_dir):
         o.withColumn("yr", F.year("o_orderdate"))
         .filter(F.col("yr").isin(1997, 1998))
         .groupBy("o_custkey", "yr")
-        .agg(F.sum(_cents("o_totalprice")).alias("cents"))
+        .agg(F.sum(E.cents("o_totalprice")).alias("cents"))
     )
     w = Window.partitionBy("yr").orderBy(
         F.col("cents").desc(), F.col("o_custkey")
@@ -3413,7 +3419,7 @@ def win_pareto_share(spark, sf_dir):
 
     o = _t(spark, sf_dir, "orders")
     per_cust = o.groupBy("o_custkey").agg(
-        F.sum(_cents("o_totalprice")).alias("cents")
+        F.sum(E.cents("o_totalprice")).alias("cents")
     )
     tot = per_cust.agg(
         F.sum("cents").alias("t"), F.count("*").alias("n")
@@ -3484,8 +3490,8 @@ def agg_gini_concentration(spark, sf_dir):
     order-free integer sum, so the coefficient is engine- and
     partitioning-exact; doubles enter only in the final expression.
 
-    The global ranks come from ``E.with_global_rank`` (range-
-    repartition → per-slice Arrow rank → driver-side slice offsets),
+    The global ranks come from ``E.with_running_total`` (range-
+    repartition → per-slice Arrow rank → in-plan slice offsets),
     NOT an unpartitioned ``row_number`` window — the customer grain is
     data-sized (billions of rows at 100 TB) and must never funnel
     through one task.  The ranked table then feeds a single
@@ -3493,10 +3499,10 @@ def agg_gini_concentration(spark, sf_dir):
     """
     o = _t(spark, sf_dir, "orders")
     per_cust = o.groupBy("o_custkey").agg(
-        F.sum(_cents("o_totalprice")).alias("cents")
+        F.sum(E.cents("o_totalprice")).alias("cents")
     )
-    ranked = E.with_global_rank(
-        per_cust, ["cents", "o_custkey"], rank_col="i"
+    ranked = E.with_running_total(
+        per_cust, ["cents", "o_custkey"], "i"
     ).select("cents", "i")
     # Σi·xᵢ accumulates as DECIMAL(38,0) and n·Σx multiplies in double:
     # per-row i·cents fits BIGINT, but at the sf10 decade the SUM
@@ -3610,7 +3616,7 @@ def win_percent_of_total(spark, sf_dir):
         o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
         .groupBy("n_regionkey", "c_nationkey")
-        .agg(F.sum(_cents("o_totalprice")).alias("cents"))
+        .agg(F.sum(E.cents("o_totalprice")).alias("cents"))
     )
     w_region = Window.partitionBy("n_regionkey").rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
@@ -4540,27 +4546,8 @@ def agg_session_bounce_rate(spark, sf_dir):
     (ts, event_id) so simultaneous events sessionize identically on
     both engines.
     """
-    from pyspark.sql import Window
-
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    new_sess = (
-        F.when(
-            F.lag("ts").over(w).isNull()
-            | (
-                E.timestamp_diff_seconds(F.col("ts"), F.lag("ts").over(w))
-                >= 1800
-            ),
-            1,
-        ).otherwise(0)
-    )
-    s = ev.select(
-        "user_id",
-        "ts",
-        F.sum(new_sess)
-        .over(w.rowsBetween(Window.unboundedPreceding, 0))
-        .alias("sess_id"),
-    )
+    ev = _t(spark, sf_dir, "events").select("user_id", "ts", "event_id")
+    s = _with_session_id(ev, ["ts", "event_id"], inclusive=True)
     g = s.groupBy("user_id", "sess_id").agg(
         F.min("ts").alias("session_start"),
         F.count("*").alias("n_events"),
@@ -5498,15 +5485,15 @@ def agg_power_law_fit(spark, sf_dir):
     as DECIMAL(38,0) — exact to 1e38, order-free — and drop to double
     only in the final slope expression, identically on both engines.
 
-    Ranks come from ``E.with_global_rank`` (range-repartition +
+    Ranks come from ``E.with_running_total`` (range-repartition +
     per-slice offsets), not an unpartitioned window — the user grain
     is data-sized and must never sort through one task.
     """
     cnt = _t(spark, sf_dir, "events").groupBy("user_id").agg(
         F.count("*").alias("n")
     )
-    ranked = E.with_global_rank(
-        cnt, [F.desc("n"), F.asc("user_id")], rank_col="rnk"
+    ranked = E.with_running_total(
+        cnt, [F.desc("n"), F.asc("user_id")], "rnk"
     ).select("n", "rnk")
     pts = ranked.select(
         F.floor(F.log("rnk") * 1e6).cast("long").alias("x"),

@@ -974,7 +974,7 @@ def pack_token_budget(spark, sf_dir):
     The assignment is deterministic (cumulative token count per
     language in doc_id order; bin = start_offset div budget): no RNG,
     no driver state, stable under retries and re-partitioning.  The
-    running total uses ``functions.with_grouped_global_cumsum`` — a
+    running total uses ``functions.with_running_total`` — a
     lang-PARTITIONED window funnels each language's whole token
     stream through one task, and languages are catalog-sized keys
     with DATA-sized row counts (a monolingual corpus = one window
@@ -984,12 +984,12 @@ def pack_token_budget(spark, sf_dir):
     """
     d = _docs(spark, sf_dir)
     n_tokens = F.size(F.split("text", " ")).cast("long")
-    c = E.with_grouped_global_cumsum(
+    c = E.with_running_total(
         d.select("doc_id", "lang", n_tokens.alias("n_tokens")),
-        group="lang",
         order=[F.asc("doc_id")],
+        out_col="cum",
         weight="n_tokens",
-        cumsum_col="cum",
+        group="lang",
     )
     start = (F.col("cum") - F.col("n_tokens")).cast("long")
     return c.select(
@@ -1329,12 +1329,12 @@ def pack_shard_manifest(spark, sf_dir):
     """
     d = _docs(spark, sf_dir)
     n_tokens = F.size(F.split("text", " ")).cast("long")
-    c = E.with_grouped_global_cumsum(
+    c = E.with_running_total(
         d.select("doc_id", "lang", n_tokens.alias("n_tokens")),
-        group="lang",
         order=[F.asc("doc_id")],
+        out_col="cum",
         weight="n_tokens",
-        cumsum_col="cum",
+        group="lang",
     )
     b = c.select(
         "doc_id",
@@ -1657,26 +1657,10 @@ def dedup_containment(spark, sf_dir):
     grams up to ~n²/2^64 collisions, the same equivalence the
     minhash verify is driver-green on.
     """
-    from pyspark import StorageLevel
-
-    d = _docs(spark, sf_dir)
-    n_cores = spark.sparkContext.defaultParallelism
-    # The shingle table feeds FIVE consumers (df counts, both sides of
-    # the candidate self-join, both sides of the verify join) — persist
-    # it once rather than re-shingling the corpus per branch (the same
-    # policy as the minhash/ngram builders; the sweep harness clears
-    # cache post-action).
-    sh = (
-        d.select("doc_id", "text")
-        .repartition(n_cores)
-        .select(
-            "doc_id",
-            P._shingles_and_sig(3, with_sig=False)("text").alias("ss"),
-        )
-        .filter(F.col("ss.shingles").isNotNull())
-        .select("doc_id", F.col("ss.shingles").alias("s"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    # The shingle frame feeds FIVE consumers (df counts, both sides of
+    # the candidate self-join, both sides of the verify join): the
+    # near-dup plans' one persisted, stats-counted frame.
+    sh = P._shingle_frame(_docs(spark, sf_dir), 3, with_sig=False)
     g = sh.select("doc_id", F.explode("s").alias("gram"))
     df_c = g.groupBy("gram").agg(F.count("*").alias("dfc"))
     rare = g.join(df_c.filter(F.col("dfc") <= 10), "gram")

@@ -45,9 +45,9 @@ curation and the trainer, each composing already-verified stages:
   deterministic CLUSTERED variant of the corpus (the production
   regime; the isotropic numbers are the hard-case floor);
 - ``pack_curriculum_shards`` — fixed-token shards in curriculum
-  order via ``functions.with_global_cumsum`` (the scale-safe global
+  order via ``functions.with_running_total`` (the scale-safe global
   prefix sum: range repartition + per-slice Arrow prefix sums +
-  driver-side slice offsets);
+  in-plan slice offsets);
 - ``emb_whitening`` — per-dimension standardization from exact
   integer moments (z = (v·n − Σv)/√(n·Σv² − (Σv)²), one float op
   chain over exact integers; constant dims → NULL);
@@ -323,8 +323,8 @@ def sample_curriculum_order(spark, sf_dir):
     no ntile, whose uneven-group boundary differs across engines).
 
     The global rank is DATA-SIZED (document grain), so it uses
-    ``functions.with_global_rank`` — range repartition, per-slice
-    Arrow local ranks, driver-side slice offsets, broadcast join —
+    ``functions.with_running_total`` — range repartition, per-slice
+    Arrow local ranks, in-plan slice offsets, broadcast join —
     never a single-task unpartitioned window (the r8/r9
     global-window scale class).  The stage boundary needs n, one
     bounded scalar anchor.
@@ -341,10 +341,10 @@ def sample_curriculum_order(spark, sf_dir):
         "doc_id", "quality_logit"
     )
     n = kept.count()
-    ranked = E.with_global_rank(
+    ranked = E.with_running_total(
         kept,
         order=[F.desc("quality_logit"), F.asc("doc_id")],
-        rank_col="curriculum_rank",
+        out_col="curriculum_rank",
     )
     return ranked.select(
         "doc_id",
@@ -508,7 +508,7 @@ def text_ccnet_buckets(spark, sf_dir):
     both engines.
 
     Scale: composes the verified perplexity stage (two shuffles) plus
-    the per-language rank via ``functions.with_grouped_global_rank``
+    the per-language rank via ``functions.with_running_total``
     — a lang-PARTITIONED window is not a safe shape here, because the
     grouping key is catalog-sized but each group's row count is
     DATA-sized: a monolingual corpus would sort nearly all documents
@@ -526,11 +526,11 @@ def text_ccnet_buckets(spark, sf_dir):
     )
     d = _docs(spark, sf_dir).select("doc_id", "lang")
     j = ppl.join(d, "doc_id")
-    ranked = E.with_grouped_global_rank(
+    ranked = E.with_running_total(
         j,
-        group="lang",
         order=[F.asc("avg_neg_log_p"), F.asc("doc_id")],
-        rank_col="ppl_rank_in_lang",
+        out_col="ppl_rank_in_lang",
+        group="lang",
     )
     nl = j.groupBy("lang").agg(F.count("*").alias("n_lang"))
     r = ranked.join(F.broadcast(nl), "lang").withColumn(
@@ -779,9 +779,7 @@ def _ivfpq_top5(e, subspaces: int = PQ_SUBSPACES, subdims: int = PQ_SUBDIMS,
     # partitioning-independent by construction (integer sums are
     # order-free, every rank tie-breaks on ids), so this is purely a
     # cost fix — and a no-op whenever the scan is already split.
-    sc = e.sparkSession.sparkContext
-    if e.rdd.getNumPartitions() < sc.defaultParallelism:
-        e = e.repartition(sc.defaultParallelism)
+    e = P.spread(e)
 
     # Round-13 fusion (guide §4.2, §2.3, §1.2): the coarse IVF trainer
     # and ALL ``subspaces`` PQ trainers share ONE Lloyd loop over the
@@ -2854,11 +2852,10 @@ def pack_curriculum_shards(spark, sf_dir):
     how a 100 TB curriculum run is materialized (sort once, shard in
     rank order, feed shards sequentially).
 
-    The running total is DATA-SIZED, so it uses the new
-    ``functions.with_global_cumsum`` (range repartition + per-slice
-    Arrow prefix sums + driver-side slice offsets + broadcast join —
-    ``with_global_rank``'s shape applied to sums), never a
-    single-task unpartitioned window.  Shard assignment is exact
+    The running total is DATA-SIZED, so it uses
+    ``functions.with_running_total`` (range repartition + per-slice
+    Arrow prefix sums + in-plan slice offsets + broadcast join), never
+    a single-task unpartitioned window.  Shard assignment is exact
     integer arithmetic: ``(cum_tokens − 1) div {CURR_SHARD_TOKENS}``,
     inclusive sum, so a document straddling a boundary lands in the
     shard its LAST token falls in, and Σ per-shard tokens ==
@@ -2872,11 +2869,11 @@ def pack_curriculum_shards(spark, sf_dir):
         F.size(P.ws_tokens(F.col("text"))).cast("long").alias("n_tokens"),
     )
     j = cur.join(tok, "doc_id")
-    c = E.with_global_cumsum(
+    c = E.with_running_total(
         j,
         order=[F.asc("curriculum_rank")],
+        out_col="cum_tokens",
         weight="n_tokens",
-        cumsum_col="cum_tokens",
     )
     return c.select(
         "doc_id",

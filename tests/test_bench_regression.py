@@ -27,27 +27,40 @@ from __future__ import annotations
 
 import json
 import os
+import time
 
 import pytest
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF_DIR = "/root/testdata/sf0.01"
+LOAD_WAIT_S = 180
+
+
+def _skip_unless_quiet(gate: str) -> None:
+    """Skip a wall-clock gate while another workload owns the cores.
+
+    Timing assertions are meaningless then (a concurrent verify sweep
+    skews shares non-uniformly — observed 10× on individual queries).
+    But the 1-minute load average also still carries this suite's own
+    just-finished Spark work (load1 2.6 on 4 cores after the earlier
+    slow tests), so wait up to ``LOAD_WAIT_S`` for it to decay below
+    half the cores; only a load that outlasts the wait skips."""
+    n_cpus = os.cpu_count() or 1
+    deadline = time.monotonic() + LOAD_WAIT_S
+    while (load1 := os.getloadavg()[0]) > n_cpus / 2:
+        if time.monotonic() >= deadline:
+            pytest.skip(
+                f"host under load (load1={load1:.1f} on {n_cpus} cpus) — "
+                f"{gate} would flake"
+            )
+        time.sleep(5)
 
 
 @pytest.mark.slow
 def test_no_per_query_regression_at_sf001(spark):
     import bench
 
-    # Timing assertions are meaningless when another workload owns the
-    # cores (a concurrent verify sweep skews shares non-uniformly —
-    # observed 10× on individual queries).  Skip rather than flake.
-    load1, _, _ = os.getloadavg()
-    n_cpus = os.cpu_count() or 1
-    if load1 > n_cpus / 2:
-        pytest.skip(
-            f"host under load (load1={load1:.1f} on {n_cpus} cpus) — "
-            "per-query timing gate would flake"
-        )
+    _skip_unless_quiet("per-query timing gate")
 
     with open(os.path.join(ROOT, "BASELINE_LOCAL.json")) as fh:
         recorded = json.load(fh)["sf0.01"]
@@ -116,10 +129,7 @@ def test_flagship_models_stay_sublinear_at_sf1(spark):
 
     if not os.path.isdir(SF1_DIR):
         pytest.skip("sf1 corpus not generated (python tools/gen_sf1.py)")
-    load1, _, _ = os.getloadavg()
-    n_cpus = os.cpu_count() or 1
-    if load1 > n_cpus / 2:
-        pytest.skip(f"host under load (load1={load1:.1f}) — timing gate would flake")
+    _skip_unless_quiet("sf1 timing gate")
 
     with open(os.path.join(ROOT, "BASELINE_LOCAL.json")) as fh:
         base = json.load(fh)["sf1_models"]

@@ -524,13 +524,13 @@ def test_lazy_cut_concurrent_consumers_share_one_materialization(spark):
     kernel output: identical results, no deadlock, and no job that
     re-derives the range-shuffle lineage (VERDICT r11 #8).
 
-    The probe: ``_lazy_cut``'s checkpoint materializes during helper
-    CONSTRUCTION (the per-slice counts pass is the first consuming
-    action), so every post-build job reads checkpoint blocks and its
-    stage DAG is truncated at the CheckpointRDD — a sequential
-    post-build action measures that stage budget, and a concurrent
-    job exceeding it means the lineage (range exchange + Arrow
-    kernel) was silently recomputed."""
+    The probe: ``_lazy_cut``'s checkpoint materializes on the frame's
+    first action, so one untimed build action runs first; every
+    post-build job then reads checkpoint blocks and its stage DAG is
+    truncated at the CheckpointRDD — a sequential post-build action
+    measures that stage budget, and a concurrent job exceeding it
+    means the lineage (range exchange + Arrow kernel) was silently
+    recomputed."""
     import threading
 
     from pyspark.sql import functions as F
@@ -543,10 +543,9 @@ def test_lazy_cut_concurrent_consumers_share_one_materialization(spark):
         "id", (F.col("id") % 7).alias("grp"), (F.col("id") % 13).alias("w")
     )
     frames = {
-        "rank": E.with_global_rank(base, order=[F.asc("id")], rank_col="r"),
-        "gcum": E.with_grouped_global_cumsum(
-            base, group="grp", order=[F.asc("id")], weight="w",
-            cumsum_col="c",
+        "rank": E.with_running_total(base, [F.asc("id")], "r"),
+        "gcum": E.with_running_total(
+            base, [F.asc("id")], "c", weight="w", group="grp"
         ),
     }
     for name, df in frames.items():
@@ -565,6 +564,9 @@ def test_lazy_cut_concurrent_consumers_share_one_materialization(spark):
                     worst = max(worst, len(list(info.stageIds)))
             return worst
 
+        # build: fills the lazy checkpoint, so the budget below counts
+        # only the stages after the CheckpointRDD
+        _job_stages(f"{name}-build", lambda: df.count())
         budget = max(
             _job_stages(f"{name}-seq-collect", lambda: df.collect()),
             _job_stages(f"{name}-seq-count", lambda: df.count()),

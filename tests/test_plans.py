@@ -263,9 +263,9 @@ def test_pack_token_budget_uses_grouped_cumsum_shape(spark):
     plan = _formatted(spark, QUERIES["pack_token_budget"](spark, SF))
     # the checkpoint cuts the range-exchange out of the final plan;
     # its signature is the helper's checkpointed kernel columns plus
-    # the bounded offsets window keyed on the GROUP sentinel column
-    assert "__gc_lsum" in plan, "grouped cumsum kernel missing"
-    assert "hashpartitioning(__gc_pid" in plan
+    # the bounded per-(slice, group) totals feeding the offsets window
+    assert "__rt_local" in plan, "grouped running-total kernel missing"
+    assert "hashpartitioning(__rt_pid" in plan
     assert "hashpartitioning(lang" not in plan, (
         "lang-partitioned window crept back into the packer"
     )
@@ -384,13 +384,24 @@ class TestPlanLintApi:
         assert plan_lint(agg, max_exchanges=5) == []
 
 
+@pytest.fixture
+def small_arrow_batches(spark):
+    """3-row Arrow batches: the running-total kernel's group runs then
+    straddle batches, so it must carry the running value across them."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    yield
+    spark.conf.set(key, prev)
+
+
 class TestGlobalWindowGuard:
     """No unpartitioned window over a non-catalog-sized input — the r8
     ``bpe_pair_stats`` class (a data-sized table sorted through ONE
     task) pinned registry-wide.  The only legal shapes are the two
     bounded-by-construction classes documented on
     ``plans.GLOBAL_WINDOW_ALLOW``; data-sized global ranks must use
-    ``functions.with_global_rank``."""
+    ``functions.with_running_total``."""
 
     def test_detector_classifies_all_window_spec_shapes(self, spark):
         from pyspark.sql import Window
@@ -429,40 +440,41 @@ class TestGlobalWindowGuard:
             spark.catalog.clearCache()
         assert not bad, (
             f"unpartitioned window(s) over unbounded input: {bad} — "
-            "bound the input (orderBy().limit) or use with_global_rank"
+            "bound the input (orderBy().limit) or use with_running_total"
         )
 
-    def test_with_global_rank_matches_row_number(self, spark):
+    def test_running_total_rank_matches_row_number(self, spark):
         """The zipWithIndex-shaped rank equals an unpartitioned
         row_number over the same total order, on a multi-slice input
         with boundary-adjacent duplicate sort prefixes."""
         from pyspark.sql import Window
 
-        from getdbt_spark.functions import with_global_rank
+        from getdbt_spark.functions import with_running_total
         from getdbt_spark.plans import _formatted, unpartitioned_windows
 
         df = spark.range(1000).select(
             (F.col("id") % 13).alias("k"), F.col("id")
         )
-        got = with_global_rank(df, ["k", "id"], rank_col="r", num_slices=7)
+        got = with_running_total(df, ["k", "id"], "r", num_slices=7)
         want = df.withColumn(
             "r", F.row_number().over(Window.orderBy("k", "id")).cast("long")
         )
         assert unpartitioned_windows(_formatted(got)) == 0
         assert sorted(got.collect()) == sorted(want.collect())
-        # empty input survives the driver-side offset path
-        assert with_global_rank(
-            df.filter(F.col("id") < 0), ["id"], rank_col="r"
+        # empty input survives the offsets path
+        assert with_running_total(
+            df.filter(F.col("id") < 0), ["id"], "r"
         ).count() == 0
 
-    def test_with_global_cumsum_matches_window_sum(self, spark):
+    @pytest.mark.usefixtures("small_arrow_batches")
+    def test_running_total_weighted_matches_window_sum(self, spark):
         """The slice-offset prefix sum equals an unpartitioned
         inclusive running-total window over the same total order, on
         a multi-slice input with duplicate sort prefixes and mixed
         weights (including zeros)."""
         from pyspark.sql import Window
 
-        from getdbt_spark.functions import with_global_cumsum
+        from getdbt_spark.functions import with_running_total
         from getdbt_spark.plans import _formatted, unpartitioned_windows
 
         df = spark.range(1000).select(
@@ -470,8 +482,8 @@ class TestGlobalWindowGuard:
             F.col("id"),
             (F.col("id") % 7).alias("w"),
         )
-        got = with_global_cumsum(
-            df, ["k", "id"], weight="w", cumsum_col="c", num_slices=7
+        got = with_running_total(
+            df, ["k", "id"], "c", weight="w", num_slices=7
         )
         want = df.withColumn(
             "c",
@@ -485,11 +497,12 @@ class TestGlobalWindowGuard:
         )
         assert unpartitioned_windows(_formatted(got)) == 0
         assert sorted(got.collect()) == sorted(want.collect())
-        assert with_global_cumsum(
-            df.filter(F.col("id") < 0), ["id"], weight="w", cumsum_col="c"
+        assert with_running_total(
+            df.filter(F.col("id") < 0), ["id"], "c", weight="w"
         ).count() == 0
 
-    def test_with_grouped_global_rank_matches_partitioned_row_number(
+    @pytest.mark.usefixtures("small_arrow_batches")
+    def test_running_total_grouped_rank_matches_partitioned_row_number(
         self, spark
     ):
         """The grouped slice-offset rank equals a group-partitioned
@@ -498,7 +511,7 @@ class TestGlobalWindowGuard:
         monolingual-corpus shape the helper exists for)."""
         from pyspark.sql import Window
 
-        from getdbt_spark.functions import with_grouped_global_rank
+        from getdbt_spark.functions import with_running_total
 
         df = spark.range(2000).select(
             F.when(F.col("id") < 1500, F.lit("big"))
@@ -507,8 +520,8 @@ class TestGlobalWindowGuard:
             (F.col("id") % 13).alias("k"),
             F.col("id"),
         )
-        got = with_grouped_global_rank(
-            df, group="grp", order=["k", "id"], rank_col="r", num_slices=7
+        got = with_running_total(
+            df, ["k", "id"], "r", group="grp", num_slices=7
         )
         want = df.withColumn(
             "r",
@@ -517,12 +530,11 @@ class TestGlobalWindowGuard:
             .cast("long"),
         )
         assert sorted(got.collect()) == sorted(want.collect())
-        assert with_grouped_global_rank(
-            df.filter(F.col("id") < 0), group="grp", order=["id"],
-            rank_col="r",
+        assert with_running_total(
+            df.filter(F.col("id") < 0), ["id"], "r", group="grp"
         ).count() == 0
 
-    def test_with_global_cumsum_null_weights_treated_as_zero(self, spark):
+    def test_running_total_null_weights_treated_as_zero(self, spark):
         """NULL weights must behave exactly like window SUM (which
         skips NULLs): the running total carries through NULL-weight
         rows unchanged, and a NULL-weight row ENDING an Arrow batch
@@ -530,15 +542,15 @@ class TestGlobalWindowGuard:
         finding: float64 NaN reaching ``int(...)``)."""
         from pyspark.sql import Window
 
-        from getdbt_spark.functions import with_global_cumsum
+        from getdbt_spark.functions import with_running_total
 
         df = spark.range(500).select(
             F.col("id"),
             # NULL every 5th weight, including id=499 (a terminal row)
             F.when(F.col("id") % 5 != 4, F.col("id") % 7).alias("w"),
         )
-        got = with_global_cumsum(
-            df, ["id"], weight="w", cumsum_col="c", num_slices=7
+        got = with_running_total(
+            df, ["id"], "c", weight="w", num_slices=7
         )
         want = df.withColumn(
             "c",
@@ -556,23 +568,22 @@ class TestGlobalWindowGuard:
         all_null = spark.range(50).select(
             F.col("id"), F.lit(None).cast("long").alias("w")
         )
-        out = with_global_cumsum(
-            all_null, ["id"], weight="w", cumsum_col="c", num_slices=3
+        out = with_running_total(
+            all_null, ["id"], "c", weight="w", num_slices=3
         )
         assert all(r["c"] == 0 for r in out.collect())
 
+    @pytest.mark.usefixtures("small_arrow_batches")
     def test_grouped_helpers_fold_nan_group_into_null(self, spark):
-        """Float group keys: NaN and NULL are ONE group by the helpers'
-        documented contract (pandas cannot tell them apart after Arrow
-        conversion).  The normalization must make the kernel, the
+        """Float group keys: NaN and NULL are ONE group by the helper's
+        documented contract (Arrow's not_equal would split NaN runs,
+        groupBy keeps NaN apart from NULL).  The normalization must
+        make the kernel, the
         per-slice aggregation, and the eqNullSafe offsets join agree —
         ranks equal row_number over the NaN→NULL-normalized group."""
         from pyspark.sql import Window
 
-        from getdbt_spark.functions import (
-            with_grouped_global_cumsum,
-            with_grouped_global_rank,
-        )
+        from getdbt_spark.functions import with_running_total
 
         df = spark.range(300).select(
             F.when(F.col("id") % 3 == 0, F.lit(float("nan")))
@@ -583,8 +594,8 @@ class TestGlobalWindowGuard:
             (F.col("id") % 4).alias("w"),
         )
         norm = F.when(F.isnan("grp"), F.lit(None)).otherwise(F.col("grp"))
-        got_r = with_grouped_global_rank(
-            df, group="grp", order=["id"], rank_col="r", num_slices=5
+        got_r = with_running_total(
+            df, ["id"], "r", group="grp", num_slices=5
         )
         want_r = df.withColumn(
             "r",
@@ -596,9 +607,8 @@ class TestGlobalWindowGuard:
             sorted((r["id"], r["r"]) for r in got_r.collect())
             == sorted((r["id"], r["r"]) for r in want_r.collect())
         )
-        got_c = with_grouped_global_cumsum(
-            df, group="grp", order=["id"], weight="w",
-            cumsum_col="c", num_slices=5,
+        got_c = with_running_total(
+            df, ["id"], "c", weight="w", group="grp", num_slices=5
         )
         want_c = df.withColumn(
             "c",
@@ -615,25 +625,45 @@ class TestGlobalWindowGuard:
             == sorted((r["id"], r["c"]) for r in want_c.collect())
         )
 
+    @pytest.mark.parametrize("group", [None, "grp"])
+    @pytest.mark.parametrize("n_slices", [4, 1])
+    def test_running_total_raises_on_bigint_overflow(
+        self, spark, group, n_slices
+    ):
+        """The BIGINT-safe contract: four weights of 2^62 sum past
+        2^63, and the running total must raise, never wrap.  With four
+        slices each slice holds one row, so the overflow happens in the
+        offsets (the window sum and the final add, ANSI-checked); with
+        one slice it happens inside the Arrow kernel's checked prefix
+        sum.  Both in global and in grouped mode."""
+        from getdbt_spark.functions import with_running_total
 
+        df = spark.createDataFrame(
+            [("g", i, 1 << 62) for i in range(4)],
+            "grp string, id long, w long",
+        )
+        got = with_running_total(
+            df, ["id"], "c", weight="w", group=group, num_slices=n_slices
+        )
+        with pytest.raises(Exception, match="(?i)overflow"):
+            got.collect()
+
+
+@pytest.mark.usefixtures("small_arrow_batches")
 def test_slice_offset_helpers_property_match_windows(spark):
-    """Property lock on the four slice-offset helpers (the round-11
-    NULL/NaN hardening made durable): on RANDOM frames carrying every
-    adversarial shape at once — NULL weights (including terminal
-    rows), float group keys mixing NULL and NaN runs, duplicate order
-    prefixes straddling slice boundaries, negative weights — each
-    helper must equal its window reference over the NaN→NULL-
-    normalized group, for any slice count."""
+    """Property lock on the slice-offset helper's four (weight, group)
+    shapes (the round-11 NULL/NaN hardening made durable): on RANDOM
+    frames carrying every adversarial shape at once — NULL weights
+    (including terminal rows), float group keys mixing NULL and NaN
+    runs, duplicate order prefixes straddling slice boundaries,
+    negative weights, group runs straddling 3-row Arrow batches — each
+    shape must equal its window reference over the NaN→NULL-normalized
+    group, for any slice count."""
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
     from pyspark.sql import Window
 
-    from getdbt_spark.functions import (
-        with_global_cumsum,
-        with_global_rank,
-        with_grouped_global_cumsum,
-        with_grouped_global_rank,
-    )
+    from getdbt_spark.functions import with_running_total
 
     @settings(
         max_examples=5,
@@ -660,7 +690,7 @@ def test_slice_offset_helpers_property_match_windows(spark):
         df = spark.createDataFrame(
             [(g, k, i, w) for i, (g, k, w) in enumerate(rows)],
             "grp double, k long, id long, w long",
-        ).localCheckpoint()  # pin the random frame; helpers re-read it
+        ).localCheckpoint()  # pin the random frame; each shape re-reads it
         norm = F.when(F.isnan("grp"), F.lit(None)).otherwise(F.col("grp"))
         order = [F.asc("k"), F.asc("id")]
         wflat = Window.orderBy("k", "id")
@@ -669,7 +699,7 @@ def test_slice_offset_helpers_property_match_windows(spark):
 
         def canon(rows, res):
             # NaN-aware, id-keyed canonical form: the ungrouped
-            # helpers must pass float PAYLOAD columns through
+            # shapes must pass float PAYLOAD columns through
             # byte-exact (NaN stays NaN, NULL stays NULL — the
             # mapInArrow guarantee; a pandas kernel coerces NaN→NULL)
             out = []
@@ -679,13 +709,15 @@ def test_slice_offset_helpers_property_match_windows(spark):
                 out.append((r["id"], g, r["k"], r["w"], r[res]))
             return sorted(out)
 
-        got = with_global_rank(df, order, "r", num_slices=n_slices)
+        got = with_running_total(df, order, "r", num_slices=n_slices)
         want = df.withColumn(
             "r", F.row_number().over(wflat).cast("long")
         )
         assert canon(got.collect(), "r") == canon(want.collect(), "r")
 
-        got = with_global_cumsum(df, order, "w", "c", num_slices=n_slices)
+        got = with_running_total(
+            df, order, "c", weight="w", num_slices=n_slices
+        )
         want = df.withColumn(
             "c",
             F.coalesce(
@@ -694,9 +726,8 @@ def test_slice_offset_helpers_property_match_windows(spark):
         )
         assert canon(got.collect(), "c") == canon(want.collect(), "c")
 
-        got = with_grouped_global_rank(
-            df, group="grp", order=order, rank_col="r",
-            num_slices=n_slices,
+        got = with_running_total(
+            df, order, "r", group="grp", num_slices=n_slices
         )
         want = df.withColumn(
             "r", F.row_number().over(wgrp).cast("long")
@@ -705,9 +736,8 @@ def test_slice_offset_helpers_property_match_windows(spark):
             (r["id"], r["r"]) for r in got.collect()
         ) == sorted((r["id"], r["r"]) for r in want.collect())
 
-        got = with_grouped_global_cumsum(
-            df, group="grp", order=order, weight="w",
-            cumsum_col="c", num_slices=n_slices,
+        got = with_running_total(
+            df, order, "c", weight="w", group="grp", num_slices=n_slices
         )
         want = df.withColumn(
             "c",
