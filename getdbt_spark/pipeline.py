@@ -82,17 +82,20 @@ def ws_tokens(col: Column | str) -> Column:
     return F.split(F.lower(c), " ")
 
 
-def word_shingles(tokens: Column, k: int = 3) -> Column:
-    """Distinct word k-gram shingles, '|'-joined.
+def word_grams(tokens: Column, k: int) -> Column:
+    """Word k-grams in token order, '|'-joined, NOT deduplicated: the
+    i-th element (0-based) is the gram starting at token i + 1.
 
-    Requires ``size(tokens) >= k`` (callers filter; ``sequence`` with a
-    negative stop would count downward).
+    Rows with fewer than ``k`` tokens (a NULL array included) give an
+    empty array, so callers need no size pre-filter: ``sequence`` with
+    a stop below its start would count downward, and ``element_at``
+    past the end raises under ANSI.
 
     ``tokens`` is re-bound as a LAMBDA VARIABLE (the single-element
     array wrap) before the per-gram transform: a raw expression
     argument (e.g. ``split(text)``) captured inside a HOF lambda is
     re-evaluated on every element — no common-subexpression
-    elimination crosses a lambda boundary — making shingling
+    elimination crosses a lambda boundary — making gram building
     O(k·words²) on the caller's expression.  The hugedoc random-corpus
     probe measured minutes-per-document on ~1 MB texts; the lambda
     binding evaluates the argument exactly once per row for every
@@ -100,17 +103,17 @@ def word_shingles(tokens: Column, k: int = 3) -> Column:
     """
 
     def _grams(toks: Column) -> Column:
-        idx = F.sequence(F.lit(0), F.size(toks) - k)
-        return F.transform(
-            idx,
-            lambda i: F.concat_ws(
-                "|", *[F.element_at(toks, i + j + 1) for j in range(k)]
+        return F.when(
+            F.size(toks) >= k,
+            F.transform(
+                F.sequence(F.lit(1), F.size(toks) - (k - 1)),
+                lambda i: F.concat_ws(
+                    "|", *[F.element_at(toks, i + j) for j in range(k)]
+                ),
             ),
-        )
+        ).otherwise(F.array())
 
-    return F.array_distinct(
-        F.flatten(F.transform(F.array(tokens), _grams))
-    )
+    return F.flatten(F.transform(F.array(tokens), _grams))
 
 
 # ---------------------------------------------------------------------------
@@ -1387,12 +1390,8 @@ def kmeans_quantized(
     # results are partitioning-independent by construction (integer
     # sums are order-free, ranks tie-break on ids), and spread() is a
     # no-op whenever the scan is already split.
-    q = _kmeans_quantize_valid(spread(embs))
-    cbs = _pq_train(q, [(0, None, k, iters)])
-    return _pq_assign(q, cbs, [(0, 0, None, 1)]).select(
-        "vec_id",
-        F.col("cent_id").alias("cluster"),
-        F.col("dist").alias("dist_q"),
+    return kmeans_probe_assign(spread(embs), k, iters, nprobe=1).select(
+        "vec_id", F.col("cent_id").alias("cluster"), "dist_q"
     )
 
 
@@ -1708,41 +1707,6 @@ def _pq_lut_codes(q: DataFrame, cbs: list, slices: list) -> DataFrame:
     )
 
 
-def _kmeans_assign(
-    q: DataFrame, cents_df: DataFrame, nprobe: int = 1
-) -> DataFrame:
-    """Each quantized vector's ``nprobe`` nearest codebook cells
-    (integer distance, cent_id tie-break): ``(vec_id, cent_id, dist,
-    probe_rank)``.
-
-    Round-13 shape: the codebook (k rows — model-sized, the same
-    payload it was already broadcast as) rides to the executors once
-    and the ranking is one vectorized numpy pass per batch
-    (``_pq_assign``) — MAP-ONLY, no fan-out, no window, no exchange.
-    The interpreted Catalyst higher-order-function fold this replaces
-    evaluated N·k·d lambdas per pass, which dominated the K=256
-    deployment stacks (guide §4.2)."""
-    cb = _np_codebook(
-        [(r["cent_id"], r["cvec"]) for r in cents_df.collect()]
-    )
-    return _pq_assign(q, [cb], [(0, 0, None, nprobe)])
-
-
-def _kmeans_train(q: DataFrame, k: int, iters: int) -> DataFrame:
-    """The Lloyd's loop over pre-quantized vectors: returns the
-    trained k-row ``(cent_id, cvec)`` codebook after ``iters`` rounds
-    from the deterministic first-``k`` init (``_pq_train`` on the
-    full-width slice — see its docstring for the per-round plan shape
-    and the exactness contract)."""
-    ids, C = _pq_train(q, [(0, None, k, iters)])[0]
-    rows = [
-        (int(cid), [int(x) for x in row]) for cid, row in zip(ids, C)
-    ]
-    return q.sparkSession.createDataFrame(
-        rows, "cent_id long, cvec array<long>"
-    )
-
-
 def kmeans_probe_assign(
     embs: DataFrame, k: int = 8, iters: int = 2, nprobe: int = 2
 ) -> DataFrame:
@@ -1754,10 +1718,10 @@ def kmeans_probe_assign(
     ANY shared probed cell recover most near-dup pairs that straddle
     a single-cell boundary (the documented recall caveat of
     ``dedup_embedding_cluster_ivf``), at ``nprobe×`` the candidate
-    mass — still Σ|cell|²-bounded, never all-pairs.  The trainer,
-    init, quantization, and tie-breaks are byte-identical to
-    ``kmeans_quantized`` (same helpers), so a SQL oracle replays it
-    with one extra rank bound."""
+    mass — still Σ|cell|²-bounded, never all-pairs.
+    ``kmeans_quantized`` is its ``nprobe=1`` view, so the trainer,
+    init, quantization, and tie-breaks are shared and a SQL oracle
+    replays it with one extra rank bound."""
     q = _kmeans_quantize_valid(embs)
     cbs = _pq_train(q, [(0, None, k, iters)])
     return _pq_assign(q, cbs, [(0, 0, None, nprobe)]).select(

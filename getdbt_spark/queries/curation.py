@@ -58,52 +58,28 @@ FEATURE_BUCKETS = 64
 MIX_TOKEN_BUDGET = 1_000_000  # tokens drawn per epoch of the mixture
 
 
-def _ws(col):
-    return P.ws_tokens(col)
-
-
 # ---------------------------------------------------------------------------
 # 1. Exact duplicated-substring spans (suffix-array dedup, Spark-shaped)
 # ---------------------------------------------------------------------------
 
 
-def _kgram_occ(d):
-    """(doc_id, pos, g): every SPAN_K-token k-gram occurrence with its
-    1-based position and portable 60-bit gram hash — the shared anchor
-    table of the substring-dedup family (``dedup_substring_spans``
+def _kgram_occ(d, k):
+    """(doc_id, pos, g): every k-token gram occurrence with its 1-based
+    position and portable 60-bit gram hash — the shared anchor table
+    of the substring-dedup family at ``SPAN_K`` (``dedup_substring_spans``
     detects coverage over it; ``dedup_substring_remove`` cuts all but
-    the first occurrence).
-
-    tk is re-bound as a LAMBDA VARIABLE (single-element-array wrap): a
-    raw expression captured inside a HOF lambda re-evaluates per
-    element — the split would run once per position, O(words²) on a
-    book-scale doc (the word_shingles hugedoc find; same fix).
+    the first occurrence) and the winnowing family at ``WINNOW_K``.
+    Documents shorter than ``k`` tokens have no rows (``word_grams``).
     """
-
-    def _grams(tk):
-        m = F.size(tk)
-        return F.when(
-            m >= SPAN_K,
-            F.transform(
-                F.sequence(F.lit(1), m - (SPAN_K - 1)),
-                lambda i: F.struct(
-                    i.alias("pos"),
-                    P.md5_long(
-                        F.concat_ws(
-                            "|",
-                            *[
-                                F.element_at(tk, i + j)
-                                for j in range(SPAN_K)
-                            ],
-                        )
-                    ).alias("g"),
-                ),
-            ),
-        ).otherwise(F.array())
-
-    grams = F.flatten(F.transform(F.array(_ws(F.col("text"))), _grams))
-    return d.select("doc_id", F.explode(grams).alias("s")).select(
-        "doc_id", F.col("s.pos").alias("pos"), F.col("s.g").alias("g")
+    return d.select(
+        "doc_id",
+        F.posexplode(P.word_grams(P.ws_tokens(F.col("text")), k)).alias(
+            "pos", "gram"
+        ),
+    ).select(
+        "doc_id",
+        (F.col("pos") + 1).alias("pos"),
+        P.md5_long("gram").alias("g"),
     )
 
 
@@ -184,9 +160,9 @@ def dedup_substring_spans(spark, sf_dir):
     a doc's gram list in memory.
     """
     d = _docs(spark, sf_dir)
-    toks = _ws(F.col("text"))
+    toks = P.ws_tokens(F.col("text"))
     n = F.size(toks)
-    occ = _kgram_occ(d)
+    occ = _kgram_occ(d, SPAN_K)
     dupg = occ.groupBy("g").agg(F.count("*").alias("cnt")).filter(
         F.col("cnt") > 1
     )
@@ -290,7 +266,7 @@ def dsir_importance_weights(spark, sf_dir):
     wds = d.select(
         "doc_id",
         (F.col("lang") == "en").alias("is_t"),
-        F.explode(_ws(F.col("text"))).alias("word"),
+        F.explode(P.ws_tokens(F.col("text"))).alias("word"),
     ).select(
         "doc_id",
         "is_t",
@@ -388,7 +364,7 @@ def mix_domain_weights(spark, sf_dir):
     d = _docs(spark, sf_dir)
     s = d.groupBy("source").agg(
         F.count("*").alias("n_docs"),
-        F.sum(F.size(_ws(F.col("text")))).alias("n_tokens"),
+        F.sum(F.size(P.ws_tokens(F.col("text")))).alias("n_tokens"),
     )
     w_all = Window.partitionBy()
     t = s.withColumn("tot", F.sum("n_tokens").over(w_all))
@@ -461,7 +437,7 @@ def quality_logreg_score(spark, sf_dir):
     Scale: pure map — one projection, no shuffle, no UDF.
     """
     d = _docs(spark, sf_dir)
-    toks = _ws(F.col("text"))
+    toks = P.ws_tokens(F.col("text"))
     n = F.size(toks)
     sum_len = F.aggregate(
         F.transform(toks, lambda x: F.length(x)),
@@ -538,24 +514,8 @@ def bpe_pair_stats(spark, sf_dir):
     bp = F.regexp_extract_all(
         F.lower(F.col("text")), F.lit(P.BPE_TOKEN_RE), F.lit(0)
     )
-
-    # lambda-variable re-bind: element_at(bp, i) inside the transform
-    # would re-run the regex extraction per pair — O(tokens²) on a
-    # book-scale doc (hugedoc probe measured a >7 min stall).
-    def _pairs(b):
-        return F.when(
-            F.size(b) >= 2,
-            F.transform(
-                F.sequence(F.lit(1), F.size(b) - 1),
-                lambda i: F.concat(
-                    F.element_at(b, i), F.lit("|"), F.element_at(b, i + 1)
-                ),
-            ),
-        ).otherwise(F.array())
-
-    pairs = F.flatten(F.transform(F.array(bp), _pairs))
     g = (
-        d.select("doc_id", F.explode(pairs).alias("pair"))
+        d.select("doc_id", F.explode(P.word_grams(bp, 2)).alias("pair"))
         .groupBy("pair")
         .agg(
             F.count("*").alias("n_occurrences"),
@@ -616,25 +576,13 @@ def text_hashed_ngram_features(spark, sf_dir):
     shuffle is perfectly spread.
     """
     d = _docs(spark, sf_dir)
-    toks = _ws(F.col("text"))
-
-    # lambda-variable re-bind (the word_shingles quadratic guard):
-    # unigrams + bigrams from ONE evaluation of the split per row.
-    def _grams(w):
-        bigrams = F.when(
-            F.size(w) >= 2,
-            F.transform(
-                F.sequence(F.lit(1), F.size(w) - 1),
-                lambda i: F.concat(
-                    F.element_at(w, i), F.lit("|"), F.element_at(w, i + 1)
-                ),
-            ),
-        ).otherwise(F.array())
-        return F.concat(w, bigrams)
-
-    grams = F.flatten(F.transform(F.array(toks), _grams))
+    # The split is projected once; unigrams and bigrams both read it.
+    w = F.col("w")
     return (
-        d.select("doc_id", F.explode(grams).alias("g"))
+        d.select("doc_id", P.ws_tokens(F.col("text")).alias("w"))
+        .select(
+            "doc_id", F.explode(F.concat(w, P.word_grams(w, 2))).alias("g")
+        )
         .select(
             "doc_id",
             (P.md5_long(F.col("g")) % FEATURE_BUCKETS).alias("bucket"),
@@ -650,6 +598,30 @@ def text_hashed_ngram_features(spark, sf_dir):
 
 WINNOW_K = 3  # gram width (tokens)
 WINNOW_W = 4  # window width (grams); guarantee length = w + k - 1 tokens
+
+
+def _winnow_windows(occ):
+    """(doc_id, wstart, minh): the minimum gram hash of every FULL
+    ``WINNOW_W``-gram window of a ``_kgram_occ`` table, keyed by the
+    window's first gram position — one ``partitionBy(doc_id)`` window,
+    shared by the winnowing fingerprint and match ids."""
+    from pyspark.sql import Window
+
+    wf = (
+        Window.partitionBy("doc_id")
+        .orderBy("pos")
+        .rowsBetween(Window.currentRow, WINNOW_W - 1)
+    )
+    return (
+        occ.select(
+            "doc_id",
+            F.col("pos").alias("wstart"),
+            F.min("g").over(wf).alias("minh"),
+            F.count("*").over(wf).alias("wlen"),
+        )
+        .filter(F.col("wlen") == WINNOW_W)
+        .drop("wlen")
+    )
 
 
 @query(
@@ -710,47 +682,8 @@ def doc_winnow_fingerprints(spark, sf_dir):
     a constant ``w``. Everything shuffles on doc_id only. Integer-only
     math — no cross-engine float surface at all.
     """
-    from pyspark.sql import Window
-
-    d = _docs(spark, sf_dir)
-    toks = _ws(F.col("text"))
-
-    def _grams(tk):
-        m = F.size(tk)
-        return F.when(
-            m >= WINNOW_K,
-            F.transform(
-                F.sequence(F.lit(1), m - (WINNOW_K - 1)),
-                lambda i: F.struct(
-                    i.alias("pos"),
-                    P.md5_long(
-                        F.concat_ws(
-                            "|",
-                            *[
-                                F.element_at(tk, i + j)
-                                for j in range(WINNOW_K)
-                            ],
-                        )
-                    ).alias("g"),
-                ),
-            ),
-        ).otherwise(F.array())
-
-    occ = (
-        d.select("doc_id", F.explode(F.flatten(F.transform(F.array(toks), _grams))).alias("s"))
-        .select("doc_id", F.col("s.pos").alias("pos"), F.col("s.g").alias("g"))
-    )
-    wf = (
-        Window.partitionBy("doc_id")
-        .orderBy("pos")
-        .rowsBetween(Window.currentRow, WINNOW_W - 1)
-    )
-    wins = occ.select(
-        "doc_id",
-        F.col("pos").alias("wstart"),
-        F.min("g").over(wf).alias("minh"),
-        F.count("*").over(wf).alias("wlen"),
-    ).filter(F.col("wlen") == WINNOW_W)
+    occ = _kgram_occ(_docs(spark, sf_dir), WINNOW_K)
+    wins = _winnow_windows(occ)
     members = wins.select(
         "doc_id",
         "wstart",
@@ -1043,54 +976,9 @@ def dedup_winnow_match(spark, sf_dir):
     fan-out at corpus scale; everything downstream shuffles on the
     60-bit hash or doc_id, never all-pairs.
     """
-    from pyspark.sql import Window
-
-    d = _docs(spark, sf_dir)
-    toks = _ws(F.col("text"))
-
-    def _grams(tk):
-        m = F.size(tk)
-        return F.when(
-            m >= WINNOW_K,
-            F.transform(
-                F.sequence(F.lit(1), m - (WINNOW_K - 1)),
-                lambda i: F.struct(
-                    i.alias("pos"),
-                    P.md5_long(
-                        F.concat_ws(
-                            "|",
-                            *[
-                                F.element_at(tk, i + j)
-                                for j in range(WINNOW_K)
-                            ],
-                        )
-                    ).alias("g"),
-                ),
-            ),
-        ).otherwise(F.array())
-
-    occ = (
-        d.select(
-            "doc_id",
-            F.explode(F.flatten(F.transform(F.array(toks), _grams))).alias(
-                "s"
-            ),
-        )
-        .select("doc_id", F.col("s.pos").alias("pos"), F.col("s.g").alias("g"))
-    )
-    wf = (
-        Window.partitionBy("doc_id")
-        .orderBy("pos")
-        .rowsBetween(Window.currentRow, WINNOW_W - 1)
-    )
     fps = (
-        occ.select(
-            "doc_id",
-            F.min("g").over(wf).alias("fp_hash"),
-            F.count("*").over(wf).alias("wlen"),
-        )
-        .filter(F.col("wlen") == WINNOW_W)
-        .select("doc_id", "fp_hash")
+        _winnow_windows(_kgram_occ(_docs(spark, sf_dir), WINNOW_K))
+        .select("doc_id", F.col("minh").alias("fp_hash"))
         .distinct()
     )
     rare = fps.groupBy("fp_hash").agg(F.count("*").alias("df")).filter(

@@ -4510,7 +4510,7 @@ def agg_bitmap_distinct(spark, sf_dir):
     "agg_session_bounce_rate",
     oracle="""
     WITH l AS (
-      SELECT user_id, ts,
+      SELECT user_id, ts, event_id,
              CASE WHEN lag(ts) OVER w IS NULL
                   OR ts - lag(ts) OVER w >= INTERVAL 30 MINUTE
                   THEN 1 ELSE 0 END AS new_sess
@@ -4518,7 +4518,7 @@ def agg_bitmap_distinct(spark, sf_dir):
       WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
     ), s AS (
       SELECT user_id, ts,
-             sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts
+             sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
                                  ROWS UNBOUNDED PRECEDING) AS sess_id
       FROM l
     ), g AS (
@@ -4542,7 +4542,7 @@ def agg_session_bounce_rate(spark, sf_dir):
     the streaming_session_stats contract): a session with exactly one
     event is a bounce.  Sessionization is the lag→flag→running-sum
     idiom (one exchange on user_id; both window frames reuse it),
-    then two map-combinable aggregations.  The lag window orders by
+    then two map-combinable aggregations.  Both windows order by
     (ts, event_id) so simultaneous events sessionize identically on
     both engines.
     """

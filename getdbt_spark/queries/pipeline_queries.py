@@ -638,8 +638,7 @@ def doc_fingerprint(spark, sf_dir):
     scale, k min values per doc give a locality-sensitive sketch)."""
     d = P.spread(_docs(spark, sf_dir))
     w = P.ws_tokens(F.col("text"))
-    grams = P.word_shingles(w, 2)
-    # word_shingles dedups; fingerprint min is unaffected by dedup.
+    grams = P.word_grams(w, 2)
     return d.filter(F.size(w) >= 2).select(
         "doc_id",
         F.md5(F.col("text")).alias("md5_full"),
@@ -1043,8 +1042,10 @@ def text_ngram_profile(spark, sf_dir):
     d = P.spread(_docs(spark, sf_dir))
     w = P.ws_tokens(F.col("text"))
     f = (
-        d.filter(F.size(w) >= 3)
-        .select("lang", F.explode(P.word_shingles(w, 3)).alias("gram"))
+        d.select(
+            "lang",
+            F.explode(F.array_distinct(P.word_grams(w, 3))).alias("gram"),
+        )
         .groupBy("lang", "gram")
         .agg(F.count("*").alias("doc_freq"))
     )
@@ -1440,8 +1441,10 @@ def text_decontaminate(spark, sf_dir):
     """
     d = P.spread(_docs(spark, sf_dir))
     w = P.ws_tokens(F.col("text"))
-    base = d.filter(F.size(w) >= 3).select(
-        "doc_id", "source", F.explode(P.word_shingles(w, 3)).alias("g")
+    base = d.select(
+        "doc_id",
+        "source",
+        F.explode(F.array_distinct(P.word_grams(w, 3))).alias("g"),
     )
     # Bench side pre-aggregated to one row per gram carrying the set of
     # benchmark ids: the corpus join is then 1:1 per matched gram (the
@@ -1521,12 +1524,7 @@ def text_repetition_stats(spark, sf_dir):
             ).alias("top_word_frac")
         )
     )
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size(F.col("w")) - 1),
-        lambda i: F.concat_ws(
-            "|", F.element_at("w", i), F.element_at("w", i + 1)
-        ),
-    )
+    grams = P.word_grams(F.col("w"), 2)
     gstat = toks.select(
         "doc_id",
         E.round_to(
@@ -1651,7 +1649,7 @@ def dedup_containment(spark, sf_dir):
     (distinct-gram) arrays per candidate and intersects them JVM-side.
 
     Shingles come from the Arrow ``_shingles_and_sig`` kernel as
-    64-bit HASHED grams (the interpreted ``word_shingles`` HOF was
+    64-bit HASHED grams (the interpreted ``word_grams`` HOF was
     the query's hot spot at sf0.1) — df counts, blocking, and
     intersection sizes over hashed grams equal the oracle's textual
     grams up to ~n²/2^64 collisions, the same equivalence the
@@ -1841,12 +1839,7 @@ def pipeline_end_to_end(spark, sf_dir):
         (F.col("n_chars") >= 100) & (F.size("w") >= 20) & (ttr > 0.15)
     )
     exact_key = F.md5(F.lower(F.trim(F.col("text"))))
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size(F.col("w")) - 1),
-        lambda i: F.concat_ws(
-            "|", F.element_at("w", i), F.element_at("w", i + 1)
-        ),
-    )
+    grams = P.word_grams(F.col("w"), 2)
     # winnowing signature: the FOUR smallest distinct bigram hashes
     # (a single min collides globally on a tiny vocabulary; k=4 is the
     # standard winnowing density dial)

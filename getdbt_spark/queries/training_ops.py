@@ -1658,7 +1658,7 @@ def aug_span_corruption(spark, sf_dir):
     sequence, no shuffle, no UDF, no window.  The start array is
     bound as a LAMBDA VARIABLE (single-element-array wrap) so it is
     computed once per document, not once per position (the
-    ``word_shingles`` hugedoc lesson).
+    ``word_grams`` hugedoc lesson).
     """
     d = _docs(spark, sf_dir)
     toks = P.ws_tokens(F.coalesce(F.col("text"), F.lit("")))
@@ -2296,11 +2296,11 @@ def dedup_substring_remove(spark, sf_dir):
     """
     from pyspark.sql import Window
 
-    from .curation import SPAN_K, _kgram_occ, _ws
+    from .curation import SPAN_K, _kgram_occ
 
     d = _docs(spark, sf_dir)
-    n = F.size(_ws(F.col("text")))
-    occ = _kgram_occ(d)
+    n = F.size(P.ws_tokens(F.col("text")))
+    occ = _kgram_occ(d, SPAN_K)
     dupg = (
         occ.groupBy("g")
         .agg(

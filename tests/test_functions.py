@@ -376,6 +376,51 @@ def test_late_data_audit_watermark_semantics(spark):
         assert out[etype].n_late == late
 
 
+def test_session_bounce_rate_tied_events_match_oracle(spark, tmp_path):
+    """Two events of one user at the same ``ts``, more than 30 min
+    after the previous one: both windows of the sessionization order
+    by ``(ts, event_id)``, so the tie opens ONE session holding both
+    events on either engine, whatever order the engine reads them in."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from getdbt_spark.queries import ORACLES, QUERIES, load_all
+
+    mon = datetime.datetime(2024, 1, 8, 10, 0)
+    tue = datetime.datetime(2024, 1, 9, 12, 0)
+    pq.write_table(
+        pa.table(
+            {
+                # the later event_id is written first
+                "event_id": pa.array([1, 3, 2], pa.int64()),
+                "ts": pa.array([mon, tue, tue], pa.timestamp("us")),
+                "user_id": pa.array([7, 7, 7], pa.int64()),
+                "event_type": ["view", "click", "view"],
+                "value": pa.array([1.0, 2.0, 3.0], pa.float64()),
+                "props": ["{}", "{}", "{}"],
+            }
+        ),
+        f"{tmp_path}/events.parquet",
+    )
+    load_all()
+    qid = "agg_session_bounce_rate"
+    rows = sorted(
+        (r.dow, r.n_sessions, r.n_bounces, r.bounce_rate,
+         r.avg_events_per_session)
+        for r in QUERIES[qid](spark, str(tmp_path)).collect()
+    )
+    # Monday: one single-event session (a bounce); Tuesday: one
+    # session of the two tied events.
+    assert rows == [(1, 1, 1, 1.0, 1.0), (2, 1, 0, 0.0, 2.0)]
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW events AS SELECT * FROM "
+        f"read_parquet('{tmp_path}/events.parquet')"
+    )
+    assert sorted(con.execute(ORACLES[qid]).fetchall()) == rows
+
+
 def test_alpha_temperature_shares_normalize_and_flatten(spark):
     """α-tempered shares sum to 1 and sit between the raw shares and
     uniform: tail languages gain, head languages lose."""

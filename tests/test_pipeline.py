@@ -372,20 +372,15 @@ def test_decontaminate_flags_only_true_overlaps(spark, docs):
     from getdbt_spark.queries.pipeline_queries import text_decontaminate
 
     out = text_decontaminate(spark, SF).collect()
+    grams = F.array_distinct(P.word_grams(P.ws_tokens(F.col("text")), 3))
     bench = {
         r.doc_id: set(r.g)
-        for r in docs.select(
-            "doc_id",
-            P.word_shingles(P.ws_tokens(F.col("text")), 3).alias("g"),
-        ).collect()
+        for r in docs.select("doc_id", grams.alias("g")).collect()
         if r.doc_id % 97 == 0
     }
     corpus = {
         r.doc_id: set(r.g)
-        for r in docs.select(
-            "doc_id",
-            P.word_shingles(P.ws_tokens(F.col("text")), 3).alias("g"),
-        ).collect()
+        for r in docs.select("doc_id", grams.alias("g")).collect()
     }
     for row in out:
         assert row.doc_id % 97 != 0

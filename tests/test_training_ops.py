@@ -888,8 +888,8 @@ def test_scaled_k_bounds_candidate_mass(spark):
     assert k_scaled > 8, "sf0.1 must exercise a non-floor k"
 
     def pair_count(k: int) -> int:
-        cell = P._kmeans_assign(
-            q, P._kmeans_train(q, k, 2), nprobe=2
+        cell = P._pq_assign(
+            q, P._pq_train(q, [(0, None, k, 2)]), [(0, 0, None, 2)]
         ).select("vec_id", "cent_id")
         ca = cell
         cb = cell.select(
