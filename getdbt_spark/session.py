@@ -7,12 +7,48 @@ factory pins ``spark.sql.session.timeZone``.  All scale-relevant
 defaults (AQE, skew-join handling, dynamic partition overwrite) are
 set here once so every entry point — tests, bench, driver — runs the
 same way a production cluster would.
+
+``get_spark`` boots the driver JVM from a class-data-sharing (CDS)
+archive: the JVM's saved image of already parsed and verified classes,
+which it maps at start instead of loading each class again (JDK 17
+dynamic archive; it halves perfbench's ``setup_s``, JVM boot plus the
+first action, on 4 cores).  The archive lives in
+``.spark_cds/`` at the repo root, named by a hash of what the JVM
+checks it against (:func:`cds_launch`).  When it is missing, the
+process dumps it when its JVM exits (``-XX:ArchiveClassesAtExit``, into
+a per-process file that an exit hook publishes only after the JVM
+exited cleanly); every later process maps it
+(``-XX:SharedArchiveFile``).  The options travel in
+``spark.driver.defaultJavaOptions``, because ``--driver-java-options``
+(perfbench's ``PYSPARK_SUBMIT_ARGS``) replaces
+``spark.driver.extraJavaOptions``.  Three traps:
+
+- The JVM refuses to dump or map an archive while a non-empty
+  directory is on the classpath, and the launcher puts the Spark conf
+  dir there.  When that dir holds only ``*.template`` files, the gateway
+  launch points ``SPARK_CONF_DIR`` at an empty stand-in; when it holds a
+  real file (``spark-defaults.conf``, ``log4j2.properties``,
+  ``spark-env.sh``, ...), there is no archive and the session boots as
+  before.
+- Janino's classes come from a signed jar, which the JDK never
+  archives: generated-code compilation still loads them at its first use.
+- The verification driver's ``__spark_entry__`` session builds its own
+  JVM and gets no archive (see :func:`configure`).
 """
 
 from __future__ import annotations
 
+import atexit
+import contextlib
+import hashlib
 import os
+import shlex
+import shutil
+import subprocess
+from typing import NamedTuple
 
+from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
 # Package root: Python workers need it on their path to unpickle
@@ -102,6 +138,10 @@ def configure(spark: SparkSession) -> SparkSession:
       cache only from its own builder or ``spark-defaults.conf``;
       otherwise it keeps Spark's 100 entries and recompiles on every
       run.
+
+    Nor can it give that session's JVM the class-data archive
+    (:func:`cds_launch`): the archive is mapped at JVM launch, so a
+    session someone else launched boots and loads classes at full cost.
     """
     for k, v in RUNTIME_CONFS.items():
         try:
@@ -177,6 +217,169 @@ def ensure_checkpoint_dir(spark: SparkSession) -> None:
         )
 
 
+# Where ``get_spark`` keeps the driver's class-data archive (gitignored).
+CDS_DIR = os.path.join(PACKAGE_ROOT, ".spark_cds")
+
+# The launcher puts each of these on the driver's classpath as well; a
+# directory there makes the JVM refuse the archive.
+_CLASSPATH_ENV = (
+    "HADOOP_CONF_DIR",
+    "YARN_CONF_DIR",
+    "SPARK_DIST_CLASSPATH",
+    "SPARK_PREPEND_CLASSES",
+)
+
+# The JVM shares this process's stdout, whose last line bench.py and
+# perfbench keep for their JSON record; the dump warns once per skipped
+# class (every signed Janino class) unless these tags are silenced.
+_CDS_QUIET = "-Xlog:cds=off -Xlog:cds+dynamic=off"
+
+# How long the exit hook waits for a dumping JVM: the dump took 13-15 s
+# on 4 cores, against 0.4 s for a plain JVM exit.
+_DUMP_WAIT_S = 120
+
+
+class CdsLaunch(NamedTuple):
+    """How to launch the driver JVM with the class-data archive."""
+
+    java_options: str  # the ``spark.driver.defaultJavaOptions`` value
+    conf_dir: str  # the empty ``SPARK_CONF_DIR`` stand-in
+    archive: str  # the published archive
+    dump_to: str | None  # where the JVM dumps at exit (archive missing)
+
+
+def cds_launch(heap: str, cds_dir: str) -> CdsLaunch | None:
+    """The archive launch for a driver JVM with ``heap`` max heap, or
+    None to boot as before.
+
+    None when the Spark conf dir holds a real file, when the launcher
+    adds other classpath entries (``_CLASSPATH_ENV``), when no java or
+    Spark jars dir is found, or when ``cds_dir`` cannot be written.
+    The archive's name hashes what the JVM checks it against: the JDK
+    (``java.home`` and its ``release`` file), name, size and mtime of
+    every Spark jar, the stand-in conf dir and the heap size (which
+    picks the JDK's base archive).  Dump files of dead processes are
+    deleted here.
+    """
+    spark_home = _find_spark_home()
+    conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
+    try:
+        conf_files = os.listdir(conf_dir)
+    except FileNotFoundError:
+        conf_files = []
+    if any(not f.endswith(".template") for f in conf_files):
+        return None
+    if any(os.environ.get(v) for v in _CLASSPATH_ENV):
+        return None
+    # The java spark-class runs: $JAVA_HOME/bin/java, else the PATH's.
+    java = (
+        os.path.join(os.environ["JAVA_HOME"], "bin", "java")
+        if os.environ.get("JAVA_HOME")
+        else shutil.which("java")
+    )
+    jars = os.path.join(spark_home, "jars")
+    if java is None or not os.path.isdir(jars):
+        return None
+    java_home = os.path.dirname(os.path.dirname(os.path.realpath(java)))
+    stand_in = os.path.join(cds_dir, "conf")
+    key = hashlib.sha256()
+    release = os.path.join(java_home, "release")  # the JDK's version record
+    with contextlib.suppress(OSError), open(release, "rb") as fh:
+        key.update(fh.read())
+    key.update(f"{java_home}\n{stand_in}\n{heap}\n".encode())
+    for name in sorted(os.listdir(jars)):
+        st = os.stat(os.path.join(jars, name))
+        key.update(f"{name} {st.st_size} {st.st_mtime_ns}\n".encode())
+    archive = os.path.join(cds_dir, f"driver-{key.hexdigest()[:16]}.jsa")
+    try:
+        os.makedirs(stand_in, exist_ok=True)
+    except OSError:
+        return None
+    if not os.access(cds_dir, os.W_OK | os.X_OK):
+        return None
+    _drop_dead_dumps(cds_dir)
+    if os.path.isfile(archive):
+        flag, dump_to = f"-XX:SharedArchiveFile={shlex.quote(archive)}", None
+    else:
+        dump_to = f"{archive}.{os.getpid()}.tmp"
+        flag = f"-XX:ArchiveClassesAtExit={shlex.quote(dump_to)}"
+    return CdsLaunch(f"{_CDS_QUIET} {flag}", stand_in, archive, dump_to)
+
+
+def _drop_dead_dumps(cds_dir: str) -> None:
+    """Delete the dump files (``<archive>.<pid>.tmp``) of processes
+    that are gone: a killed process never publishes its dump."""
+    for name in os.listdir(cds_dir):
+        stem, _, ext = name.rpartition(".")
+        pid = stem.rpartition(".")[2]
+        if ext != "tmp" or not pid.isdigit():
+            continue
+        try:
+            os.kill(int(pid), 0)
+        except ProcessLookupError:
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(os.path.join(cds_dir, name))
+        except PermissionError:
+            pass  # alive, another user's
+
+
+def _publish_dump(proc: subprocess.Popen, dump_to: str, archive: str) -> None:
+    """Exit hook of a dumping process: let the JVM exit (it does when
+    its stdin closes) and publish its dump only if it exited cleanly.
+    A JVM killed mid-dump leaves a truncated archive whose intact
+    header crashes every later JVM at boot (SIGBUS)."""
+    sc = SparkContext._active_spark_context
+    if sc is not None:
+        # A JVM that exits under a running context cuts the Python
+        # accumulator server off mid-read (EOFError on stderr).
+        sc.stop()
+    with contextlib.suppress(OSError):
+        proc.stdin.close()
+    try:
+        proc.wait(timeout=_DUMP_WAIT_S)
+    except subprocess.TimeoutExpired:
+        pass
+    with contextlib.suppress(FileNotFoundError):
+        if proc.returncode == 0:
+            os.replace(dump_to, archive)
+        else:
+            os.remove(dump_to)
+
+
+def _launch(builder: SparkSession.Builder, heap: str) -> SparkSession:
+    """``builder.getOrCreate()``, booting a new driver JVM from the
+    class-data archive when there is one to use (module note)."""
+    if SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ:
+        return builder.getOrCreate()  # the JVM is already up
+    cds = cds_launch(heap, CDS_DIR)
+    if cds is None:
+        return builder.getOrCreate()
+    caller_conf_dir = os.environ.get("SPARK_CONF_DIR")
+    os.environ["SPARK_CONF_DIR"] = cds.conf_dir
+    try:
+        spark = builder.config(
+            "spark.driver.defaultJavaOptions", cds.java_options
+        ).getOrCreate()
+    except Exception:
+        if cds.dump_to is not None or SparkContext._gateway is not None:
+            raise
+        # The JVM died at boot mapping a damaged archive: drop the
+        # archive (the next process dumps a fresh one), boot without.
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(cds.archive)
+        spark = builder.config("spark.driver.defaultJavaOptions", "").getOrCreate()
+    finally:
+        if caller_conf_dir is None:
+            del os.environ["SPARK_CONF_DIR"]
+        else:
+            os.environ["SPARK_CONF_DIR"] = caller_conf_dir
+    if cds.dump_to is not None:
+        atexit.register(
+            _publish_dump, spark.sparkContext._gateway.proc, cds.dump_to, cds.archive
+        )
+    return spark
+
+
 def get_spark(
     app_name: str = "getdbt_spark",
     master: str | None = None,
@@ -197,6 +400,7 @@ def get_spark(
     if shuffle_partitions is None:
         shuffle_partitions = int(cpus) if cpus.isdigit() else usable
 
+    heap = os.environ.get("SPARK_DRIVER_MEMORY", "8g")
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -205,7 +409,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         # Keep stdout parseable: the driver greps bench.py's JSON line.
         .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
+        .config("spark.driver.memory", heap)
         .config(
             "spark.python.sql.dataFrameDebugging.enabled",
             str(DF_DEBUGGING).lower(),
@@ -214,7 +418,7 @@ def get_spark(
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    spark = _launch(builder, heap)
     sc = spark.sparkContext
     sc.setLogLevel("ERROR")
     # Append (never replace) the package root to the Python workers'

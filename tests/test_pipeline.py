@@ -390,7 +390,7 @@ def test_decontaminate_flags_only_true_overlaps(spark, docs):
         assert row.n_bench_hits == true_hits > 0
 
 
-def test_repetition_stats_bounds_and_extremes(spark):
+def test_repetition_stats_bounds_and_extremes(spark, tmp_path):
     """Fractions stay in [0,1]; a fully repeated doc maxes both
     metrics, an all-distinct doc zeroes the bigram metric."""
     from getdbt_spark.queries import QUERIES, load_all
@@ -405,51 +405,16 @@ def test_repetition_stats_bounds_and_extremes(spark):
     )
     assert bad.count() == 0
 
-    probe = spark.createDataFrame(
+    probe = str(tmp_path)
+    spark.createDataFrame(
         [(1, "a a a a a a"), (2, "b c d e f g")], "doc_id long, text string"
-    )
+    ).write.parquet(f"{probe}/documents.parquet")
     rows = {
         r.doc_id: r
-        for r in _repetition_over(spark, probe).collect()
+        for r in QUERIES["text_repetition_stats"](spark, probe).collect()
     }
     assert rows[1].top_word_frac == 1.0 and rows[1].dup_bigram_frac > 0.7
     assert rows[2].top_word_frac < 0.2 and rows[2].dup_bigram_frac == 0.0
-
-
-def _repetition_over(spark, probe):
-    """Run the repetition metric formula over an in-memory frame (the
-    registered query is bound to the documents table; the formula is
-    re-applied here to characterize extremes)."""
-    from getdbt_spark import functions as E
-
-    w = P.ws_tokens(F.col("text"))
-    toks = probe.filter(F.size(w) >= 2).select("doc_id", w.alias("w"))
-    wstat = (
-        toks.select("doc_id", F.explode("w").alias("word"))
-        .groupBy("doc_id", "word")
-        .agg(F.count("*").alias("c"))
-        .groupBy("doc_id")
-        .agg(
-            E.round_to(F.max("c").cast("double") / F.sum("c"), 6).alias(
-                "top_word_frac"
-            )
-        )
-    )
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size(F.col("w")) - 1),
-        lambda i: F.concat_ws(
-            "|", F.element_at("w", i), F.element_at("w", i + 1)
-        ),
-    )
-    gstat = toks.select(
-        "doc_id",
-        E.round_to(
-            F.lit(1.0)
-            - F.size(F.array_distinct(grams)).cast("double") / F.size(grams),
-            6,
-        ).alias("dup_bigram_frac"),
-    )
-    return wstat.join(gstat, "doc_id")
 
 
 def test_train_test_split_partitions_every_doc_once(spark, docs):

@@ -4,20 +4,26 @@ a deployment that sets its own), and PySpark's per-process
 debugging-wrapper cache on a session built by someone else.  The
 shared session pins the confs themselves: ``RUNTIME_CONFS`` holds only
 runtime-settable confs, and the generated-code cache is large enough
-that a warm run reuses its compiled classes."""
+that a warm run reuses its compiled classes.  The class-data archive's
+launch options are unit-tested; its dump, load and damaged-archive
+boots each run in a fresh interpreter against a scratch archive dir."""
 
 from __future__ import annotations
 
+import glob
 import os
+import shutil
 import subprocess
 import sys
+
+import pytest
 
 from getdbt_spark import models as M
 from getdbt_spark.__main__ import DEFAULT_SF_DIR
 from getdbt_spark.fixtures import sources_map
 from getdbt_spark.io import corpus_run_date
 from getdbt_spark.runner import Runner
-from getdbt_spark.session import RUNTIME_CONFS
+from getdbt_spark.session import _CLASSPATH_ENV, RUNTIME_CONFS, cds_launch
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF = DEFAULT_SF_DIR  # the sf0.001 corpus
@@ -198,3 +204,138 @@ def test_warm_dashboard_run_reuses_compiled_classes(spark):
     run_once()
     compiled = codegen.METRIC_COMPILATION_TIME().getCount() - before
     assert compiled <= 16, compiled
+
+
+@pytest.fixture
+def template_conf(tmp_path, monkeypatch):
+    """A Spark conf dir holding only templates, and no other classpath
+    entry from the environment: the case the archive serves."""
+    conf = tmp_path / "spark-conf"
+    conf.mkdir()
+    (conf / "spark-defaults.conf.template").write_text("")
+    monkeypatch.setenv("SPARK_CONF_DIR", str(conf))
+    for v in _CLASSPATH_ENV:
+        monkeypatch.delenv(v, raising=False)
+    return conf
+
+
+def test_cds_launch_skips_a_real_conf_dir(template_conf, tmp_path):
+    """A real conf file must reach the JVM, which the empty stand-in
+    would hide: no archive flags, and ``SPARK_CONF_DIR`` untouched."""
+    (template_conf / "spark-defaults.conf").write_text("spark.foo 1\n")
+    before = dict(os.environ)
+    assert cds_launch("8g", str(tmp_path / "cds")) is None
+    assert dict(os.environ) == before
+
+
+def test_cds_launch_dumps_when_the_archive_is_missing(template_conf, tmp_path):
+    """No archive yet: the JVM dumps into this process's own file, and
+    the dump file of a process that is gone is deleted."""
+    cds_dir = tmp_path / "cds"
+    first = cds_launch("8g", str(cds_dir))
+    gone = subprocess.Popen(["true"])
+    gone.wait()
+    stale = f"{first.archive}.{gone.pid}.tmp"
+    open(stale, "w").close()
+    launch = cds_launch("8g", str(cds_dir))
+    assert launch.dump_to == f"{launch.archive}.{os.getpid()}.tmp"
+    assert launch.java_options.split() == [
+        "-Xlog:cds=off",
+        "-Xlog:cds+dynamic=off",
+        f"-XX:ArchiveClassesAtExit={launch.dump_to}",
+    ]
+    assert launch.conf_dir == str(cds_dir / "conf")
+    assert os.listdir(launch.conf_dir) == []
+    assert not os.path.exists(stale)
+    assert cds_launch("16g", str(cds_dir)).archive != launch.archive
+
+
+def test_cds_launch_loads_a_published_archive(template_conf, tmp_path):
+    launch = cds_launch("8g", str(tmp_path / "cds"))
+    open(launch.archive, "wb").close()
+    again = cds_launch("8g", str(tmp_path / "cds"))
+    assert again.dump_to is None
+    assert again.java_options.split()[-1] == f"-XX:SharedArchiveFile={launch.archive}"
+
+
+def test_cds_launch_skips_an_unwritable_dir(template_conf, tmp_path):
+    """A dir that cannot be created (its parent is a file) gives no
+    flags; a root test process could write into a read-only mode dir."""
+    (tmp_path / "file").write_text("")
+    assert cds_launch("8g", str(tmp_path / "file" / "cds")) is None
+
+
+# Boots ``get_spark`` against the archive dir in argv[1] and prints the
+# archive flag the JVM got, the caller's SPARK_CONF_DIR after the launch,
+# a row count, then a sentinel; the exit hook may still dump after it.
+CDS_BOOT = (
+    "import os, sys\n"
+    "import getdbt_spark.session as S\n"
+    "S.CDS_DIR = sys.argv[1]\n"
+    "spark = S.get_spark(master='local[1]', shuffle_partitions=1)\n"
+    "args = spark._jvm.java.lang.management.ManagementFactory"
+    ".getRuntimeMXBean().getInputArguments()\n"
+    "print('cds', *[a.split('=')[0] for a in args"
+    " if a.startswith(('-XX:ArchiveClassesAtExit', '-XX:SharedArchiveFile'))])\n"
+    "print('conf_dir', os.environ.get('SPARK_CONF_DIR'))\n"
+    "print('rows', spark.range(10).count())\n"
+    "print('SENTINEL')\n"
+)
+
+
+def _cds_boot(cds_dir, cwd):
+    env = _env_without_repo()
+    env.pop("SPARK_CONF_DIR", None)
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in (REPO, env.get("PYTHONPATH")) if p
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", CDS_BOOT, str(cds_dir)],
+        cwd=cwd,
+        capture_output=True,
+        text=True,
+        timeout=300,
+        env=env,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    lines = proc.stdout.splitlines()
+    assert lines[-1] == "SENTINEL", proc.stdout[-2000:]
+    assert "[cds" not in proc.stdout, proc.stdout[-2000:]
+    assert "conf_dir None" in lines and "rows 10" in lines, proc.stdout[-2000:]
+    return next(ln for ln in lines if ln.startswith("cds"))
+
+
+@pytest.fixture(scope="module")
+def cds_dir(tmp_path_factory):
+    """An archive dir after one dumping boot, and that boot's flag."""
+    d = tmp_path_factory.mktemp("spark_cds")
+    flag = _cds_boot(d, d)
+    return d, flag
+
+
+def test_cds_dump_then_load_keep_stdout_clean(cds_dir):
+    """The first boot dumps at JVM exit and publishes the archive; the
+    next maps it.  Neither prints JVM text after the script's last
+    line, which bench.py and perfbench keep for their records."""
+    d, dumped = cds_dir
+    assert dumped == "cds -XX:ArchiveClassesAtExit"
+    assert len(glob.glob(str(d / "*.jsa"))) == 1
+    assert glob.glob(str(d / "*.tmp")) == []
+    assert _cds_boot(d, d) == "cds -XX:SharedArchiveFile"
+
+
+def test_cds_truncated_archive_falls_back(cds_dir):
+    """A truncated archive with an intact header kills the JVM at boot
+    (SIGBUS).  ``get_spark`` must delete it and boot without one."""
+    d, _ = cds_dir
+    (archive,) = glob.glob(str(d / "*.jsa"))
+    saved = str(d / "saved.bin")
+    shutil.copyfile(archive, saved)
+    try:
+        with open(saved, "rb") as src, open(archive + ".cut", "wb") as dst:
+            dst.write(src.read(os.path.getsize(saved) // 2))
+        os.replace(archive + ".cut", archive)
+        assert _cds_boot(d, d) == "cds"
+        assert not os.path.exists(archive)
+    finally:
+        os.replace(saved, archive)
