@@ -82,19 +82,3 @@ def sql(spark: SparkSession, query: str) -> DataFrame:
             "materialized model as a temp view for sql())"
         )
     return spark.sql(query)
-
-
-def plan_report(df: DataFrame) -> dict:
-    """Physical-plan summary (exchanges / joins / pushdown / codegen)
-    — see getdbt_spark.plans."""
-    from .plans import plan_report as _pr
-
-    return _pr(df)
-
-
-def plan_lint(df: DataFrame, **kwargs) -> list[str]:
-    """Named plan-shape findings; empty means the frame passes the
-    engine's scale discipline — see getdbt_spark.plans."""
-    from .plans import plan_lint as _pl
-
-    return _pl(df, **kwargs)

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from .registry import MODELS, DQTest, Model
 from .runner import Runner
+from .session import lineage_cut
 
 
 def _failures(
@@ -124,9 +125,10 @@ def run_dq(
         for _, t in pairs:
             if t.to is not None:
                 uses[t.to] += 1
+        cut = lineage_cut(runner.spark)
         for name, n_uses in uses.items():
             if n_uses > 1:
-                out[name] = out[name].localCheckpoint()
+                out[name] = cut(out[name])
     rows = [
         _failures(out[name], t, out).select(
             F.lit(name).alias("model_name"),

@@ -33,6 +33,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .session import lineage_cut
+
 
 def _col(c: Column | str) -> Column:
     return F.col(c) if isinstance(c, str) else c
@@ -320,29 +322,6 @@ def concat_bq(*cols: Column | str) -> Column:
     return F.concat(*[_col(c) for c in cols])
 
 
-def _lazy_cut(df: DataFrame) -> DataFrame:
-    """LAZY local checkpoint — ``with_running_total``'s lineage cut.
-
-    The helper needs two consumers (the per-slice totals that build
-    the offsets and the final offset join) to read ONE materialization
-    of the kernel output.  An EAGER ``localCheckpoint()`` achieves that
-    but pays a dedicated materialization job per invocation — the
-    fixed overhead that made ``pack_token_budget`` read 2× its
-    pre-rewrite baseline at sf0.1 (VERDICT r10 #2).  ``eager=False``
-    materializes on the FIRST consuming action instead (the broadcast
-    offsets build inside the single final action), saving one job
-    launch per invocation while keeping the identical guarantee: both
-    consumers share the checkpointed RDD's blocks, so they read the
-    same running totals.
-
-    Deliberately NOT ``persist()``: cached plans are matched by
-    LOGICAL PLAN, so a second invocation over a source whose files
-    changed (incremental warehouse rewrites) could silently serve the
-    first invocation's data.  Checkpoints are RDD-backed and never
-    plan-matched."""
-    return df.localCheckpoint(eager=False)
-
-
 def _nan_group_to_null(df: DataFrame, name: str) -> DataFrame:
     """Normalize NaN group values to NULL in ``with_running_total``'s
     materialized group column.
@@ -399,8 +378,10 @@ def with_running_total(
        not pandas: int64 weights stay int64 and float payload columns
        pass through byte-exact (a pandas roundtrip turns NaN into
        NULL — found by the round-11 property test);
-    3. one lazy checkpoint (``_lazy_cut``) so the per-slice totals and
-       the final projection read the SAME materialization;
+    3. one lazy lineage cut (``session.lineage_cut``, ``eager=False``)
+       so the per-slice totals and the final projection read the SAME
+       materialization without a job of its own (an eager cut made
+       ``pack_token_budget`` read 2× its pre-rewrite time at sf0.1);
     4. per-(slice, group) totals reduce to ≤ slices × groups rows —
        partition metadata, not data — and the exclusive offset per
        group is one window PARTITIONED BY the group over that bounded
@@ -485,7 +466,9 @@ def with_running_total(
                 names=list(b.schema.names) + ["__rt_local"],
             )
 
-    local = _lazy_cut(ranged.mapInArrow(_local_prefix, out_schema))
+    local = lineage_cut(spark)(
+        ranged.mapInArrow(_local_prefix, out_schema), eager=False
+    )
     totals = local.groupBy("__rt_pid", "__rt_grp").agg(
         F.sum("__rt_w").alias("__rt_n")
     )

@@ -65,7 +65,6 @@ def _clean_theme2(col):
     ],
     schema="atinternet_smarttag_streams_daily",
     materialized="incremental",
-    incremental_strategy="insert_overwrite",
     partition_by="evt_date",
 )
 def atinternet_smarttag_streams_daily_v4(ctx):

@@ -52,6 +52,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from . import functions as E
+from .session import lineage_cut
 
 # ---------------------------------------------------------------------------
 # Shared text primitives (engine-parity critical: every formula here has an
@@ -785,23 +786,6 @@ def _block_topk_fn(k: int):
     return _block_topk
 
 
-def lineage_cut_lazy(df: DataFrame) -> DataFrame:
-    """Lazy lineage cut for a multi-consumer intermediate: RELIABLE
-    ``checkpoint`` when the deployment configured a durable checkpoint
-    dir (cluster — see ``session.durable_checkpoints``), executor-local
-    otherwise.  Materializes on first action and then serves every
-    consumer from blocks — persist-equivalent reuse PLUS a truncated
-    plan, which is required where a frame containing a join feeds BOTH
-    sides of a ``cogroup`` (Spark 4.1's ambiguous-self-join detector
-    has no dedup path for cogroup children, so the un-cut plan fails
-    analysis outright)."""
-    from .session import durable_checkpoints  # lazy: avoids import cycle
-
-    if durable_checkpoints(df.sparkSession):
-        return df.checkpoint(eager=False)
-    return df.localCheckpoint(eager=False)
-
-
 def _rank_topk(partial: DataFrame, k: int) -> DataFrame:
     """The one cosine top-``k`` tail: ``(vec_id, neighbor_id, c)``
     candidates → ``(vec_id, rnk, neighbor_id, cos_sim)`` ranked per
@@ -1170,56 +1154,24 @@ def connected_components(pairs: DataFrame) -> DataFrame:
     logarithmic.  Each half-round is one groupBy + one equi-join on
     the EDGE set — never all-pairs, never a driver-side graph.
 
-    Fault tolerance at cluster scale: when the deployment configured a
-    durable checkpoint dir (see session.durable_checkpoints), the edge
-    set is cut from its lineage with a RELIABLE ``checkpoint()`` at
-    entry and every second round, persist-only in between — lineage
-    always roots in checkpoint FILES, so an executor loss recomputes
-    at most two star rounds, never the iteration history
-    (``localCheckpoint`` would store blocks on the very executors
-    whose loss it must survive).  On the single-host default the
-    executors ARE the driver, so lineage cuts use the one-job eager
-    ``localCheckpoint`` instead of paying a file round-trip per cut.
+    Lineage cuts (``session.lineage_cut``): the edge set is cut at
+    entry and every round, so round N reads a constant-depth plan
+    instead of nesting all N-1 predecessors.  On a deployment with a
+    checkpoint dir the cut is a reliable checkpoint, so an executor
+    loss recomputes at most one star round, never the iteration
+    history.
+
     The convergence probe fuses into the per-round dedup aggregation:
     one groupBy answers "did the edge set change" AND materializes the
     next round's input, and the answer is read from an ``Observation``
     filled by that materializing action — one action per round total.
     """
-    from pyspark import StorageLevel
     from pyspark.sql import Observation
 
-    from .session import durable_checkpoints  # lazy: avoids import cycle
-
-    durable = durable_checkpoints(pairs.sparkSession)
-
-    def _cut(df: DataFrame) -> DataFrame:
-        """Materialize + cut lineage.
-
-        Durable deployments (cluster checkpoint dir configured, or
-        GETDBT_SPARK_RELIABLE_CKPT=1): persist → checkpoint(eager) →
-        unpersist.  RDD checkpointing runs a SECOND job over the
-        lineage to write the checkpoint files; caching first turns
-        that second pass into a block read instead of a full recompute
-        (for the initial edge set that recompute would be the entire
-        pair-generation plan — measured 2× the whole query).  The
-        cache is dropped immediately: every later read comes from the
-        checkpoint files.
-
-        Single-host default: eager ``localCheckpoint`` — ONE job, no
-        file round-trip.  Locally the executors are the driver
-        process, so reliable files add no fault tolerance, only fixed
-        overhead (see session.durable_checkpoints).
-        """
-        if durable:
-            cached = df.persist(StorageLevel.MEMORY_AND_DISK)
-            out = cached.checkpoint(eager=True)
-            cached.unpersist()
-            return out
-        return df.localCheckpoint(eager=True)
-
+    cut = lineage_cut(pairs.sparkSession)
     u, v, m = F.col("u"), F.col("v"), F.col("m")
     # Orient every pair large→small; the loop invariant is u > v.
-    edges = _cut(
+    edges = cut(
         pairs.filter(F.col("a_id") != F.col("b_id"))
         .select(
             F.greatest("a_id", "b_id").alias("u"),
@@ -1239,13 +1191,7 @@ def connected_components(pairs: DataFrame) -> DataFrame:
     # next to the corpus.  Now the small-star emit is one per-row
     # explode (single subtree), and dedup + convergence fuse into one
     # groupBy whose materializing action also fills the convergence
-    # Observation.  Lineage cuts: durable
-    # deployments keep the reliable checkpoint every SECOND round
-    # (executor loss recomputes at most two star rounds); locally the
-    # per-round persist is the lineage anchor (blocks live in the one
-    # process whose loss ends the job anyway).
-    round_no = 0
-    to_release: list[DataFrame] = []
+    # Observation.
     while True:
         # Large-star: over the symmetric neighborhood N(x), hang every
         # neighbor y > x off m(x) = min(N(x) ∪ {x}).  One window over
@@ -1294,35 +1240,19 @@ def connected_components(pairs: DataFrame) -> DataFrame:
         # measured 2.1→3.8 s/round on a 256-edge set, vs ~0.55 s
         # steady-state once every round reads a constant-depth
         # LogicalRDD and hits the codegen cache (round 1 pays the one
-        # compile).  Locally that cut is ``localCheckpoint``; durable
-        # deployments persist + reliable-checkpoint every SECOND round
-        # (the executor-loss recompute window stays two star rounds).
-        # The convergence count rides on that same action through an
-        # Observation: no separate aggregate job per round.
+        # compile).  The convergence count rides on that same action
+        # through an Observation: no separate aggregate job per round.
         seen = Observation()
         grouped = grouped.observe(
             seen, F.sum((F.col("mn") == F.col("mx")).cast("int")).alias("d")
         )
-        if durable:
-            grouped = grouped.persist(StorageLevel.MEMORY_AND_DISK)
-            grouped.count()
-            to_release.append(grouped)
-        else:
-            grouped = grouped.localCheckpoint(eager=True)
+        grouped = cut(grouped)
         changed = seen.get["d"]
-        small = grouped.filter(F.col("mx") == 1).select("u", "v")
-        round_no += 1
-        if durable and round_no % 2 == 0:
-            small = _cut(small)
-        edges = small
+        edges = grouped.filter(F.col("mx") == 1).select("u", "v")
         if not changed:
             break
-    for df in to_release[:-1]:
-        df.unpersist()  # durable mode: ancestors of the fixpoint frame
-    # Durable mode keeps the last grouped frame cached (it backs the
-    # fixpoint edge set the caller reads; harness clearCache owns its
-    # release).  Local mode anchors rounds in localCheckpoint blocks,
-    # which the ContextCleaner drains once the frames are collected.
+    # Cut blocks (or checkpoint files) of earlier rounds are freed by
+    # the ContextCleaner once their frames are collected.
     # At the fixpoint the edge set is a star per component (u → root).
     return edges.select(u.alias("id"), v.alias("comp")).unionAll(
         edges.select(v.alias("id"), v.alias("comp")).distinct()
@@ -1382,7 +1312,7 @@ def kmeans_quantized(
     model-sized (k×d) driver collect, MLlib KMeans' own shape.  Empty
     clusters keep their previous centroid.  ``iters`` is small and
     fixed, so the lineage stays shallow; a long-running trainer would
-    localCheckpoint per round like connected_components.
+    cut lineage per round like connected_components.
     """
     # Fan-out parallelism guard (same as the deployment-IVFPQ stack):
     # every round's scoring is a map-side pass over THIS frame, so a

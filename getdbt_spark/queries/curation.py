@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 
 from .. import functions as E
 from .. import pipeline as P
+from ..session import lineage_cut
 from .pipeline_queries import (
     _docs,
     _emb_exact_pairs,
@@ -1078,10 +1079,10 @@ def _bpe_round_sql(n: int) -> str:
 # recomputation — three consumers (bpe_encode, bpe_merge_table,
 # pack_bpe_budget) retraining independently triples the most expensive
 # chain in the curation family (VERDICT r9 #4).  The memoized frame is
-# localCheckpointed, so it stays valid exactly as long as the owning
-# SparkSession — which is what the applicationId key scopes; a fresh
-# session (new app id) retrains, and distinct corpora (sf_dir) never
-# share an entry.
+# a lineage cut (session.lineage_cut), so it stays valid exactly as
+# long as the owning SparkSession — which is what the applicationId
+# key scopes; a fresh session (new app id) retrains, and distinct
+# corpora (sf_dir) never share an entry.
 _BPE_TRAINED: dict = {}
 # Number of ACTUAL training executions (memo misses) — lets tests
 # assert the once-per-(session, corpus) contract directly.
@@ -1092,7 +1093,7 @@ def _bpe_train_apply(spark, sf_dir):
     """Shared BPE training+apply chain: iterate BPE_MERGES rounds of
     (recount adjacent pairs -> collect the argmax rule as a 1-row
     scalar anchor -> greedy-leftmost merge via run-parity windows),
-    localCheckpoint per round.  Returns the final (doc_id, pos, tok)
+    one lineage cut per round.  Returns the final (doc_id, pos, tok)
     rows AND the learned rule list [(rank, t1, t2, n_occurrences)] —
     ``bpe_encode`` formats the rows, ``bpe_merge_table`` the rules, so
     the two registered views of the trainer can never drift.  Trains
@@ -1113,6 +1114,7 @@ def _bpe_train_apply(spark, sf_dir):
     )
     rows = d.select("doc_id", F.posexplode(bp).alias("pos", "tok"))
 
+    cut = lineage_cut(spark)
     wo = Window.partitionBy("doc_id").orderBy("pos")
     wrun = wo.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     rules = []
@@ -1160,9 +1162,8 @@ def _bpe_train_apply(spark, sf_dir):
             "consumed",
             F.coalesce(F.lag("mstart").over(wo), F.lit(False)),
         )
-        rows = (
-            l5.filter(~F.col("consumed"))
-            .select(
+        rows = cut(
+            l5.filter(~F.col("consumed")).select(
                 "doc_id",
                 "pos",
                 F.when(
@@ -1171,7 +1172,6 @@ def _bpe_train_apply(spark, sf_dir):
                 .otherwise(F.col("tok"))
                 .alias("tok"),
             )
-            .localCheckpoint()
         )
     _BPE_TRAINED[memo_key] = (rows, rules)
     return rows, rules
@@ -1223,7 +1223,7 @@ def bpe_encode(spark, sf_dir):
     1-row scalar anchor — the merge rule enters the plan as a LITERAL
     — and (b) one window pass partitioned by doc_id (the natural,
     never-hot key; the exchange is reused across rounds, with a
-    localCheckpoint per round keeping lineage flat like
+    lineage cut per round keeping lineage flat like
     connected_components).  No global windows, no joins, k is small
     and fixed.  Token ids are portable 60-bit md5 — no vocabulary
     table, no data-sized global rank.
@@ -1759,16 +1759,19 @@ def _cluster_verdict(spark, sf_dir, nprobe: int, assign=None):
     assignment (``dedup_cluster_recall`` persists one per variant for
     its own numerators) pass it in — one kmeans run instead of two,
     and the caller owns the frame's lifecycle.  When the verdict
-    builds its own, it uses ``localCheckpoint()`` rather than
-    ``persist()``: checkpoint blocks are RDD-backed and reclaimed by
-    the ContextCleaner once unreferenced, while a cached plan lives in
-    the CacheManager for the session — three verdict invocations per
-    recall run were leaking three assignment caches (ADVICE r11)."""
+    builds its own, it uses a lineage cut (``session.lineage_cut``)
+    rather than ``persist()``: checkpoint blocks are RDD-backed and
+    reclaimed by the ContextCleaner once unreferenced, while a cached
+    plan lives in the CacheManager for the session — three verdict
+    invocations per recall run were leaking three assignment caches
+    (ADVICE r11)."""
     e = P.with_norm(_embs(spark, sf_dir))
     if assign is None:
-        assign = P.kmeans_probe_assign(
-            e, k=8, iters=2, nprobe=nprobe
-        ).select("vec_id", "cent_id").localCheckpoint()
+        assign = lineage_cut(spark)(
+            P.kmeans_probe_assign(e, k=8, iters=2, nprobe=nprobe).select(
+                "vec_id", "cent_id"
+            )
+        )
     pairs = _probe_cell_pairs(e, assign)
     comp = P.connected_components(pairs)
     base = assign.select("vec_id").distinct()
@@ -1919,10 +1922,10 @@ def dedup_cluster_recall(spark, sf_dir):
     """
     from pyspark.sql import types as T
 
-    xp = _emb_exact_pairs(spark, sf_dir).select("a_id", "b_id")
-    xp = xp.localCheckpoint()
+    cut = lineage_cut(spark)
+    xp = cut(_emb_exact_pairs(spark, sf_dir).select("a_id", "b_id"))
     e = P.with_norm(_embs(spark, sf_dir))
-    ex = dedup_embedding_cluster(spark, sf_dir).localCheckpoint()
+    ex = cut(dedup_embedding_cluster(spark, sf_dir))
 
     def co_pairs(verdict):
         a = verdict.select(F.col("vec_id").alias("a_id"), "canonical_id")
@@ -1934,7 +1937,7 @@ def dedup_cluster_recall(spark, sf_dir):
         )
 
     n_exact_pairs = xp.count()
-    xcp = co_pairs(ex).localCheckpoint()
+    xcp = cut(co_pairs(ex))
     n_exact_copairs = xcp.count()
 
     rows = []
@@ -1955,13 +1958,13 @@ def dedup_cluster_recall(spark, sf_dir):
         assign = P.kmeans_probe_assign(
             e, k=8, iters=2, nprobe=nprobe
         ).select("vec_id", "cent_id").persist()
-        vp = _probe_cell_pairs(e, assign).localCheckpoint()
+        vp = cut(_probe_cell_pairs(e, assign))
         verdict = (
             verdict_q(spark, sf_dir, assign)
             if nprobe > 1
             else verdict_q(spark, sf_dir)
         )
-        vc = co_pairs(verdict).localCheckpoint()
+        vc = cut(co_pairs(verdict))
         rows.append(
             (
                 variant,

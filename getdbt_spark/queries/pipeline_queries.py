@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from .. import functions as E
 from .. import pipeline as P
 from ..io import load_table, scalar_anchor
+from ..session import lineage_cut
 from . import query
 
 
@@ -217,9 +218,9 @@ def dedup_cluster_canonical(spark, sf_dir):
     ngram_jaccard_pairs), then alternating large-star/small-star rounds
     — one window pass per half-round over the edge set, O(log n)
     convergence on any graph shape (pipeline.connected_components).
-    Each round is one action: an eager localCheckpoint locally, and on
-    a durable deployment a persisted count with a reliable
-    checkpoint() every second round.  The oracle is a recursive-CTE transitive
+    Each round is one action, an eager lineage cut (session.
+    lineage_cut: localCheckpoint, or a reliable checkpoint where the
+    deployment set a checkpoint dir).  The oracle is a recursive-CTE transitive
     closure — exact, and exponential-ish in DuckDB, which is fine at
     oracle scale and exactly the plan shape Spark must NOT use.
     """
@@ -402,12 +403,12 @@ def sim_ann_ivf(spark, sf_dir):
     # lineage-cut (lazy): both replicated sides of the bucketed block
     # search consume it, and a joined frame feeding both sides of a
     # cogroup needs the cut to pass the ambiguous-self-join check (see
-    # pipeline.lineage_cut_lazy).  The in-bucket search is the shared
+    # session.lineage_cut).  The in-bucket search is the shared
     # block-matmul kernel (pipeline.topk_cosine_blocked per bucket):
     # one dense numpy product per (bucket, chunk, shard) block instead
     # of a Σ|cell|² pair self-join scored by the interpreted zip_with
     # cosine fold.
-    ea = P.lineage_cut_lazy(P.assign_nearest_cosine(e, cent))
+    ea = lineage_cut(spark)(P.assign_nearest_cosine(e, cent), eager=False)
     return P.topk_cosine_blocked(ea, k=5, bucket="cent_id")
 
 
@@ -2800,7 +2801,7 @@ def sim_ann_ivf_trained(spark, sf_dir):
     assign = P.kmeans_quantized(e, k=8, iters=2).select(
         "vec_id", F.col("cluster").alias("cent_id")
     )
-    ea = P.lineage_cut_lazy(e.join(assign, "vec_id"))
+    ea = lineage_cut(spark)(e.join(assign, "vec_id"), eager=False)
     return P.topk_cosine_blocked(ea, k=5, bucket="cent_id")
 
 

@@ -74,6 +74,7 @@ from pyspark.sql import functions as F
 
 from .. import functions as E
 from .. import pipeline as P
+from ..session import lineage_cut
 from . import ORACLES, query
 from .pipeline_queries import (
     _COSINE_ORACLE_CORE,
@@ -255,11 +256,10 @@ def sim_recall_multiprobe(spark, sf_dir):
     """
     from .pipeline_queries import sim_ann_ivf_trained
 
-    exact5 = (
+    exact5 = lineage_cut(spark)(
         sim_topk_cosine(spark, sf_dir)
         .filter(F.col("rnk") <= 5)
         .select("vec_id", "neighbor_id")
-        .localCheckpoint()
     )
     e = _embs(spark, sf_dir)
     n_queries = e.select("vec_id").distinct().count()
@@ -1373,7 +1373,7 @@ NB_TOP_K = 50   # merge-table-style trained artifact: top discriminators
 # Trained-artifact memo: {(applicationId, sf_dir): (frame, P, N)} — the
 # fastText/CCNet-style quality filter is trained ONCE per (session,
 # corpus) and every consumer (the trainer view, the scorer) reuses the
-# same localCheckpointed log-odds frame, the ``_BPE_TRAINED`` pattern
+# same lineage-cut log-odds frame, the ``_BPE_TRAINED`` pattern
 # (VERDICT r9 #4: a trained artifact is not a per-query recomputation).
 _NB_TRAINED: dict = {}
 _NB_TRAIN_RUNS = 0  # memo misses, observable by tests
@@ -1419,7 +1419,7 @@ def _nb_llr_frame(spark, sf_dir):
     per-token Laplace log-likelihood ratio
     ln((pos_df+1)/(P+2)) − ln((neg_df+1)/(N+2)) quantized to integer
     micro-nats (the ``dsir_importance_weights`` technique, same 1-ULP
-    ``ln`` caveat).  Returns (localCheckpointed frame, P, N).
+    ``ln`` caveat).  Returns (lineage-cut frame, P, N).
 
     Scale: one explode (map-side), one map-combinable groupBy(token);
     the class totals are 1-row scalar anchors; nothing all-pairs and
@@ -1462,9 +1462,9 @@ def _nb_llr_frame(spark, sf_dir):
     ) - F.log(
         (F.col("neg_df") + 1).cast("double") / F.lit(float(n_cnt + 2))
     )
-    frame = pt.withColumn(
-        "llr_micro", F.floor(llr * 1000000).cast("long")
-    ).localCheckpoint()
+    frame = lineage_cut(spark)(
+        pt.withColumn("llr_micro", F.floor(llr * 1000000).cast("long"))
+    )
     _NB_TRAINED[memo_key] = (frame, p_cnt, n_cnt)
     return frame, p_cnt, n_cnt
 
@@ -2475,10 +2475,8 @@ def sim_recall_ivfpq(spark, sf_dir):
     from .pipeline_queries import sim_topk_cosine
 
     exact = sim_topk_cosine(spark, sf_dir)
-    exact5 = (
-        exact.filter(F.col("rnk") <= 5)
-        .select("vec_id", "neighbor_id")
-        .localCheckpoint()
+    exact5 = lineage_cut(spark)(
+        exact.filter(F.col("rnk") <= 5).select("vec_id", "neighbor_id")
     )
     n_queries = exact.select("vec_id").distinct().count()
     n_hits = (
@@ -2666,11 +2664,10 @@ def _recall_report(spark, ce, with_demo_ivfpq: bool):
     ``tests/test_training_ops.py``), each hits@5 against the exact
     brute-force top-5 of the SAME corpus.  The only driver traffic is
     the bounded per-variant hit counts."""
-    exact5 = (
+    exact5 = lineage_cut(spark)(
         P.topk_cosine_blocked(ce, k=10)
         .filter(F.col("rnk") <= 5)
         .select("vec_id", "neighbor_id")
-        .localCheckpoint()
     )
     n_queries = exact5.select("vec_id").distinct().count()
     ep = _ivf_probe_frame(ce)
@@ -3073,7 +3070,8 @@ def doc_pagerank_winnow(spark, sf_dir):
     ).unionByName(
         wm.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
     )
-    edges = edges.localCheckpoint()  # reused by both iterations
+    cut = lineage_cut(spark)
+    edges = cut(edges)  # reused by both iterations
     deg = edges.groupBy("src").agg(F.count("*").cast("long").alias("deg"))
     docs = _docs(spark, sf_dir).select("doc_id")
 
@@ -3105,7 +3103,7 @@ def doc_pagerank_winnow(spark, sf_dir):
         )
 
     pr0 = docs.select("doc_id", F.lit(PR_BASE).alias("pr"))
-    pr1 = _iterate(pr0).localCheckpoint()
+    pr1 = cut(_iterate(pr0))
     pr2 = _iterate(pr1)
     return (
         docs.join(
@@ -3225,7 +3223,8 @@ def emb_pca_power_iteration(spark, sf_dir):
     generically non-orthogonal to the top eigenvector.
     """
     dec = "decimal(38,0)"
-    q = (
+    cut = lineage_cut(spark)
+    q = cut(
         _embs(spark, sf_dir)
         .filter(P.finite_vec("embedding"))
         .select(
@@ -3235,7 +3234,6 @@ def emb_pca_power_iteration(spark, sf_dir):
                 lambda x: F.floor(x.cast("double") * 1e6).cast("long"),
             ).alias("qv"),
         )
-        .localCheckpoint()
     )
     mu = (
         q.select(F.posexplode("qv").alias("i", "v"))
@@ -3251,10 +3249,12 @@ def emb_pca_power_iteration(spark, sf_dir):
     for r in mu:
         means[r["i"]] = int(r["mean_q"])
     mean_lit = F.array(*[F.lit(m) for m in means])
-    cell = q.select(
-        "vec_id",
-        F.zip_with("qv", mean_lit, lambda a, b: a - b).alias("x"),
-    ).localCheckpoint()
+    cell = cut(
+        q.select(
+            "vec_id",
+            F.zip_with("qv", mean_lit, lambda a, b: a - b).alias("x"),
+        )
+    )
 
     v = [1_000_000] * PCA_DIMS
     for _ in range(PCA_ROUNDS):

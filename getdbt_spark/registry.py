@@ -36,11 +36,15 @@ from pyspark.sql import DataFrame, SparkSession
 @dataclass(frozen=True)
 class ModelConfig:
     """Per-model materialization config (→ dbt ``config()`` +
-    ``dbt_project.yml`` folder routing)."""
+    ``dbt_project.yml`` folder routing).
+
+    ``materialized="incremental"`` always means the reference's
+    ``insert_overwrite`` strategy (``Runner._insert_overwrite``: a
+    dynamic overwrite of the partitions the run wrote), so there is no
+    strategy field; ``merge`` is the separate ``runner.merge_upsert``."""
 
     schema: str = "default"
     materialized: str = "view"  # "view" | "incremental"
-    incremental_strategy: str | None = None  # "insert_overwrite"
     partition_by: str | None = None
     replay_days: int = 9  # trailing partitions replaced per run
 
@@ -93,7 +97,6 @@ def model(
     sources: Sequence[tuple[str, str]] = (),
     schema: str = "default",
     materialized: str = "view",
-    incremental_strategy: str | None = None,
     partition_by: str | None = None,
     replay_days: int = 9,
     dq_tests: Sequence[DQTest] = (),
@@ -119,7 +122,6 @@ def model(
             config=ModelConfig(
                 schema=schema,
                 materialized=materialized,
-                incremental_strategy=incremental_strategy,
                 partition_by=partition_by,
                 replay_days=replay_days,
             ),
@@ -139,7 +141,6 @@ class ModelContext:
     _sources: dict[tuple[str, str], DataFrame]
     _resolved: dict[str, DataFrame]
     _model: Model
-    replay_days: int = 9
 
     def ref(self, name: str) -> DataFrame:
         """``{{ ref('name') }}`` — resolve an upstream model (declared only)."""
@@ -174,7 +175,7 @@ class ModelContext:
         (``streams_daily_v4.sql:1-12``). Builders use these as literal
         predicates so Parquet partition pruning fires at scan time.
         """
-        n = self.replay_days
+        n = self._model.config.replay_days
         return [self.run_date - dt.timedelta(days=i) for i in range(n)]
 
 

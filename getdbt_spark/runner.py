@@ -32,13 +32,14 @@ import datetime as dt
 import os
 import shutil
 import urllib.parse
-from collections.abc import Iterable, Mapping
+from collections.abc import Callable, Iterable, Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .io import read_parquet_like
 from .registry import MODELS, Model, ModelContext, topo_sort
+from .session import lineage_cut
 
 
 class Runner:
@@ -79,7 +80,6 @@ class Runner:
             _sources=self.sources,
             _resolved=resolved,
             _model=m,
-            replay_days=m.config.replay_days,
         )
         return m.builder(ctx)
 
@@ -101,14 +101,17 @@ class Runner:
         references the vod mart twice and the tv mart three times; the
         vod mart itself reads the streams model three times):
 
-        - ``"checkpoint"`` (default) — eager ``localCheckpoint`` of
-          every intermediate: computes each shared subtree once AND
+        - ``"checkpoint"`` (default) — an eager lineage cut of every
+          intermediate (``session.lineage_cut``: ``localCheckpoint``,
+          or a reliable checkpoint when the deployment set a
+          checkpoint dir): computes each shared subtree once AND
           cuts lineage, so Catalyst stops re-analyzing the huge
           inlined upstream plans (analysis time dominates small-data
           DAG runs).  One job per intermediate; ContextCleaner frees
-          the blocks once the returned frames are garbage-collected,
-          so no caller-side cleanup exists.  Materialization is
-          dependency-driven (see ``_run_pipelined``).
+          the blocks (or checkpoint files) once the returned frames
+          are garbage-collected, so no caller-side cleanup exists.
+          Materialization is dependency-driven (see
+          ``_run_pipelined``).
         - ``None`` — pure build: raw unexecuted DataFrames, no job
           beyond a configured warehouse's incremental writes (plan
           inspection, backfill chunks, and the registry's ``model_*``
@@ -128,12 +131,14 @@ class Runner:
         if reuse not in ("checkpoint", None):
             raise ValueError(f"unknown reuse mode {reuse!r}")
         sel = None if select is None else set(select)
-        return self._run_pipelined(
-            topo_sort(select, self.registry), sel, reuse == "checkpoint"
-        )
+        cut = lineage_cut(self.spark) if reuse == "checkpoint" else None
+        return self._run_pipelined(topo_sort(select, self.registry), sel, cut)
 
     def _run_pipelined(
-        self, models: list[Model], sel: set[str] | None, cut: bool
+        self,
+        models: list[Model],
+        sel: set[str] | None,
+        cut: Callable[[DataFrame], DataFrame] | None,
     ) -> dict[str, DataFrame]:
         """Dependency-driven materialization: one future per model,
         blocking only on ITS refs — a model checkpoints the moment its
@@ -157,7 +162,7 @@ class Runner:
                 return self._insert_overwrite(m, df)
             if cut and sel is not None and m.name not in sel and m.refs:
                 # Source passthroughs (no refs) stay lazy: see run().
-                return df.localCheckpoint(eager=True)
+                return cut(df)
             return df
 
         with ThreadPoolExecutor(8 if cut else 1) as ex:

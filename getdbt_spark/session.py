@@ -8,6 +8,11 @@ defaults (AQE, skew-join handling, dynamic partition overwrite) are
 set here once so every entry point — tests, bench, driver — runs the
 same way a production cluster would.
 
+Every lineage cut in the package goes through :func:`lineage_cut`,
+whose policy follows the deployment's checkpoint dir: executor-local
+blocks when the SparkContext has none, reliable checkpoint files when
+it has one.  No env var or option switches it.
+
 ``get_spark`` boots the driver JVM from a class-data-sharing (CDS)
 archive: the JVM's saved image of already parsed and verified classes,
 which it maps at start instead of loading each class again (JDK 17
@@ -45,11 +50,12 @@ import os
 import shlex
 import shutil
 import subprocess
+from collections.abc import Callable
 from typing import NamedTuple
 
-from pyspark import SparkContext
+from pyspark import SparkContext, StorageLevel
 from pyspark.find_spark_home import _find_spark_home
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Package root: Python workers need it on their path to unpickle
 # kernels that live in this package (a tool run from outside the repo
@@ -156,65 +162,59 @@ def configure(spark: SparkSession) -> SparkSession:
     return spark
 
 
-def durable_checkpoints(spark: SparkSession) -> bool:
-    """Should iterative operators cut lineage with RELIABLE checkpoints?
+def lineage_cut(spark: SparkSession) -> Callable[..., DataFrame]:
+    """The engine's one lineage cut: ``cut(df, eager=True)``.
 
-    True only when the deployment configured a durable checkpoint dir
-    (HDFS/object store on a cluster) BEFORE calling in, or when
-    ``GETDBT_SPARK_RELIABLE_CKPT=1`` forces it (parity testing of the
-    cluster path).  On the single-host default the executors ARE the
-    driver process, so reliable checkpoint files buy zero fault
-    tolerance over ``localCheckpoint`` — they only add one extra job
-    (the file write) and a filesystem round-trip per lineage cut,
-    which at toy scale is pure fixed overhead (measured: the majority
-    of connected-components wall time at sf0.1).  The local default
-    dir set by :func:`ensure_checkpoint_dir` is recognisable by its
-    ``getdbt_spark_ckpt_`` name and does NOT count as durable.
+    A cut is this engine's materialization boundary (dbt writes every
+    model as a table): it computes a shared subtree once and truncates
+    the logical plan, so Catalyst stops re-analyzing inlined upstream
+    plans.  The policy follows the deployment and is read once per
+    call here:
+
+    - No checkpoint dir on the SparkContext (``sc.setCheckpointDir`` or
+      ``spark.checkpoint.dir``): ``df.localCheckpoint(eager=eager)``.
+      On a single host the executors ARE the driver process, so
+      reliable checkpoint files would add no fault tolerance, only a
+      second job and a file round trip per cut.
+    - A checkpoint dir is set (HDFS/object store on a cluster): a
+      RELIABLE checkpoint, whose files survive the executor loss that
+      ``localCheckpoint`` blocks do not.  Eager: persist at
+      ``MEMORY_AND_DISK``, ``checkpoint(eager=True)``, unpersist.  RDD
+      checkpointing runs a SECOND job over the lineage to write the
+      files; caching first turns that pass into a block read instead
+      of a full recompute (for connected components' initial edge set
+      that recompute was the whole pair-generation plan, measured 2×
+      the query).  The cache is dropped at once: later reads come from
+      the files, which ``get_spark``'s
+      ``spark.cleaner.referenceTracking.cleanCheckpoints`` deletes once
+      the frame is garbage-collected.  Lazy: ``checkpoint(eager=False)``.
+
+    ``eager=False`` materializes on the frame's FIRST action instead of
+    in a job of its own.  Use it where two consumers of one action
+    must share one materialization (``with_running_total``'s slice
+    totals and offset join; a frame containing a join that feeds both
+    sides of a ``cogroup``, where Spark 4.1's ambiguous-self-join
+    detector fails an un-cut plan at analysis): both read the same
+    RDD blocks, and one job launch is saved per call.
+
+    Deliberately not ``persist()``: cached plans are matched by
+    LOGICAL plan, so a second run over a source whose files changed
+    (incremental warehouse rewrites) could silently serve the first
+    run's data.  Checkpoints are RDD-backed and never plan-matched
+    (the reliable eager cut's cache lives only until its files exist).
     """
-    if os.environ.get("GETDBT_SPARK_RELIABLE_CKPT") == "1":
-        ensure_checkpoint_dir(spark)
-        return True
-    d = spark.sparkContext.getCheckpointDir()
-    return d is not None and "getdbt_spark_ckpt_" not in d
+    if spark.sparkContext.getCheckpointDir() is None:
+        return lambda df, eager=True: df.localCheckpoint(eager=eager)
 
+    def cut(df: DataFrame, eager: bool = True) -> DataFrame:
+        if not eager:
+            return df.checkpoint(eager=False)
+        cached = df.persist(StorageLevel.MEMORY_AND_DISK)
+        out = cached.checkpoint(eager=True)
+        cached.unpersist()
+        return out
 
-def ensure_checkpoint_dir(spark: SparkSession) -> None:
-    """Set a reliable-checkpoint dir if the deployment didn't.
-
-    Iterative operators (connected components) cut lineage with
-    ``df.checkpoint()`` — RELIABLE checkpoints, because
-    ``localCheckpoint`` stores blocks on executors and an executor
-    loss mid-iteration would force recomputing from nothing (round N
-    has no lineage back to the source).  On a cluster the conf should
-    point at durable storage (HDFS/object store); locally a per-
-    application temp dir is equivalent.  Idempotent.
-    """
-    import tempfile
-
-    sc = spark.sparkContext
-    if sc.getCheckpointDir() is None:
-        # Prefer RAM-backed tmpfs for the single-host default: the
-        # checkpoint write is pure durability bookkeeping locally, and
-        # disk-backed /tmp adds seconds of IO variance to iterative
-        # operators (connected components writes one edge set per two
-        # rounds).  A cluster deployment sets its own durable dir
-        # (HDFS/object store) BEFORE calling in, which this respects.
-        # tmpfs is often size-capped in containers (64 MB mounts are
-        # common), so only use it with >=2 GiB free; GETDBT_SPARK_CKPT_DIR
-        # overrides everything.
-        base = os.environ.get("GETDBT_SPARK_CKPT_DIR")
-        if base is None:
-            base = tempfile.gettempdir()
-            if os.path.isdir("/dev/shm"):
-                try:
-                    vfs = os.statvfs("/dev/shm")
-                    if vfs.f_bavail * vfs.f_frsize >= 2 << 30:
-                        base = "/dev/shm"
-                except OSError:
-                    pass
-        sc.setCheckpointDir(
-            os.path.join(base, f"getdbt_spark_ckpt_{sc.applicationId}")
-        )
+    return cut
 
 
 # Where ``get_spark`` keeps the driver's class-data archive (gitignored).
@@ -415,6 +415,9 @@ def get_spark(
             str(DF_DEBUGGING).lower(),
         )
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        # A deployment with a checkpoint dir cuts lineage with reliable
+        # checkpoints (lineage_cut); delete their files once unreferenced.
+        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)

@@ -563,13 +563,14 @@ def test_round_to_passes_nonfinite_and_huge_through(spark):
     assert got[8] == 9.5e16  # beyond 2^63/100: passthrough, not saturate
 
 
-def test_lazy_cut_concurrent_consumers_share_one_materialization(spark):
+def test_running_total_cut_concurrent_consumers_share_one_materialization(spark):
     """Two threads racing one slice-offset helper frame (a realistic
     multi-query cluster session) must read ONE materialization of the
     kernel output: identical results, no deadlock, and no job that
     re-derives the range-shuffle lineage (VERDICT r11 #8).
 
-    The probe: ``_lazy_cut``'s checkpoint materializes on the frame's
+    The probe: the helper's lazy lineage cut (``session.lineage_cut``
+    with ``eager=False``) materializes on the frame's
     first action, so one untimed build action runs first; every
     post-build job then reads checkpoint blocks and its stage DAG is
     truncated at the CheckpointRDD — a sequential post-build action

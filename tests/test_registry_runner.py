@@ -168,7 +168,6 @@ def _incremental_registry():
         ModelConfig(
             schema="marts",
             materialized="incremental",
-            incremental_strategy="insert_overwrite",
             partition_by="evt_date",
         ),
     )

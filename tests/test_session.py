@@ -6,10 +6,14 @@ shared session pins the confs themselves: ``RUNTIME_CONFS`` holds only
 runtime-settable confs, and the generated-code cache is large enough
 that a warm run reuses its compiled classes.  The class-data archive's
 launch options are unit-tested; its dump, load and damaged-archive
-boots each run in a fresh interpreter against a scratch archive dir."""
+boots each run in a fresh interpreter against a scratch archive dir.
+The reliable branch of ``lineage_cut`` runs in a fresh interpreter
+too (a checkpoint dir cannot be unset), and a source walk pins that
+``session.py`` alone makes lineage cuts."""
 
 from __future__ import annotations
 
+import ast
 import glob
 import os
 import shutil
@@ -339,3 +343,98 @@ def test_cds_truncated_archive_falls_back(cds_dir):
         assert not os.path.exists(archive)
     finally:
         os.replace(saved, archive)
+
+
+# Runs query ids on a session whose SparkContext has a checkpoint dir
+# (argv[1]), so every lineage cut takes the reliable branch, and prints
+# per id whether it matched its oracle and how many new ``rdd-*``
+# checkpoint directories appeared under that dir.
+DURABLE_RUN = (
+    "import glob, os, sys\n"
+    "sys.path.insert(0, os.path.join(sys.argv[2], 'tools'))\n"
+    "import verify_local as V\n"
+    "from getdbt_spark.queries import ORACLES, load_all, run_query\n"
+    "from getdbt_spark.session import get_spark\n"
+    "load_all()\n"
+    "spark = get_spark()\n"
+    "sc = spark.sparkContext\n"
+    "sc.setCheckpointDir(sys.argv[1])\n"
+    "print('clean', sc.getConf().get("
+    "'spark.cleaner.referenceTracking.cleanCheckpoints'))\n"
+    "con = V.duck_con(sys.argv[3])\n"
+    "seen = set()\n"
+    "for qid in sys.argv[4:]:\n"
+    "    ok, _, _ = V.compare(qid, run_query(spark, sys.argv[3], qid), con,\n"
+    "                         ORACLES[qid], verbose=False)\n"
+    "    now = {os.path.basename(p) for p in\n"
+    "           glob.glob(os.path.join(sys.argv[1], '*', 'rdd-*'))}\n"
+    "    print('durable', qid, ok, len(now - seen), flush=True)\n"
+    "    seen |= now\n"
+    "spark.stop()\n"
+)
+
+
+def _durable_run(tmp_path, qids):
+    ckpt = tmp_path / "ckpt"
+    env = _env_without_repo()
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in (REPO, env.get("PYTHONPATH")) if p
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", DURABLE_RUN, str(ckpt), REPO, SF, *qids],
+        cwd=tmp_path,
+        capture_output=True,
+        text=True,
+        timeout=600,
+        env=env,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    lines = proc.stdout.splitlines()
+    assert "clean true" in lines, proc.stdout[-2000:]
+    got = {
+        ln.split()[1]: ln.split()[2:] for ln in lines if ln.startswith("durable")
+    }
+    assert sorted(got) == sorted(qids), proc.stdout[-2000:]
+    for qid, (ok, new_dirs) in got.items():
+        assert ok == "True", (qid, proc.stdout[-2000:])
+        assert int(new_dirs) > 0, (qid, proc.stdout[-2000:])
+
+
+def test_durable_cuts_match_the_oracles(tmp_path):
+    """With a checkpoint dir on the SparkContext every lineage cut is a
+    reliable checkpoint.  A subprocess, because a checkpoint dir cannot
+    be unset on the shared session.  The ids cover the eager per-round
+    cut (connected components), the lazy cut feeding both sides of a
+    cogroup (IVF) and ``with_running_total``'s lazy cut (packing); each
+    must match its oracle and write checkpoint files of its own."""
+    _durable_run(
+        tmp_path, ["dedup_cluster_canonical", "sim_ann_ivf", "pack_token_budget"]
+    )
+
+
+@pytest.mark.slow
+def test_durable_runner_cuts_match_the_oracle(tmp_path):
+    """The Runner's per-model cuts on the durable branch: the dashboard
+    built the production way matches its oracle."""
+    _durable_run(tmp_path, ["model_dashboard_channel_weekly"])
+
+
+def test_session_owns_every_lineage_cut():
+    """Only ``session.py`` calls ``localCheckpoint`` or ``checkpoint``;
+    every other module cuts lineage through ``session.lineage_cut``, so
+    the cut follows one policy.  Calls only: docstrings, comments and
+    streaming's ``checkpointLocation`` option do not count."""
+    pkg = os.path.join(REPO, "getdbt_spark")
+    calls = {}
+    for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
+        with open(path) as f:
+            tree = ast.parse(f.read(), path)
+        calls[os.path.relpath(path, pkg)] = [
+            node.lineno
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in ("localCheckpoint", "checkpoint")
+        ]
+    assert calls.pop("session.py")  # the walk does see the owner's cuts
+    assert {p: ls for p, ls in calls.items() if ls} == {}
